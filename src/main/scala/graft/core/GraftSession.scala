@@ -323,7 +323,7 @@ class GraftSession(val spark: SparkSession,
         // (see ownedQueries — handle queries live on isolated session
         // clones, invisible to this session's spark.streams)
         val mine = ownedQueries.values.filter(_._1())
-        mine.foreach(h => try h._2() catch { case _: Throwable => () })
+        mine.foreach(h => try h._2() catch { case scala.util.control.NonFatal(_) => () })
         ownedQueries.clear() // stopped or already dead — drop the ids
         s"ok: stopped ${mine.size} streaming queries"
       case Some(AlterSystem(_)) => "ok: instance already started"

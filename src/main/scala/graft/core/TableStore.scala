@@ -4,7 +4,7 @@ import java.util.UUID
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, IntegerType, LongType, MapType, ShortType, StructType}
 import graft.cep.{EventProcessor, Process}
 import graft.ops.Profile
 
@@ -15,7 +15,13 @@ import graft.ops.Profile
   *
   * Layout:
   *   <path>/files/<uuid>-part-*.parquet   immutable data files
-  *   <path>/_versions/v{N}.manifest       "name<TAB>idMin<TAB>idMax<TAB>rowCount" per file
+  *   <path>/_versions/v{N}.manifest       one self-contained version (VersionLog):
+  *                                        "name<TAB>idMin<TAB>idMax<TAB>rowCount" per
+  *                                        file, then #txn, #colstats and #schema lines
+  *   <path>/_versions/v{N}.claim          exclusive commit claim for version N
+  *   <path>/streamed/                     commit-time links of files/ for stream readers
+  *   <path>/_schema/                      zero-row parquet schema anchor
+  *   <path>/_pending_revert               journaled rollback target, if any
   *
   * A version is committed by renaming a temp manifest into place —
   * one atomic filesystem op, so there is NO window where a reader sees
@@ -54,21 +60,15 @@ object TableStore {
   private[core] val staleClaimMs: Long = 60000L
 }
 
-final class TableStore(val spark: SparkSession, val path: String, val idCol: String,
-                       format: LogFormat = NativeManifestLog) {
+final class TableStore(val spark: SparkSession, val path: String, val idCol: String) {
   private val filesDir = s"$path/files"
   // commit-time mirror of files/ for streaming readers — see readStream
   private val streamedDir = s"$path/streamed"
-  /** A table's on-disk log format is fixed at creation: reopening an
-    * existing table resolves whatever log directory is already there;
-    * the constructor's `format` applies only to fresh tables. */
-  private val log: LogFormat = LogFormat.detect(fs, path).getOrElse(format)
-  private val versionsDir = s"$path/${log.dirName}"
-  /** Schema JSON of the last written/initialized rows — recorded so the
-    * Delta-style log can embed a real schemaString in its metaData
-    * action (None before any write on a reopened table: the format
-    * emits a placeholder). */
-  @volatile private var lastSchemaJson: Option[String] = None
+  private val versionsDir = s"$path/${VersionLog.dirName}"
+  /** Schema of the last written/initialized rows, recorded at this
+    * store's next commit (None before any write on a reopened table:
+    * the commit carries the previous version's schema forward). */
+  @volatile private var lastSchema: Option[StructType] = None
 
   private def fs: FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -126,47 +126,29 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
     if (!f.exists(dir)) Seq.empty
     else f.listStatus(dir).toSeq
       .map(_.getPath)
-      .flatMap(p => log.versionOf(p.getName).map(v => (v, p)))
+      .flatMap(p => VersionLog.versionOf(p.getName).map(v => (v, p)))
       .sortBy(_._1)
   }
 
-  private def latestContent(f: FileSystem): Option[(Long, String)] =
-    listVersions(f).lastOption.map { case (v, p) => (v, readUtf8(f, p)) }
+  /** The latest committed version, decoded once — every operation
+    * resolves its snapshot through here exactly one time. */
+  private def latest(f: FileSystem = fs): Option[(Long, Snapshot)] =
+    listVersions(f).lastOption.map { case (v, p) => (v, VersionLog.decode(readUtf8(f, p))) }
 
-  private def latestManifest(f: FileSystem): Option[(Long, Seq[FileEntry])] =
-    latestContent(f).map { case (v, c) => (v, log.decode(c)) }
+  /** The latest snapshot; empty when no version is committed. */
+  private def current: Snapshot = latest().fold(Snapshot.empty)(_._2)
 
-  /** The committed table schema of the latest version (recorded in the
-    * version log since the schema-enforcement change; None on legacy
-    * tables, which keep the old read path). */
-  private def committedSchema: Option[org.apache.spark.sql.types.StructType] =
-    latestContent(fs).flatMap(c => log.decodeSchema(c._2))
-      .map(j => org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
-
-  def exists: Boolean = latestManifest(fs).isDefined
-
-  /** Committed row count resolved from manifest METADATA — O(1), no
-    * Spark job (manifests carry per-file rowCounts). None when the
-    * table doesn't exist or a legacy pre-rowCount manifest entry makes
-    * the metadata count unknown (callers fall back to a probe job).
-    * Lets hot per-batch paths (the dedup indexes' emptiness and
-    * saturation checks) skip whole Spark jobs: on a long sequential
-    * chain of small actions, every removed action is wall time. */
-  def committedRowCount: Option[Long] =
-    latestManifest(fs).flatMap { case (_, entries) =>
-      val counts = entries.map(_.rows)
-      if (counts.forall(_.isDefined)) Some(counts.flatten.sum) else None
-    }
+  def exists: Boolean = listVersions(fs).nonEmpty
 
   /** Row count AND snapshot DataFrame from ONE manifest resolution —
     * `None` when no version is committed; the inner count is `None` on
     * legacy stat-less manifests (callers fall back to a probe job over
     * the returned frame). Callers that need both MUST use this instead
-    * of `committedRowCount` + `read`: those resolve the manifest twice,
-    * and a commit landing between the two calls pairs a stale count
-    * with a newer snapshot (the dedup indexes' O(1) saturation-skip
-    * would then judge a larger index by a smaller count). */
+    * of `rowCountFromManifest` + `read`: those resolve the manifest
+    * twice, and a commit landing between the two calls pairs a stale
+    * count with a newer snapshot (the dedup indexes' O(1)
+    * saturation-skip would then judge a larger index by a smaller
+    * count). */
   def committedSnapshot: Option[(Option[Long], DataFrame)] =
     committedSnapshotVersioned.map { case (_, n, df) => (n, df) }
 
@@ -176,15 +158,7 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
     * content never changes, so a fact computed against (path, version)
     * holds for every later read of that version. */
   def committedSnapshotVersioned: Option[(Long, Option[Long], DataFrame)] =
-    latestContent(fs).map { case (v, c) =>
-      val entries = log.decode(c)
-      val counts = entries.map(_.rows)
-      val n = if (counts.forall(_.isDefined)) Some(counts.flatten.sum) else None
-      val schema = log.decodeSchema(c).map(j =>
-        org.apache.spark.sql.types.DataType.fromJson(j)
-          .asInstanceOf[org.apache.spark.sql.types.StructType])
-      (v, n, readFiles(entries, schema))
-    }
+    latest().map { case (v, s) => (v, s.rowCount, readAll(s)) }
 
   private val schemaDir = s"$path/_schema"
 
@@ -192,9 +166,9 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
     * work before the first persist (the reference's registerTable
     * creates the table eagerly — persistent/Session.java:181-277).
     * No-op if a version already exists. */
-  def initialize(schema: org.apache.spark.sql.types.StructType): Unit =
+  def initialize(schema: StructType): Unit =
     TableStore.commitLock(path).synchronized {
-      lastSchemaJson = Some(schema.json)
+      lastSchema = Some(schema)
       // backfill the anchor for pre-anchor tables too, not only fresh
       // ones — an already-populated table still needs it once every
       // row is deleted and vacuum empties files/
@@ -207,8 +181,7 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
   /** Read `entries` under `schema` when one is committed: parquet
     * scans given an explicit schema surface columns a file predates
     * as nulls — additive evolution needs NO rewrite of old files. */
-  private def readFiles(entries: Seq[FileEntry],
-                        schema: Option[org.apache.spark.sql.types.StructType] = None)
+  private def readFiles(entries: Seq[FileEntry], schema: Option[StructType] = None)
       : DataFrame = {
     val reader = schema.fold(spark.read)(s => spark.read.schema(s))
     if (entries.nonEmpty) reader.parquet(entries.map(e => s"$filesDir/${e.name}"): _*)
@@ -221,18 +194,15 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
     else reader.parquet(filesDir).limit(0)
   }
 
+  /** A whole snapshot under its committed schema. */
+  private def readAll(s: Snapshot): DataFrame = readFiles(s.entries, s.schema)
+
+  private def noVersion =
+    new IllegalStateException(s"table store at $path has no committed version")
+
   /** Current snapshot. The file list is resolved now; concurrent
     * commits do not disturb this DataFrame. */
-  def read: DataFrame = {
-    latestContent(fs) match {
-      case Some((_, c)) =>
-        readFiles(log.decode(c), log.decodeSchema(c).map(j =>
-          org.apache.spark.sql.types.DataType.fromJson(j)
-            .asInstanceOf[org.apache.spark.sql.types.StructType]))
-      case None =>
-        throw new IllegalStateException(s"table store at $path has no committed version")
-    }
-  }
+  def read: DataFrame = readAll(latest().getOrElse(throw noVersion)._2)
 
   /** Streaming scan of the store: backlog (files already committed)
     * then tail (each append's new files arrive as a micro-batch) —
@@ -277,18 +247,20 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
     * handing out the source (see CHECKPOINT COMPATIBILITY above). */
   def readStream(checkpointLocation: Option[String]): DataFrame = {
     checkpointLocation.foreach(validateStreamCheckpoint)
-    val schema = committedSchema.getOrElse(read.schema)
     val f = fs
-    f.mkdirs(new Path(filesDir)) // a fresh store streams an empty backlog
-    f.mkdirs(new Path(streamedDir))
-    // generation marker: names the layout this source reads (pre-r9
-    // checkpoints recorded files/ paths). pathGlobFilter keeps it out
-    // of the data stream.
-    val marker = new Path(s"$streamedDir/_source_v2")
-    if (!f.exists(marker)) f.create(marker, true).close()
-    TableStore.commitLock(path).synchronized {
-      reconcileStreamed(f, currentEntries)
+    val snap = TableStore.commitLock(path).synchronized {
+      val s = latest(f).getOrElse(throw noVersion)._2
+      f.mkdirs(new Path(filesDir)) // a fresh store streams an empty backlog
+      f.mkdirs(new Path(streamedDir))
+      // generation marker: names the layout this source reads (pre-r9
+      // checkpoints recorded files/ paths). pathGlobFilter keeps it out
+      // of the data stream.
+      val marker = new Path(s"$streamedDir/_source_v2")
+      if (!f.exists(marker)) f.create(marker, true).close()
+      reconcileStreamed(f, s.entries)
+      s
     }
+    val schema = snap.schema.getOrElse(readFiles(snap.entries).schema)
     spark.readStream.schema(schema)
       .option("pathGlobFilter", "*.parquet")
       .parquet(streamedDir)
@@ -331,23 +303,27 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
   }
 
   /** Mirror every committed file into streamed/ (no-op until a stream
-    * reader has created the directory). Hardlinks on local FS — zero
-    * data movement; byte copy elsewhere. Idempotent: an existing link
+    * reader has created the directory). Idempotent: an existing link
     * is left alone. */
   private def reconcileStreamed(f: FileSystem, entries: Seq[FileEntry]): Unit = {
     val sd = new Path(streamedDir)
     if (!f.exists(sd)) return
     val present = f.listStatus(sd).map(_.getPath.getName).toSet
-    entries.filterNot(e => present.contains(e.name)).foreach { e =>
-      val src = new Path(s"$filesDir/${e.name}")
-      val dst = new Path(s"$streamedDir/${e.name}")
-      if (f.getScheme == "file")
-        try java.nio.file.Files.createLink(
-          java.nio.file.Paths.get(dst.toUri.getPath),
-          java.nio.file.Paths.get(src.toUri.getPath))
-        catch { case _: java.nio.file.FileAlreadyExistsException => () }
-      else org.apache.hadoop.fs.FileUtil.copy(f, src, f, dst, false, f.getConf)
-    }
+    entries.filterNot(e => present.contains(e.name)).foreach(e => linkFile(f, e.name, streamedDir))
+  }
+
+  /** Hardlink data file `name` from files/ into `dir` — zero data
+    * movement on a local FS; byte copy elsewhere. An existing target
+    * is left alone. */
+  private def linkFile(f: FileSystem, name: String, dir: String): Unit = {
+    val src = new Path(s"$filesDir/$name")
+    val dst = new Path(s"$dir/$name")
+    if (f.getScheme == "file")
+      try java.nio.file.Files.createLink(
+        java.nio.file.Paths.get(dst.toUri.getPath),
+        java.nio.file.Paths.get(src.toUri.getPath))
+      catch { case _: java.nio.file.FileAlreadyExistsException => () }
+    else org.apache.hadoop.fs.FileUtil.copy(f, src, f, dst, false, f.getConf)
   }
 
   /** Committed version numbers still present, oldest first — the
@@ -372,7 +348,7 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
     * the stale verdict the token exists to prevent. */
   def versionToken(v: Long): String =
     try {
-      val st = fs.getFileStatus(new Path(s"$versionsDir/${log.fileName(v)}"))
+      val st = fs.getFileStatus(new Path(s"$versionsDir/${VersionLog.fileName(v)}"))
       s"${st.getLen}.${st.getModificationTime}"
     } catch { case _: java.io.FileNotFoundException => "absent" }
 
@@ -384,24 +360,16 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
     * superseded frames for in-flight READ COMMITTED readers
     * (persistent/UndoChunk.java:46-70); version manifests are the
     * table-format rendering of the same idea with an explicit handle. */
-  def readVersion(version: Long): DataFrame = {
-    val content = contentOfVersion(version)
-    // time travel surfaces the schema AS COMMITTED THEN, not today's
-    readFiles(log.decode(content), log.decodeSchema(content).map(j =>
-      org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[org.apache.spark.sql.types.StructType]))
-  }
+  def readVersion(version: Long): DataFrame =
+    readAll(snapshotOf(version)) // the schema AS COMMITTED THEN, not today's
 
-  private def contentOfVersion(version: Long): String = {
-    val p = new Path(s"$versionsDir/${log.fileName(version)}")
+  private def snapshotOf(version: Long): Snapshot = {
+    val p = new Path(s"$versionsDir/${VersionLog.fileName(version)}")
     if (!fs.exists(p))
       throw new IllegalArgumentException(
         s"version $version not present at $path (available: ${versions.mkString(",")})")
-    readUtf8(fs, p)
+    VersionLog.decode(readUtf8(fs, p))
   }
-
-  private def entriesOfVersion(version: Long): Seq[FileEntry] =
-    log.decode(contentOfVersion(version))
 
   /** Row-level snapshot diff `fromV → toV`: (added, removed) frames.
     * Files are immutable, so files common to both manifests cancel
@@ -412,17 +380,13 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
     * files; a 1%-rewrite delete reads the 1%. The CDC shape for a
     * 100 TB table where any full-snapshot compare is off the table. */
   def diff(fromV: Long, toV: Long): (DataFrame, DataFrame) = {
-    val from = entriesOfVersion(fromV)
-    val toContent = contentOfVersion(toV)
-    val to = log.decode(toContent)
+    val from = snapshotOf(fromV).entries
+    val to = snapshotOf(toV)
     // both sides read under the TO version's (wider, additive) schema
     // so exceptAll compares congruent rows across an evolution
-    val schema = log.decodeSchema(toContent).map(j =>
-      org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
-    val common = from.map(_.name).toSet.intersect(to.map(_.name).toSet)
-    val onlyFrom = readFiles(from.filterNot(e => common(e.name)), schema)
-    val onlyTo = readFiles(to.filterNot(e => common(e.name)), schema)
+    val common = from.map(_.name).toSet.intersect(to.entries.map(_.name).toSet)
+    val onlyFrom = readFiles(from.filterNot(e => common(e.name)), to.schema)
+    val onlyTo = readFiles(to.entries.filterNot(e => common(e.name)), to.schema)
     (onlyTo.exceptAll(onlyFrom), onlyFrom.exceptAll(onlyTo))
   }
 
@@ -472,7 +436,7 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
 
   /** Write `rows` as new immutable files with per-file id stats. */
   private def writeFiles(rows: DataFrame): Seq[FileEntry] = {
-    lastSchemaJson = Some(rows.schema.json)
+    lastSchema = Some(rows.schema)
     val f = fs
     f.mkdirs(new Path(filesDir))
     val tmp = s"$path/_tmp_${UUID.randomUUID().toString.take(8)}"
@@ -596,17 +560,16 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
   }
 
   /** Atomically commit a new version whose content is `update(previous
-    * entries)` — the update function is RE-EVALUATED on every retry, so
-    * concurrent committers merge instead of clobbering each other
+    * snapshot)` — the update function is RE-EVALUATED on every retry,
+    * so concurrent committers merge instead of clobbering each other
     * (rename fails if the version already exists → optimistic retry
-    * with the newly observed entry list). `txnUpdate` folds this
-    * commit's idempotence markers into the previous version's
-    * cumulative (appId → version) state; it is re-evaluated on retry
-    * too, and returning the input UNCHANGED while `alreadyApplied`
-    * says so is how a replayed micro-batch becomes a no-op commit. */
-  private def commit(update: Seq[FileEntry] => Seq[FileEntry],
-                     txnUpdate: Map[String, Long] => Map[String, Long] = identity)
-      : Unit =
+    * with the newly observed snapshot). Updates change the entries and
+    * the cumulative txn state; returning the txn UNCHANGED when the
+    * marker says a batch is already applied is how a replayed
+    * micro-batch becomes a no-op commit. The commit itself records
+    * this store's last written schema (else the update's, carried
+    * forward) and adds the pending column stats of its new files. */
+  private def commit(update: Snapshot => Snapshot): Unit =
     TableStore.commitLock(path).synchronized {
     // The monitor serializes commits from this driver JVM (where all
     // table mutations run). Cross-PROCESS racers are excluded by a
@@ -616,33 +579,25 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
     // holder renames its manifest into place — rename stays the
     // content-visibility barrier, so readers never observe a
     // half-written manifest. A losing claimer re-reads the latest
-    // entries and retries at the next version (optimistic, merge-aware).
+    // snapshot and retries at the next version (optimistic, merge-aware).
     val f = fs
     f.mkdirs(new Path(versionsDir))
     var attempts = 0
-    var done = false
-    var committedEntries: Seq[FileEntry] = Seq.empty
-    while (!done) {
-      val (prevVer, prevContent) = listVersions(f).lastOption
-        .map { case (v, p) => (v, Some(readUtf8(f, p))) }.getOrElse((-1L, None))
-      val prevEntries = prevContent.map(log.decode).getOrElse(Seq.empty)
-      val prevTxn = prevContent.map(log.decodeTxn).getOrElse(Map.empty[String, Long])
-      val entries = update(prevEntries)
+    var committed: Option[Snapshot] = None
+    while (committed.isEmpty) {
+      val (prevVer, prev) = latest(f).getOrElse((-1L, Snapshot.empty))
+      val updated = update(prev)
       // schema carries forward: a data-free commit (revert, txn-only,
       // delete-to-empty) must not drop the committed schema, or an
       // evolved table's old files would silently stop surfacing the
-      // newer columns
-      val schemaJson = lastSchemaJson.orElse(prevContent.flatMap(log.decodeSchema))
-      // column stats carry forward too: previous files keep theirs,
-      // this commit's new files contribute pendingColStats; encode
-      // drops entries for files no longer in the version
-      val colStats = prevContent.map(log.decodeColStats)
-        .getOrElse(Map.empty[String, Map[String, (Double, Double)]]) ++ pendingColStats
+      // newer columns. Column stats carry forward too; encode drops
+      // entries for files no longer in the version.
+      val next = updated.copy(schema = lastSchema.orElse(updated.schema),
+        colStats = updated.colStats ++ pendingColStats)
+      val versionFile = new Path(s"$versionsDir/${VersionLog.fileName(prevVer + 1)}")
       val tmp = new Path(s"$versionsDir/.tmp-${UUID.randomUUID().toString.take(8)}")
       val out = f.create(tmp, false)
-      try out.write(log.encode(prevVer + 1, prevEntries, entries, schemaJson,
-          txnUpdate(prevTxn), colStats)
-        .getBytes("UTF-8"))
+      try out.write(VersionLog.encode(next).getBytes("UTF-8"))
       finally out.close()
       val claimPath = new Path(s"$versionsDir/v${prevVer + 1}.claim")
       val token = UUID.randomUUID().toString
@@ -650,10 +605,9 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
       // re-verify claim ownership immediately before the rename: a
       // stale-claim steal during a long pause re-issues the claim to
       // someone else, and renaming anyway would clobber their manifest
-      done = claimed && ownsClaim(f, claimPath, token) &&
-        f.rename(tmp, new Path(s"$versionsDir/${log.fileName(prevVer + 1)}"))
-      if (done) committedEntries = entries
-      if (!done) {
+      if (claimed && ownsClaim(f, claimPath, token) && f.rename(tmp, versionFile))
+        committed = Some(next)
+      else {
         f.delete(tmp, false)
         if (claimed) {
           // our rename failed (or our claim was stolen) — release the
@@ -667,7 +621,7 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
           // deliberately exceeds this threshold so the steal path is
           // reachable before "commit contention" fires.
           try {
-            if (!f.exists(new Path(s"$versionsDir/${log.fileName(prevVer + 1)}")) &&
+            if (!f.exists(versionFile) &&
                 System.currentTimeMillis() -
                   f.getFileStatus(claimPath).getModificationTime > TableStore.staleClaimMs)
               f.delete(claimPath, false)
@@ -678,37 +632,39 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
         Thread.sleep(math.min(2000L, 50L * attempts)) // let the claim holder finish its rename
       }
     }
+    val entries = committed.get.entries
     // the commit point has passed — surface this version's files to any
     // attached streaming reader (no-op unless streamed/ exists)
-    reconcileStreamed(f, committedEntries)
+    reconcileStreamed(f, entries)
     // drop ONLY the stats this version committed: with two concurrent
     // writers on one store, a blanket clear() here would discard the
     // other writer's pending per-file stats before its commit, leaving
     // its files permanently stat-less (read conservatively forever).
-    // Orphaned entries from losing once-writers are purged at their
-    // own file-delete sites.
-    committedEntries.foreach(e => pendingColStats.remove(e.name))
+    // Orphaned entries from losing once-writers are purged by
+    // commitOnce.
+    entries.foreach(e => pendingColStats.remove(e.name))
   }
 
-  private def currentEntries: Seq[FileEntry] =
-    latestManifest(fs).map(_._2).getOrElse(Seq.empty)
-
-  /** Rewrite commit: `replaced` (from the writer's snapshot) is swapped
-    * for `newFiles`; files committed by OTHERS since the snapshot are
-    * preserved (append-vs-mutation concurrency is safe; two concurrent
-    * REWRITES are last-writer-wins, matching the reference's
-    * single-mutator table lock for PROCESS — sql/SQLSelect.java:278-285). */
-  private def commitRewrite(snapshot: Seq[FileEntry], replaced: Seq[FileEntry],
-                            newFiles: Seq[FileEntry],
-                            txnUpdate: Map[String, Long] => Map[String, Long] = identity)
-      : Unit = {
+  /** Entry update of a rewrite: `replaced` (from the writer's
+    * `snapshot`) is swapped for `newFiles`; files committed by OTHERS
+    * since the snapshot are preserved (append-vs-mutation concurrency
+    * is safe; two concurrent REWRITES are last-writer-wins, matching
+    * the reference's single-mutator table lock for PROCESS —
+    * sql/SQLSelect.java:278-285). */
+  private def rewrite(snapshot: Seq[FileEntry], replaced: Seq[FileEntry],
+                      newFiles: Seq[FileEntry]): Seq[FileEntry] => Seq[FileEntry] = {
     val snapshotNames = snapshot.map(_.name).toSet
     val replacedNames = replaced.map(_.name).toSet
-    commit({ prev =>
-      val concurrentlyAdded = prev.filterNot(e => snapshotNames.contains(e.name))
-      prev.filter(e => snapshotNames.contains(e.name) && !replacedNames.contains(e.name)) ++
-        newFiles ++ concurrentlyAdded
-    }, txnUpdate)
+    prev => {
+      val (kept, concurrentlyAdded) = prev.partition(e => snapshotNames.contains(e.name))
+      kept.filterNot(e => replacedNames.contains(e.name)) ++ newFiles ++ concurrentlyAdded
+    }
+  }
+
+  private def commitRewrite(snapshot: Seq[FileEntry], replaced: Seq[FileEntry],
+                            newFiles: Seq[FileEntry]): Unit = {
+    val update = rewrite(snapshot, replaced, newFiles)
+    commit(prev => prev.copy(entries = update(prev.entries)))
   }
 
   /** Largest id in the table, METADATA-ONLY when every live file
@@ -718,10 +674,11 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
     * generator (persistent/Table.java:61-157); here the manifest IS
     * that state. */
   private[graft] def maxId: Option[Long] = {
-    val entries = currentEntries
+    val snap = current
+    val entries = snap.entries
     if (entries.isEmpty) None
     else if (entries.forall(_.idMax.isDefined)) Some(entries.flatMap(_.idMax).max)
-    else read.agg(max(col(idCol))).head.get(0) match {
+    else readAll(snap).agg(max(col(idCol))).head.get(0) match {
       case null => None
       case n: Number => Some(n.longValue())
     }
@@ -729,10 +686,7 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
 
   /** Total rows, metadata-only when possible (None forces the caller's
     * fallback — only legacy manifests lack per-file counts). */
-  private[graft] def rowCountFromManifest: Option[Long] = {
-    val entries = currentEntries
-    if (entries.forall(_.rows.isDefined)) Some(entries.flatMap(_.rows).sum) else None
-  }
+  private[graft] def rowCountFromManifest: Option[Long] = current.rowCount
 
   /** Cutoff id such that `deleteBelowId(cutoff)` retains the newest
     * `n` rows by id order; None when the table already holds <= n rows
@@ -750,16 +704,17 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
     * O(affected files) not O(table). */
   private[graft] def newestCutoff(n: Long): Option[Long] = {
     if (n > Int.MaxValue) return None // limit(Int) would truncate silently
-    val entries = currentEntries
+    val snap = current
+    val entries = snap.entries
     val statted = entries.nonEmpty &&
       entries.forall(e => e.rows.isDefined && e.idMin.isDefined && e.idMax.isDefined)
     val total: Long =
       if (statted) entries.flatMap(_.rows).sum
       else if (entries.isEmpty) 0L
-      else read.count()
+      else readAll(snap).count()
     if (total <= n) return None
     val scan =
-      if (!statted) read
+      if (!statted) readAll(snap)
       else {
         val byMaxDesc = entries.sortBy(e => -e.idMax.get)
         val cum = byMaxDesc.scanLeft(0L)(_ + _.rows.get).tail
@@ -821,10 +776,8 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
     * protects in-flight writers). Session-scoped ROLLBACK
     * (GraftSession) is built on this. */
   def revertTo(version: Long): Unit = {
-    val target: Seq[FileEntry] =
-      if (version < 0L) Seq.empty
-      else entriesOfVersion(version)
-    commit(_ => target)
+    val target = if (version < 0L) Seq.empty else snapshotOf(version).entries
+    commit(prev => prev.copy(entries = target))
   }
 
   /** Zero-copy SHALLOW CLONE (the Delta `CLONE` dev/test workflow):
@@ -840,33 +793,16 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
     * 100 TB production snapshot clones in seconds. */
   def cloneTo(targetPath: String): TableStore = {
     val f = fs
-    val (_, content) = latestContent(f).getOrElse(
-      throw new IllegalStateException(s"clone: no committed version at $path"))
-    val entries = log.decode(content)
-    // the DETECTED format, not the constructor arg: a reopened table
-    // (format auto-detected from disk) must clone into the same
-    // on-disk log format it actually uses
-    val target = new TableStore(spark, targetPath, idCol, log)
+    val snap = latest(f).getOrElse(
+      throw new IllegalStateException(s"clone: no committed version at $path"))._2
+    val target = new TableStore(spark, targetPath, idCol)
     require(!target.exists, s"clone: target $targetPath already has versions")
     f.mkdirs(new Path(target.filesDir))
-    entries.foreach { e =>
-      val src = new Path(s"$filesDir/${e.name}")
-      val dst = new Path(s"${target.filesDir}/${e.name}")
-      if (f.getScheme == "file")
-        try java.nio.file.Files.createLink(
-          java.nio.file.Paths.get(dst.toUri.getPath),
-          java.nio.file.Paths.get(src.toUri.getPath))
-        catch { case _: java.nio.file.FileAlreadyExistsException => () }
-      else org.apache.hadoop.fs.FileUtil.copy(f, src, f, dst, false, f.getConf)
-    }
-    // carry the committed schema and column stats into the clone's
-    // first commit — a clone that forgot stats would read its whole
+    snap.entries.foreach(e => linkFile(f, e.name, target.filesDir))
+    // the clone's first commit carries the committed schema and column
+    // stats — a clone that forgot stats would read its whole
     // inheritance conservatively (un-prunable)
-    target.lastSchemaJson = log.decodeSchema(content)
-    log.decodeColStats(content).foreach { case (n, st) =>
-      target.pendingColStats.put(n, st); ()
-    }
-    target.commit(_ => entries)
+    target.commit(_ => snap.copy(txn = Map.empty))
     target
   }
 
@@ -878,21 +814,18 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
     * that is the silent-corruption path a 100 TB table cannot afford,
     * so it throws. Returns the incoming rows aligned to the merged
     * schema. Legacy tables with no committed schema pass through. */
-  private def enforceSchema(rows: DataFrame): DataFrame =
-    committedSchema match {
+  private def enforceSchema(rows: DataFrame, committed: Option[StructType]): DataFrame =
+    committed match {
       case None => rows
       case Some(cur) =>
         // nullability (incl. containsNull/valueContainsNull inside
         // containers) is not a TYPE change — compare erased structure
-        def erased(dt: org.apache.spark.sql.types.DataType): org.apache.spark.sql.types.DataType = {
-          import org.apache.spark.sql.types._
-          dt match {
-            case a: ArrayType => ArrayType(erased(a.elementType), containsNull = true)
-            case m: MapType => MapType(erased(m.keyType), erased(m.valueType), valueContainsNull = true)
-            case s: StructType => StructType(s.fields.map(f =>
-              f.copy(dataType = erased(f.dataType), nullable = true)))
-            case other => other
-          }
+        def erased(dt: DataType): DataType = dt match {
+          case a: ArrayType => ArrayType(erased(a.elementType), containsNull = true)
+          case m: MapType => MapType(erased(m.keyType), erased(m.valueType), valueContainsNull = true)
+          case s: StructType => StructType(s.fields.map(f =>
+            f.copy(dataType = erased(f.dataType), nullable = true)))
+          case other => other
         }
         val curByName = cur.fields.map(f => f.name -> f).toMap
         rows.schema.fields.foreach { f =>
@@ -907,7 +840,7 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
         val incomingByName = rows.schema.fields.map(f => f.name -> f).toMap
         val newFields = rows.schema.fields
           .filterNot(f => curByName.contains(f.name)).map(_.copy(nullable = true))
-        val merged = org.apache.spark.sql.types.StructType(cur.fields ++ newFields)
+        val merged = StructType(cur.fields ++ newFields)
         rows.select(merged.fields.map { f =>
           if (incomingByName.contains(f.name)) col(f.name)
           else lit(null).cast(f.dataType).as(f.name)
@@ -917,8 +850,8 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
   /** Fast insert, no existence check (reference @NoCheck path): new
     * files + manifest commit, nothing rewritten. */
   def append(rows: DataFrame): Unit = Metrics.timer("persistInsertChunk").time {
-    val added = writeFiles(enforceSchema(rows))
-    commit(prev => prev ++ added)
+    val added = writeFiles(enforceSchema(rows, current.schema))
+    commit(prev => prev.copy(entries = prev.entries ++ added))
   }
 
   /** CHECKED append — the Delta table-constraints write contract: the
@@ -997,11 +930,36 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
   /** Last applied idempotence version for `appId` (a streaming sink's
     * micro-batch id), from the LATEST version file only — the state is
     * cumulative per version, never a chain replay. */
-  def lastTxn(appId: String): Option[Long] = {
-    val f = fs
-    listVersions(f).lastOption.flatMap { case (_, p) =>
-      log.decodeTxn(readUtf8(f, p)).get(appId)
+  def lastTxn(appId: String): Option[Long] = latest().flatMap(_._2.txn.get(appId))
+
+  /** The exactly-once frame shared by appendOnce / upsertOnce /
+    * replaceOnce: skip when `snap` already records (appId, version);
+    * otherwise `write` the new files — returning them with the entry
+    * update to apply — and commit that update and the marker in ONE
+    * atomic manifest rename. The marker is re-checked INSIDE the commit
+    * attempt (update fns re-evaluate on retry): a concurrent committer
+    * for the same appId may have applied this version while we were
+    * writing files. The loser of that race drops its orphaned files.
+    * Returns true when applied. */
+  private def commitOnce(appId: String, version: Long, snap: Snapshot)(
+      write: => (Seq[FileEntry], Seq[FileEntry] => Seq[FileEntry])): Boolean = {
+    if (snap.txn.get(appId).exists(_ >= version)) return false
+    val (added, update) = write
+    var applied = false
+    commit { prev =>
+      applied = !prev.txn.get(appId).exists(_ >= version)
+      if (!applied) prev
+      else prev.copy(entries = update(prev.entries), txn = prev.txn + (appId -> version))
     }
+    if (!applied) {
+      val f = fs
+      added.foreach { e =>
+        pendingColStats.remove(e.name) // never let an orphan's stats linger
+        try f.delete(new Path(s"$filesDir/${e.name}"), false)
+        catch { case _: java.io.IOException => }
+      }
+    }
+    applied
   }
 
   /** EXACTLY-ONCE append: commit `rows` and the (appId, version)
@@ -1013,29 +971,11 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
     * increasing per appId (micro-batch ids are). Returns true when the
     * batch was applied, false when deduplicated. */
   def appendOnce(appId: String, version: Long, rows: DataFrame): Boolean = {
-    if (lastTxn(appId).exists(_ >= version)) return false
-    val added = writeFiles(enforceSchema(rows))
-    var applied = false
-    commit(
-      prev => {
-        // re-check INSIDE the commit attempt: a concurrent committer
-        // for the same appId may have applied this version while we
-        // were writing files (update fns re-evaluate on retry)
-        applied = !lastTxn(appId).exists(_ >= version)
-        if (applied) prev ++ added else prev
-      },
-      prevTxn =>
-        if (prevTxn.get(appId).exists(_ >= version)) prevTxn
-        else prevTxn + (appId -> version))
-    if (!applied) { // lost the race — drop the orphaned files
-      val f = fs
-      added.foreach{ e =>
-        pendingColStats.remove(e.name) // never let an orphan's stats linger
-        try f.delete(new Path(s"$filesDir/${e.name}"), false)
-        catch { case _: java.io.IOException => }
-      }
+    val snap = current
+    commitOnce(appId, version, snap) {
+      val added = writeFiles(enforceSchema(rows, snap.schema))
+      (added, _ ++ added)
     }
-    applied
   }
 
   /** Split `entries` into (files whose id range intersects the key
@@ -1043,6 +983,7 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
     * of truly-affected files. */
   private def pruneByKeys(entries: Seq[FileEntry],
                           keys: DataFrame): (Seq[FileEntry], Seq[FileEntry]) = {
+    if (entries.isEmpty) return (Seq.empty, Seq.empty)
     if (!isIntegralId(keys)) return (entries, Seq.empty)
     val r = keys.agg(min(col(idCol)), max(col(idCol))).head
     if (r.isNullAt(0)) return (Seq.empty, entries) // no keys at all
@@ -1051,18 +992,34 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
     entries.partition(_.overlaps(kmin, kmax))
   }
 
+  /** Key-merge of `rows` into `snap` — insert-or-update by id: the
+    * files whose id range intersects the incoming keys, and their rows
+    * with every incoming key replaced by the incoming row (pure inserts
+    * touch no file). */
+  private def keyMerge(snap: Snapshot, rows0: DataFrame): (Seq[FileEntry], DataFrame) = {
+    val rows = enforceSchema(rows0, snap.schema)
+    val (affected, _) = pruneByKeys(snap.entries, rows.select(col(idCol)))
+    val merged =
+      if (affected.isEmpty) rows
+      else readFiles(affected, Some(rows.schema))
+        .join(rows.select(col(idCol)), Seq(idCol), "left_anti")
+        .unionByName(rows)
+    (affected, merged)
+  }
+
   /** `session.persist(o)` = insert-or-update by id
     * (persistent/Session.java:436-457). Rewrites only files whose id
     * range intersects the incoming keys; pure inserts touch nothing.
     * `singleFile` shapes the rewrite output to one file (the
     * @NoDistribute dim-table layout) — coalescing only the incoming
     * batch would leave the MERGE rewrite multi-file. */
-  def upsert(rows: DataFrame, singleFile: Boolean = false): Unit = {
-    // fresh-store delegation ticks the timer inside append — not here,
-    // so one logical chunk insert never counts twice
-    if (!exists) { append(if (singleFile) rows.coalesce(1) else rows); return }
-    Metrics.timer("persistInsertChunk").time { upsertExisting(rows, singleFile) }
-  }
+  def upsert(rows: DataFrame, singleFile: Boolean = false): Unit =
+    Metrics.timer("persistInsertChunk").time {
+      val snap = current
+      val (affected, merged) = keyMerge(snap, rows)
+      commitRewrite(snap.entries, affected,
+        writeFiles(if (singleFile) merged.coalesce(1) else merged))
+    }
 
   /** EXACTLY-ONCE upsert: like [[appendOnce]] but MERGING on the id —
     * the sink primitive of a continuously-maintained materialized
@@ -1071,41 +1028,12 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
     * manifest rename; a replayed batch no-ops. Returns true when
     * applied. */
   def upsertOnce(appId: String, version: Long, rows: DataFrame): Boolean = {
-    if (lastTxn(appId).exists(_ >= version)) return false
-    if (!exists) return appendOnce(appId, version, rows)
-    val rowsE = enforceSchema(rows)
-    val snapshot = currentEntries
-    val (affected, _) = pruneByKeys(snapshot, rowsE.select(col(idCol)))
-    val merged =
-      if (affected.isEmpty) rowsE
-      else readFiles(affected, Some(rowsE.schema))
-        .join(rowsE.select(col(idCol)), Seq(idCol), "left_anti")
-        .unionByName(rowsE)
-    val newFiles = writeFiles(merged)
-    val snapshotNames = snapshot.map(_.name).toSet
-    val replacedNames = affected.map(_.name).toSet
-    var applied = false
-    commit({ prev =>
-      // re-check INSIDE the attempt (update fns re-evaluate on retry)
-      applied = !lastTxn(appId).exists(_ >= version)
-      if (!applied) prev
-      else {
-        val concurrentlyAdded = prev.filterNot(e => snapshotNames.contains(e.name))
-        prev.filter(e => snapshotNames.contains(e.name) &&
-          !replacedNames.contains(e.name)) ++ newFiles ++ concurrentlyAdded
-      }
-    }, prevTxn =>
-      if (prevTxn.get(appId).exists(_ >= version)) prevTxn
-      else prevTxn + (appId -> version))
-    if (!applied) {
-      val f = fs
-      newFiles.foreach{ e =>
-        pendingColStats.remove(e.name) // never let an orphan's stats linger
-        try f.delete(new Path(s"$filesDir/${e.name}"), false)
-        catch { case _: java.io.IOException => }
-      }
+    val snap = current
+    commitOnce(appId, version, snap) {
+      val (affected, merged) = keyMerge(snap, rows)
+      val newFiles = writeFiles(merged)
+      (newFiles, rewrite(snap.entries, affected, newFiles))
     }
-    applied
   }
 
   /** EXACTLY-ONCE full-snapshot replacement: the new content and the
@@ -1116,39 +1044,11 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
     * is cheaper than merge bookkeeping); [[upsertOnce]] is the
     * per-key-merge sibling for views too large to rewrite. */
   def replaceOnce(appId: String, version: Long, rows: DataFrame): Boolean = {
-    if (lastTxn(appId).exists(_ >= version)) return false
-    if (!exists) return appendOnce(appId, version, rows)
-    val rowsE = enforceSchema(rows)
-    val newFiles = writeFiles(rowsE)
-    var applied = false
-    commit({ prev =>
-      applied = !lastTxn(appId).exists(_ >= version)
-      if (!applied) prev else newFiles
-    }, prevTxn =>
-      if (prevTxn.get(appId).exists(_ >= version)) prevTxn
-      else prevTxn + (appId -> version))
-    if (!applied) {
-      val f = fs
-      newFiles.foreach{ e =>
-        pendingColStats.remove(e.name) // never let an orphan's stats linger
-        try f.delete(new Path(s"$filesDir/${e.name}"), false)
-        catch { case _: java.io.IOException => }
-      }
+    val snap = current
+    commitOnce(appId, version, snap) {
+      val newFiles = writeFiles(enforceSchema(rows, snap.schema))
+      (newFiles, _ => newFiles)
     }
-    applied
-  }
-
-  private def upsertExisting(rows0: DataFrame, singleFile: Boolean): Unit = {
-    val rows = enforceSchema(rows0)
-    val snapshot = currentEntries
-    val (affected, _) = pruneByKeys(snapshot, rows.select(col(idCol)))
-    val merged =
-      if (affected.isEmpty) rows
-      else readFiles(affected, Some(rows.schema))
-        .join(rows.select(col(idCol)), Seq(idCol), "left_anti")
-        .unionByName(rows)
-    commitRewrite(snapshot, affected,
-      writeFiles(if (singleFile) merged.coalesce(1) else merged))
   }
 
   /** Full MERGE INTO over the store — the Delta/Iceberg write
@@ -1177,17 +1077,17 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
             insertNotMatched: Boolean = true): Unit = {
     require(!matchedUpdate.contains(idCol),
       s"merge: the id column '$idCol' cannot be assigned")
-    if (!exists) {
+    val snap = latest().getOrElse {
       if (insertNotMatched) append(source)
       return
-    }
-    val src = enforceSchema(source).localCheckpoint(true)
+    }._2
+    val src = enforceSchema(source, snap.schema).localCheckpoint(true)
     try {
       val dups = src.groupBy(col(idCol)).agg(count(lit(1)).as("n"))
         .filter(col("n") > 1).limit(1).count()
       require(dups == 0L,
         "merge: duplicate source keys — a target row would match twice")
-      val snapshot = currentEntries
+      val snapshot = snap.entries
       val (affected, _) = pruneByKeys(snapshot, src.select(col(idCol)))
       // the ENFORCED source's schema = committed ++ new nullable
       // columns, so merge participates in additive evolution exactly
@@ -1226,11 +1126,12 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
     * manifest's file stats prune to the file(s) whose range covers the
     * key, then parquet row-group min/max prune within. */
   def find(id: Any): DataFrame = {
+    val entries = current.entries
     val pruned = id match {
       case n: Number =>
         val k = n.longValue()
-        currentEntries.filter(_.overlaps(k, k))
-      case _ => currentEntries
+        entries.filter(_.overlaps(k, k))
+      case _ => entries
     }
     readFiles(pruned).filter(col(idCol) === lit(id))
   }
@@ -1247,7 +1148,7 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
     * `compact(clusterBy=id)` exists. Files without stats (non-integral
     * id, null ids) are conservatively always read. */
   def readRange(kmin: Long, kmax: Long): DataFrame = {
-    val entries = currentEntries.filter(_.overlaps(kmin, kmax))
+    val entries = current.entries.filter(_.overlaps(kmin, kmax))
     readFiles(entries)
       .filter(col(idCol) >= lit(kmin) && col(idCol) <= lit(kmax))
   }
@@ -1275,18 +1176,17 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
     * filtering; this only shrinks the file set, conservatively. */
   def readPruned(bounds: Map[String, (Double, Double)],
                  idRange: Option[(Long, Long)] = None): DataFrame = {
-    val stats = latestContent(fs).map(c => log.decodeColStats(c._2))
-      .getOrElse(Map.empty[String, Map[String, (Double, Double)]])
-    val entries = currentEntries.filter { e =>
+    val snap = current
+    val entries = snap.entries.filter { e =>
       idRange.forall { case (klo, khi) => e.overlaps(klo, khi) } &&
       bounds.forall { case (c, (lo, hi)) =>
-        stats.get(e.name).flatMap(_.get(c)) match {
+        snap.colStats.get(e.name).flatMap(_.get(c)) match {
           case Some((mn, mx)) => mn <= hi && mx >= lo
           case None => true // no stats → always read
         }
       }
     }
-    readFiles(entries, committedSchema)
+    readFiles(entries, snap.schema)
   }
 
   /** DELETE WHERE: removes rows where the condition is TRUE only —
@@ -1299,7 +1199,7 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
     * driver (metadata-scale). Use deleteKeys for the stats-pruned
     * keyed path that avoids the find scan entirely. */
   def delete(condition: Column): Unit = {
-    val snapshot = currentEntries
+    val snapshot = current.entries
     if (snapshot.isEmpty) return
     // two evaluations of the predicate (find + rewrite) are only sound
     // when it is deterministic; a rand()/timestamp predicate would
@@ -1329,7 +1229,7 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
     * distributed — the PROCESS STREAM per-batch delete path). */
   def deleteKeys(keys: DataFrame): Unit = {
     val k = keys.select(col(idCol)).distinct()
-    val snapshot = currentEntries
+    val snapshot = current.entries
     val (affected, _) = pruneByKeys(snapshot, k)
     if (affected.isEmpty) return
     val retained = readFiles(affected).join(k, Seq(idCol), "left_anti")
@@ -1340,7 +1240,7 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
     * post-delete state (reference: cluster-locked table rewrite —
     * sql/SQLSelect.java:278-285). */
   def process(condition: Column, processor: EventProcessor): Process.Result = {
-    val snapshot = currentEntries
+    val snapshot = current.entries
     val res = Process.run(readFiles(snapshot), condition, processor, Some(idCol))
     if (processor.delete()) commitRewrite(snapshot, snapshot, writeFiles(res.retained))
     res
@@ -1352,7 +1252,7 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
     * are rewritten — the @Threshold hot path stays O(1 file) per
     * enforcement instead of an O(table) rewrite. */
   def deleteBelowId(cutoff: Long): Unit = {
-    val snapshot = currentEntries
+    val snapshot = current.entries
     // whole-file drops require stats, and stats are only recorded for
     // null-free files (footerStats), so no NULL-id row is ever dropped
     // with a file; the straddling rewrite retains NULL ids explicitly
@@ -1382,7 +1282,7 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
     * append hot path: appends stay O(batch), clustering restores
     * pruning precision off the hot path. */
   def compact(targetFiles: Int = 8, clusterBy: Seq[String] = Seq.empty): Unit = {
-    val snapshot = currentEntries
+    val snapshot = current.entries
     val n = math.max(targetFiles, 1)
     if (snapshot.isEmpty || (clusterBy.isEmpty && snapshot.size <= n)) return
     // clustered maintenance is idempotent: when the file count is
@@ -1406,7 +1306,7 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
   /** Per-file (idMin, idMax) of the current snapshot — lets tests and
     * maintenance tooling observe clustering/pruning precision. */
   private[graft] def fileIdRanges: Seq[(Option[Long], Option[Long])] =
-    currentEntries.map(e => (e.idMin, e.idMax))
+    current.entries.map(e => (e.idMin, e.idMax))
 
   /** Drop superseded manifests and unreferenced data files older than
     * `graceMs` (current snapshot unaffected). The grace window governs
@@ -1450,7 +1350,7 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
       // deleting a file out from under a within-grace manifest would
       // leave readable versions pointing at nothing
       val live = (all.lastOption.toSeq ++ keptOld).flatMap { case (_, p) =>
-        log.decode(readUtf8(f, p)).map(_.name)
+        VersionLog.decode(readUtf8(f, p)).entries.map(_.name)
       }.toSet
       if (f.exists(new Path(filesDir)))
         f.listStatus(new Path(filesDir)).toSeq

@@ -564,11 +564,7 @@ object BatchQueries {
     val ev = t(s, dir, "events")
       .select(col("event_id"), col("event_type"), col("value"))
     val tmp = graft.core.TempDirs.create("graft_tt_")
-    // through the Delta-style JSON action log (core/LogFormat): same
-    // commit protocol, cluster-grade table-format encoding — the gate
-    // proves time travel reads identical snapshots through the adapter
-    val store = new graft.core.TableStore(s, tmp, "event_id",
-      format = graft.core.DeltaJsonLog)
+    val store = new graft.core.TableStore(s, tmp, "event_id")
     store.append(ev.filter(col("event_type") === "click"))
     store.append(ev.filter(col("event_type") === "purchase"))
     store.delete(col("value") < 10.0)
@@ -832,9 +828,7 @@ object BatchQueries {
       .select(col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"),
         col("o_orderpriority"))
     val tmp = graft.core.TempDirs.create("graft_persist_")
-    // through the Delta-style JSON action log (see qTimeTravel)
-    val store = new graft.core.TableStore(s, tmp, "o_orderkey",
-      format = graft.core.DeltaJsonLog)
+    val store = new graft.core.TableStore(s, tmp, "o_orderkey")
     store.append(base)
     // persist existing ids with a changed column (update arm of upsert)
     store.upsert(base.filter(col("o_orderpriority") === "1-URGENT")

@@ -16,7 +16,7 @@ object InsertParser {
   import Parser.{Num, Str, Sym, Tok, Word}
 
   def parse(sql: String): Option[Insert] = {
-    val toks = try Parser.tokenize(sql) catch { case _: Throwable => return None }
+    val toks = try Parser.tokenize(sql) catch { case scala.util.control.NonFatal(_) => return None }
     var pos = 0
     def peek: Option[Tok] = if (pos < toks.length) Some(toks(pos)) else None
     def eatSym(s: String): Boolean = peek match {

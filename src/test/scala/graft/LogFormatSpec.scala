@@ -2,16 +2,14 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.core.{DeltaJsonLog, LogFormat, NativeManifestLog, TableStore, TempDirs}
+import org.apache.spark.sql.types._
+import graft.core.{FileEntry, Snapshot, TableStore, TempDirs, VersionLog}
 
-/** core/LogFormat: the version-log adapter behind TableStore. The
-  * commit protocol is format-independent; these tests prove the
-  * Delta-style JSON action log carries the full TableStore lifecycle
-  * (append / upsert / delete / time travel / revert / vacuum) with
-  * results identical to the native manifest, that the log on disk is
-  * well-formed Delta actions (add/remove/metaData with stats), and
-  * that reopening resolves a table's existing format regardless of
-  * the constructor default. */
+/** core/VersionLog, the one version-log format behind TableStore: the
+  * manifest codec round-trips every field a version records, and the
+  * store's lifecycle (append / upsert / delete / time travel / revert /
+  * vacuum), exactly-once commits, column stats and schema evolution
+  * work through it and survive reopening the table from disk. */
 class LogFormatSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
@@ -19,170 +17,187 @@ class LogFormatSpec extends AnyFunSuite {
   private def freshRows(n: Int) =
     (0 until n).map(i => (i.toLong, s"r$i", i * 1.5)).toDF("id", "tag", "v")
 
-  test("full lifecycle through the Delta JSON log matches the native manifest") {
-    val results = Seq(NativeManifestLog, DeltaJsonLog).map { fmt =>
-      val dir = TempDirs.create(s"graft_lf_${fmt.dirName.replace("_", "")}_")
-      val st = new TableStore(spark, dir, "id", format = fmt)
-      st.append(freshRows(100))
-      st.upsert(freshRows(10).withColumn("v", col("v") * 2))
-      st.delete(col("id") >= 90)
-      val Seq(v1, v2, v3) = st.versions.sorted.takeRight(3)
-      val snaps = Seq(v1, v2, v3).map(v =>
-        st.readVersion(v).agg(count(lit(1)), round(sum(col("v")), 2))
-          .as[(Long, Double)].head())
-      st.revertTo(v2)
-      val afterRevert = st.read.agg(count(lit(1)), round(sum(col("v")), 2))
-        .as[(Long, Double)].head()
-      st.vacuum(graceMs = 0L)
-      val afterVacuum = st.read.agg(count(lit(1)), round(sum(col("v")), 2))
-        .as[(Long, Double)].head()
-      (snaps, afterRevert, afterVacuum)
-    }
-    assert(results(0) == results(1),
-      s"delta-log lifecycle diverged from native manifest: ${results(0)} vs ${results(1)}")
-  }
+  private def countSum(df: org.apache.spark.sql.DataFrame): (Long, Double) =
+    df.agg(count(lit(1)), round(sum(col("v")), 2)).as[(Long, Double)].head()
 
-  test("delta log on disk is well-formed NDJSON actions with stats") {
-    val dir = TempDirs.create("graft_lf_ondisk_")
-    val st = new TableStore(spark, dir, "id", format = DeltaJsonLog)
-    st.append(freshRows(50))
-    st.delete(col("id") < 10)
-    val logDir = new java.io.File(s"$dir/_delta_log")
-    val logs = logDir.listFiles().filter(_.getName.matches("\\d{20}\\.json")).sortBy(_.getName)
-    assert(logs.length == 2, s"expected 2 commits, got ${logs.map(_.getName).mkString(",")}")
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val v1 = scala.io.Source.fromFile(logs.last, "UTF-8").getLines().toList.map(mapper.readTree)
-    // commit 1 (the delete-rewrite) must carry removes for the rewritten
-    // files and adds whose stats expose numRecords and id min/max
-    assert(v1.exists(n => n.has("remove")), "delete commit lost its remove actions")
-    val adds = v1.filter(_.has("add"))
-    assert(adds.nonEmpty)
-    adds.foreach { a =>
-      val st2 = mapper.readTree(a.get("add").get("stats").asText())
-      assert(st2.has("numRecords") && st2.has("minValues") && st2.has("maxValues"),
-        s"add action missing data-skipping stats: $a")
-    }
-    val md = v1.find(_.has("metaData")).get.get("metaData")
-    assert(md.get("schemaString").asText().contains("\"id\""),
-      "metaData schemaString is not the real table schema")
-    assert(md.get("format").get("provider").asText() == "parquet")
-  }
-
-  test("reopening resolves the existing on-disk format over the constructor default") {
-    val dir = TempDirs.create("graft_lf_reopen_")
-    val st = new TableStore(spark, dir, "id", format = DeltaJsonLog)
-    st.append(freshRows(20))
-    // reopen with the DEFAULT (native) format: detection must route to
-    // the delta log that is already there
-    val reopened = new TableStore(spark, dir, "id")
-    assert(reopened.read.count() == 20)
-    reopened.append(freshRows(5).withColumn("id", col("id") + 1000))
-    assert(reopened.versions.size == 2)
-    assert(new java.io.File(s"$dir/_delta_log").listFiles()
-      .count(_.getName.matches("\\d{20}\\.json")) == 2,
-      "reopened store committed outside the table's original log format")
-    assert(!new java.io.File(s"$dir/_versions").exists(),
-      "reopened store created a second log directory")
-  }
-
-  test("id-range pruning stats survive the delta stats round-trip") {
-    val dir = TempDirs.create("graft_lf_prune_")
-    val st = new TableStore(spark, dir, "id", format = DeltaJsonLog)
+  test("full lifecycle: time travel, revert and vacuum read the committed snapshots") {
+    val st = new TableStore(spark, TempDirs.create("graft_lf_life_"), "id")
     st.append(freshRows(100))
-    // metadata-only row count and max id prove stats decoded from the
-    // add actions' stats JSON, not rescanned
-    assert(st.rowCountFromManifest.contains(100L))
-    assert(st.maxId.contains(99L))
+    st.upsert(freshRows(10).withColumn("v", col("v") * 2))
+    st.delete(col("id") >= 90)
+    val Seq(v1, v2, v3) = st.versions.sorted.takeRight(3)
+    assert(Seq(v1, v2, v3).map(v => countSum(st.readVersion(v))) ==
+      Seq((100L, 7425.0), (100L, 7492.5), (90L, 6075.0)))
+    st.revertTo(v2)
+    assert(countSum(st.read) == ((100L, 7492.5)))
+    st.vacuum(graceMs = 0L)
+    assert(countSum(st.read) == ((100L, 7492.5)))
+    assert(st.versions.size == 1, s"vacuum(0) kept ${st.versions}")
+    intercept[IllegalArgumentException](st.readVersion(v1))
   }
 
-  test("appendOnce is exactly-once across replays, formats, and reopen") {
-    Seq(NativeManifestLog, DeltaJsonLog).foreach { fmt =>
-      val dir = TempDirs.create(s"graft_txn_${fmt.dirName.replace("_", "")}_")
-      val st = new TableStore(spark, dir, "id", format = fmt)
-      assert(st.appendOnce("sinkA", 0L, freshRows(10)))
-      assert(st.appendOnce("sinkA", 1L, freshRows(5)))
-      // replays of both applied versions are dropped
-      assert(!st.appendOnce("sinkA", 0L, freshRows(10)))
-      assert(!st.appendOnce("sinkA", 1L, freshRows(99)))
-      assert(st.read.count() == 15L)
-      // independent appId has its own sequence
-      assert(st.appendOnce("sinkB", 0L, freshRows(3)))
-      assert(st.read.count() == 18L)
-      // txn state survives unrelated commits (cumulative re-encode)
-      st.append(freshRows(2))
-      assert(st.lastTxn("sinkA").contains(1L))
-      assert(st.lastTxn("sinkB").contains(0L))
-      // ...and survives reopening the table from disk
-      val reopened = new TableStore(spark, dir, "id")
-      assert(!reopened.appendOnce("sinkA", 1L, freshRows(4)))
-      assert(reopened.appendOnce("sinkA", 2L, freshRows(4)))
-      assert(reopened.read.count() == 24L)
-    }
+  test("manifest encode/decode round-trips entries, rows, txn, column stats and schema") {
+    val schema = StructType(Seq(StructField("id", LongType, nullable = false),
+      StructField("tags", ArrayType(StringType)), StructField("v", DoubleType)))
+    val snap = Snapshot(
+      Seq(FileEntry("a-part-0.parquet", Some(-3L), Some(9L), Some(5L)),
+        FileEntry("b-part-1.parquet", None, None, Some(3L)),
+        FileEntry("c-part-2.parquet", Some(10L), Some(10L), Some(1L))),
+      txn = Map("sinkA" -> 7L, "sinkB" -> 0L),
+      colStats = Map("a-part-0.parquet" -> Map("v" -> ((-1.5, 2.25)), "n" -> ((0.0, 4.0)))),
+      schema = Some(schema))
+    assert(VersionLog.decode(VersionLog.encode(snap)) == snap)
+    assert(snap.rowCount.contains(9L))
+    // stats of files no longer in the version are not written
+    val stale = snap.copy(colStats = snap.colStats + ("gone.parquet" -> Map("v" -> ((0.0, 1.0)))))
+    assert(VersionLog.decode(VersionLog.encode(stale)) == snap)
+    assert(VersionLog.decode(VersionLog.encode(Snapshot.empty)) == Snapshot.empty)
+    // legacy entries: no row count, no stats at all
+    val legacy = VersionLog.decode("f1\t1\t2\nf2\n")
+    assert(legacy.entries == Seq(FileEntry("f1", Some(1L), Some(2L), None),
+      FileEntry("f2", None, None, None)))
+    assert(legacy.rowCount.isEmpty && legacy.schema.isEmpty && legacy.txn.isEmpty)
+    assert(VersionLog.fileName(12L) == "v12.manifest")
+    assert(VersionLog.versionOf("v12.manifest").contains(12L))
+    assert(VersionLog.versionOf("v12.claim").isEmpty && VersionLog.versionOf(".tmp-ab12").isEmpty)
   }
 
-  test("column stats: round-trip both formats, prune readWhere, survive commits") {
-    Seq(NativeManifestLog, DeltaJsonLog).foreach { fmt =>
-      val dir = TempDirs.create(s"graft_cs_${fmt.dirName.replace("_", "")}_")
-      val st = new TableStore(spark, dir, "id", format = fmt)
-      // two files with disjoint v ranges
-      st.append((0 until 50).map(i => (i.toLong, i * 1.0)).toDF("id", "v").coalesce(1))
-      st.append((50 until 100).map(i => (i.toLong, i * 1.0)).toDF("id", "v").coalesce(1))
-      val narrow = st.readWhere("v", 10.0, 20.0)
-      assert(narrow.inputFiles.length == 1,
-        s"expected 1 file read, got ${narrow.inputFiles.length}")
-      assert(narrow.count() == 11L)
-      // stats survive an unrelated commit (delete touching nothing new)
-      st.append((100 until 110).map(i => (i.toLong, -1.0)).toDF("id", "v").coalesce(1))
-      val narrow2 = st.readWhere("v", 60.0, 70.0)
-      assert(narrow2.inputFiles.length == 1)
-      assert(narrow2.count() == 11L)
-      // a column with no stats (strings) reads everything, correctly
-      val st2 = new TableStore(spark,
-        TempDirs.create(s"graft_cs2_${fmt.dirName.replace("_", "")}_"), "id", format = fmt)
-      st2.append(Seq((1L, "a"), (2L, "b")).toDF("id", "s"))
-      assert(st2.readWhere("id", 1.0, 1.0).count() == 1L)
-    }
+  test("reopen resumes versions and txn state") {
+    val dir = TempDirs.create("graft_lf_reopen_")
+    val st = new TableStore(spark, dir, "id")
+    st.append(freshRows(20))
+    assert(st.appendOnce("sink", 0L, freshRows(5).withColumn("id", col("id") + 100)))
+    val reopened = new TableStore(spark, dir, "id")
+    assert(reopened.versions == st.versions && reopened.versions.size == 2)
+    assert(reopened.lastTxn("sink").contains(0L))
+    // row count and max id come from manifest metadata, not a scan
+    assert(reopened.rowCountFromManifest.contains(25L))
+    assert(reopened.maxId.contains(104L))
+    assert(!reopened.appendOnce("sink", 0L, freshRows(3)))
+    reopened.append(freshRows(5).withColumn("id", col("id") + 1000))
+    assert(reopened.versions.size == 3)
+    assert(reopened.read.count() == 30L)
+    assert(reopened.lastTxn("sink").contains(0L), "txn state lost by an unrelated commit")
+    assert(new java.io.File(s"$dir/_versions").listFiles()
+      .count(f => VersionLog.versionOf(f.getName).isDefined) == 3)
   }
 
-  test("upsertOnce merges on the key, dedups replays, both formats") {
-    Seq(NativeManifestLog, DeltaJsonLog).foreach { fmt =>
-      val dir = TempDirs.create(s"graft_uo_${fmt.dirName.replace("_", "")}_")
-      val st = new TableStore(spark, dir, "id", format = fmt)
-      assert(st.upsertOnce("view", 0L, Seq((1L, 10.0), (2L, 20.0)).toDF("id", "v")))
-      assert(st.upsertOnce("view", 1L, Seq((2L, 25.0), (3L, 30.0)).toDF("id", "v")))
-      // replay of batch 1 with different values must NOT apply
-      assert(!st.upsertOnce("view", 1L, Seq((2L, -99.0)).toDF("id", "v")))
-      val got = st.read.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-      assert(got == Map(1L -> 10.0, 2L -> 25.0, 3L -> 30.0))
-      assert(st.lastTxn("view").contains(1L))
-    }
+  test("appendOnce and replaceOnce are exactly-once across replays and reopen") {
+    val dir = TempDirs.create("graft_txn_")
+    val st = new TableStore(spark, dir, "id")
+    assert(st.appendOnce("sinkA", 0L, freshRows(10)))
+    assert(st.appendOnce("sinkA", 1L, freshRows(5)))
+    // replays of both applied versions are dropped
+    assert(!st.appendOnce("sinkA", 0L, freshRows(10)))
+    assert(!st.appendOnce("sinkA", 1L, freshRows(99)))
+    assert(st.read.count() == 15L)
+    // independent appId has its own sequence
+    assert(st.appendOnce("sinkB", 0L, freshRows(3)))
+    assert(st.read.count() == 18L)
+    // txn state survives unrelated commits (cumulative re-encode)
+    st.append(freshRows(2))
+    assert(st.lastTxn("sinkA").contains(1L))
+    assert(st.lastTxn("sinkB").contains(0L))
+    // ...and survives reopening the table from disk
+    val reopened = new TableStore(spark, dir, "id")
+    assert(!reopened.appendOnce("sinkA", 1L, freshRows(4)))
+    assert(reopened.appendOnce("sinkA", 2L, freshRows(4)))
+    assert(reopened.read.count() == 24L)
+
+    // replaceOnce: the first apply swaps the whole snapshot, a replay
+    // no-ops, and two racing applies of one version commit exactly once
+    // and leave no orphan file behind in files/
+    val rdir = TempDirs.create("graft_ro_")
+    val rs = new TableStore(spark, rdir, "id")
+    rs.append(freshRows(10))
+    assert(rs.replaceOnce("view", 0L, freshRows(3)))
+    assert(rs.read.count() == 3L)
+    assert(!rs.replaceOnce("view", 0L, freshRows(7)))
+    assert(rs.read.count() == 3L && rs.lastTxn("view").contains(0L))
+    val wins = new java.util.concurrent.atomic.AtomicInteger()
+    val racers = Seq(4, 6).map(n => new Thread(() =>
+      if (rs.replaceOnce("view", 1L, freshRows(n))) wins.incrementAndGet()))
+    racers.foreach(_.start())
+    racers.foreach(_.join())
+    assert(wins.get == 1, s"${wins.get} racing replaceOnce calls applied")
+    assert(Set(4L, 6L).contains(rs.read.count()) && rs.lastTxn("view").contains(1L))
+    val referenced = new java.io.File(s"$rdir/_versions").listFiles()
+      .filter(f => VersionLog.versionOf(f.getName).isDefined)
+      .flatMap(f => VersionLog.decode(new String(
+        java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")).entries.map(_.name)).toSet
+    val orphans = new java.io.File(s"$rdir/files").list()
+      .filter(_.endsWith(".parquet")).filterNot(referenced)
+    assert(orphans.isEmpty, s"files no version references: ${orphans.mkString(",")}")
+  }
+
+  test("shallow clone's first version carries the source snapshot's schema and column stats") {
+    val src = new TableStore(spark, TempDirs.create("graft_lf_clone_"), "id")
+    src.append((0 until 50).map(i => (i.toLong, i * 1.0)).toDF("id", "v").coalesce(1))
+    assert(src.appendOnce("sink", 3L,
+      (50 until 100).map(i => (i.toLong, i * 1.0)).toDF("id", "v").coalesce(1)))
+    val cl = src.cloneTo(TempDirs.create("graft_lf_clone_dst_") + "/t")
+    assert(cl.versions.size == 1)
+    assert(cl.read.schema == src.read.schema)
+    // the clone prunes on the inherited stats like its source does
+    assert(cl.readWhere("v", 10.0, 20.0).inputFiles.length == 1)
+    assert(cl.readWhere("v", 10.0, 20.0).count() == 11L)
+    // idempotence markers belong to the source table's writers
+    assert(cl.lastTxn("sink").isEmpty && src.lastTxn("sink").contains(3L))
+  }
+
+  test("column stats: round-trip, prune readWhere, survive commits") {
+    val st = new TableStore(spark, TempDirs.create("graft_cs_"), "id")
+    // two files with disjoint v ranges
+    st.append((0 until 50).map(i => (i.toLong, i * 1.0)).toDF("id", "v").coalesce(1))
+    st.append((50 until 100).map(i => (i.toLong, i * 1.0)).toDF("id", "v").coalesce(1))
+    val narrow = st.readWhere("v", 10.0, 20.0)
+    assert(narrow.inputFiles.length == 1,
+      s"expected 1 file read, got ${narrow.inputFiles.length}")
+    assert(narrow.count() == 11L)
+    // stats survive an unrelated commit (delete touching nothing new)
+    st.append((100 until 110).map(i => (i.toLong, -1.0)).toDF("id", "v").coalesce(1))
+    val narrow2 = st.readWhere("v", 60.0, 70.0)
+    assert(narrow2.inputFiles.length == 1)
+    assert(narrow2.count() == 11L)
+    // a column with no stats (strings) reads everything, correctly
+    val st2 = new TableStore(spark, TempDirs.create("graft_cs2_"), "id")
+    st2.append(Seq((1L, "a"), (2L, "b")).toDF("id", "s"))
+    assert(st2.readWhere("id", 1.0, 1.0).count() == 1L)
+  }
+
+  test("upsertOnce merges on the key, dedups replays") {
+    val st = new TableStore(spark, TempDirs.create("graft_uo_"), "id")
+    assert(st.upsertOnce("view", 0L, Seq((1L, 10.0), (2L, 20.0)).toDF("id", "v")))
+    assert(st.upsertOnce("view", 1L, Seq((2L, 25.0), (3L, 30.0)).toDF("id", "v")))
+    // replay of batch 1 with different values must NOT apply
+    assert(!st.upsertOnce("view", 1L, Seq((2L, -99.0)).toDF("id", "v")))
+    val got = st.read.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    assert(got == Map(1L -> 10.0, 2L -> 25.0, 3L -> 30.0))
+    assert(st.lastTxn("view").contains(1L))
   }
 
   test("schema evolution: widen, omit, reject type change, upsert across it") {
-    Seq(NativeManifestLog, DeltaJsonLog).foreach { fmt =>
-      val dir = TempDirs.create(s"graft_evo_${fmt.dirName.replace("_", "")}_")
-      val st = new TableStore(spark, dir, "id", format = fmt)
-      st.append((0L until 4L).map(i => (i, s"r$i")).toDF("id", "tag"))
-      // widened append: new nullable column, old files not rewritten
-      st.append(Seq((10L, "w", 1.5), (11L, "x", 2.5)).toDF("id", "tag", "v"))
-      val rows = st.read.orderBy("id").collect()
-      assert(rows.map(_.getLong(0)).toSeq == Seq(0L, 1L, 2L, 3L, 10L, 11L))
-      assert(rows.take(4).forall(_.isNullAt(2)), "pre-evolution rows must read null v")
-      assert(rows.last.getDouble(2) == 2.5)
-      // omitted column fills null on write
-      st.append(Seq((20L, 9.9)).toDF("id", "v"))
-      val r20 = st.read.filter(col("id") === 20L).head
-      assert(r20.isNullAt(1) && r20.getDouble(2) == 9.9)
-      // type change rejected
-      intercept[IllegalArgumentException] {
-        st.append(Seq((30L, 7)).toDF("id", "v")) // v: int vs committed double
-      }
-      // upsert across the evolution boundary touches pre-evolution files
-      st.upsert(Seq((1L, "updated", 4.0)).toDF("id", "tag", "v"))
-      val r1 = st.read.filter(col("id") === 1L).head
-      assert(r1.getString(1) == "updated" && r1.getDouble(2) == 4.0)
-      assert(st.read.count() == 7L)
+    val st = new TableStore(spark, TempDirs.create("graft_evo_"), "id")
+    st.append((0L until 4L).map(i => (i, s"r$i")).toDF("id", "tag"))
+    // widened append: new nullable column, old files not rewritten
+    st.append(Seq((10L, "w", 1.5), (11L, "x", 2.5)).toDF("id", "tag", "v"))
+    val rows = st.read.orderBy("id").collect()
+    assert(rows.map(_.getLong(0)).toSeq == Seq(0L, 1L, 2L, 3L, 10L, 11L))
+    assert(rows.take(4).forall(_.isNullAt(2)), "pre-evolution rows must read null v")
+    assert(rows.last.getDouble(2) == 2.5)
+    // omitted column fills null on write
+    st.append(Seq((20L, 9.9)).toDF("id", "v"))
+    val r20 = st.read.filter(col("id") === 20L).head
+    assert(r20.isNullAt(1) && r20.getDouble(2) == 9.9)
+    // type change rejected
+    intercept[IllegalArgumentException] {
+      st.append(Seq((30L, 7)).toDF("id", "v")) // v: int vs committed double
     }
+    // upsert across the evolution boundary touches pre-evolution files
+    st.upsert(Seq((1L, "updated", 4.0)).toDF("id", "tag", "v"))
+    val r1 = st.read.filter(col("id") === 1L).head
+    assert(r1.getString(1) == "updated" && r1.getDouble(2) == 4.0)
+    assert(st.read.count() == 7L)
   }
 
   test("change feed: upsert pairs, unchanged-row cancellation, evolution nulls") {

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.core.{NativeManifestLog, TableStore, TempDirs}
+import graft.core.{TableStore, TempDirs, VersionLog}
 
 /** Two concurrent writers on ONE store: every committed file must end
   * up with its per-file column stats in the final manifest. Round 8's
@@ -32,10 +32,11 @@ class StoreConcurrencySpec extends AnyFunSuite {
     assert(errs.isEmpty, s"writer failed: ${errs.peek()}")
     val versionsDir = new java.io.File(s"$dir/_versions")
     val latest = versionsDir.listFiles().filter(_.getName.endsWith(".manifest"))
-      .maxBy(f => NativeManifestLog.versionOf(f.getName).get)
-    val content = new String(java.nio.file.Files.readAllBytes(latest.toPath), "UTF-8")
-    val entries = NativeManifestLog.decode(content)
-    val stats = NativeManifestLog.decodeColStats(content)
+      .maxBy(f => VersionLog.versionOf(f.getName).get)
+    val snap = VersionLog.decode(
+      new String(java.nio.file.Files.readAllBytes(latest.toPath), "UTF-8"))
+    val entries = snap.entries
+    val stats = snap.colStats
     assert(entries.size >= 12, s"expected 12 committed files, got ${entries.size}")
     val missing = entries.map(_.name).filterNot(n =>
       stats.get(n).exists(_.contains("v")))
