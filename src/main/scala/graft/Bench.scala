@@ -103,14 +103,13 @@ object Bench {
       .config("spark.sql.extensions", "graft.remote.GraftExtensions")
       .config("spark.sql.warehouse.dir", graft.core.TempDirs.create("graft_wh_"))
       .getOrCreate()
-    // SPARK_GRAFT_STATESTORE=rocksdb: run the whole bench under
-    // graft's state-store alias (StreamOps.applyStateStoreConf
-    // resolves it when each stream starts, on its isolated session
-    // clone) — the A/B knob behind SCALE.md's RocksDB-vs-heap
-    // per-query cost table (r13 judge ask #5). Unset = the default
+    // SPARK_GRAFT_STATESTORE=rocksdb: run the whole bench on Spark's
+    // RocksDB state store provider — the A/B knob behind SCALE.md's
+    // RocksDB-vs-heap per-query cost table. Unset = the default
     // HDFS-backed provider, as every round bench runs.
-    sys.env.get("SPARK_GRAFT_STATESTORE").foreach(v =>
-      spark.conf.set("spark.graft.streaming.stateStore", v))
+    if (sys.env.get("SPARK_GRAFT_STATESTORE").exists(_.trim.equalsIgnoreCase("rocksdb")))
+      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     spark.sparkContext.setLogLevel("WARN")
     graft.remote.GraftServer.quietMetastoreLogs()
 

@@ -320,8 +320,7 @@ class GraftSession(val spark: SparkSession,
       case Some(Unfreeze) => frozen0 = false; "ok: session unfrozen"
       case Some(AlterSystem("SHUTDOWN")) =>
         // only THIS session's queries, stopped through their handles
-        // (see ownedQueries — handle queries live on isolated session
-        // clones, invisible to this session's spark.streams)
+        // (see ownedQueries)
         val mine = ownedQueries.values.filter(_._1())
         mine.foreach(h => try h._2() catch { case scala.util.control.NonFatal(_) => () })
         ownedQueries.clear() // stopped or already dead — drop the ids
@@ -456,14 +455,10 @@ class GraftSession(val spark: SparkSession,
     Lowering.lower(stmt.copy(orderBy = Seq.empty), streamTable, compat, customAggs.toMap)
   }
 
-  /** Streaming queries started by THIS session (the SparkSession's
-    * registry is global; lifecycle ops must not cross sessions). */
-  // queryId → (isActive, stop) for THIS session's continuous queries.
-  // Stopping goes through the handle, not spark.streams.active: since
-  // r14 StreamHandle starts its query on an ISOLATED session clone
-  // (state-store alias resolution must not mutate the shared conf), so
-  // the query is registered in the CLONE's StreamingQueryManager and a
-  // spark.streams lookup here would silently miss it.
+  /** Streaming queries started by THIS session: queryId → (isActive,
+    * stop). The SparkSession's StreamingQueryManager is shared by every
+    * GraftSession built on it, so lifecycle ops go through this
+    * registry and the handles, never `spark.streams.active`. */
   private val ownedQueries =
     TrieMap.empty[java.util.UUID, (() => Boolean, () => Unit)]
 
@@ -477,7 +472,7 @@ class GraftSession(val spark: SparkSession,
       if (stmt.groupBy.nonEmpty && stmt.windowBy.isEmpty)
         org.apache.spark.sql.streaming.OutputMode.Update()
       else org.apache.spark.sql.streaming.OutputMode.Append()
-    val h = graft.streaming.StreamHandle.start(spark, plan, mode, checkpoint)
+    val h = graft.streaming.StreamHandle.start(plan, mode, checkpoint)
     ownedQueries.put(h.queryId, (() => h.isActive, () => h.stop()))
     h
   }

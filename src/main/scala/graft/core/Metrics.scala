@@ -78,7 +78,7 @@ object Metrics {
     try {
       val on = new ObjectName(s"graft.metrics:type=$kind,name=$name")
       if (!mbs.isRegistered(on)) mbs.registerMBean(bean, on)
-    } catch { case _: Throwable => () } // JMX publication is best-effort
+    } catch { case scala.util.control.NonFatal(_) => () } // JMX publication is best-effort
 
   def timer(name: String): Timer =
     timers.computeIfAbsent(name, n => { val t = new Timer(n); jmxRegister("Timer", n, t); t })

@@ -19,7 +19,6 @@ import graft.ops.Profile
   *                                        "name<TAB>idMin<TAB>idMax<TAB>rowCount" per
   *                                        file, then #txn, #colstats and #schema lines
   *   <path>/_versions/v{N}.claim          exclusive commit claim for version N
-  *   <path>/streamed/                     commit-time links of files/ for stream readers
   *   <path>/_schema/                      zero-row parquet schema anchor
   *   <path>/_pending_revert               journaled rollback target, if any
   *
@@ -28,7 +27,8 @@ import graft.ops.Profile
   * a half-written table. Readers resolve the latest manifest at scan
   * time and keep reading that snapshot even while writers commit —
   * single-table snapshot isolation, the minimal parquet-only version of
-  * what a transactional table format (Delta/Iceberg) provides.
+  * what a transactional table format (Delta/Iceberg) provides. Stream
+  * readers tail the same log (see `readStream`).
   *
   * Appends are the hot path (the reference's 100k objects/s insert
   * claim): executor-parallel columnar writes of NEW files plus one
@@ -62,8 +62,6 @@ object TableStore {
 
 final class TableStore(val spark: SparkSession, val path: String, val idCol: String) {
   private val filesDir = s"$path/files"
-  // commit-time mirror of files/ for streaming readers — see readStream
-  private val streamedDir = s"$path/streamed"
   private val versionsDir = s"$path/${VersionLog.dirName}"
   /** Schema of the last written/initialized rows, recorded at this
     * store's next commit (None before any write on a reopened table:
@@ -184,7 +182,7 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
   private def readFiles(entries: Seq[FileEntry], schema: Option[StructType] = None)
       : DataFrame = {
     val reader = schema.fold(spark.read)(s => spark.read.schema(s))
-    if (entries.nonEmpty) reader.parquet(entries.map(e => s"$filesDir/${e.name}"): _*)
+    if (entries.nonEmpty) reader.parquet(entries.map(e => filePath(e.name)): _*)
     else if (fs.exists(new Path(schemaDir)))
       reader.parquet(schemaDir) // zero rows, schema preserved
     // legacy committed-empty fallback — the requested schema must
@@ -204,119 +202,35 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
     * commits do not disturb this DataFrame. */
   def read: DataFrame = readAll(latest().getOrElse(throw noVersion)._2)
 
-  /** Streaming scan of the store: backlog (files already committed)
-    * then tail (each append's new files arrive as a micro-batch) —
-    * the reference's table-is-a-queue duality (SELECT STREAM on a
-    * mutable table) rendered as a file stream source.
-    *
-    * The source streams `streamed/`, a commit-time mirror of files/:
-    * writeFiles renames data into files/ BEFORE the manifest commit,
-    * so a file source pointed straight at files/ could deliver rows
-    * from files that never commit — a crashed append, or the orphans
-    * appendOnce/upsertOnce/replaceOnce delete after losing the
-    * idempotence race. streamed/ is populated (hardlink, or copy on
-    * non-local filesystems) only INSIDE commit, after the manifest
-    * rename succeeds, so only committed files are ever visible to a
-    * streaming reader. Commits from any graft process reconcile the
-    * mirror (shared storage), and readStream itself reconciles the
-    * backlog at attach, which also repairs a crash between manifest
-    * rename and link.
+  /** Streaming scan of the store: the committed snapshot as backlog,
+    * then each later commit's new files — the reference's
+    * table-is-a-queue duality (SELECT STREAM on a mutable table). The
+    * source ([[StoreSourceProvider]]) reads the version log: its offset
+    * is the committed version, so only committed files are ever
+    * delivered, each commit arrives whole inside one micro-batch, and a
+    * query resumes from its checkpoint's version. A checkpointed version
+    * that vacuum has dropped fails with the version named.
     *
     * CONTRACT: append-only while a streaming reader is attached —
-    * compact/upsert/delete rewrite rows into NEW file names, which a
-    * file source would re-deliver (the same caveat that makes Delta
-    * route CDC readers through the commit log instead). Reads under
-    * the committed schema, so evolved appends surface uniformly.
-    *
-    * CHECKPOINT COMPATIBILITY: the source path moved from files/ to
-    * streamed/ in round 9. A file-source checkpoint records consumed
-    * paths VERBATIM, so a durable checkpoint created against the old
-    * files/ path does not cover streamed/ — resuming it re-delivers
-    * the entire backlog as "new" files (duplicates downstream). Any
-    * checkpoint predating the mirror must be discarded and the query
-    * restarted fresh (or the sink deduplicated by key for one run).
-    * Pass the query's checkpoint dir to [[readStream(checkpointLocation*]]
-    * and the hazard fails LOUDLY up front instead of duplicating:
-    * [[validateStreamCheckpoint]] refuses any checkpoint whose source
-    * log references this store's files/ path. readStream stamps
-    * `streamed/_source_v2` as the layout-generation marker. */
-  def readStream: DataFrame = readStream(None)
-
-  /** [[readStream]] with the resuming query's checkpoint directory:
-    * validates the checkpoint against the current source layout before
-    * handing out the source (see CHECKPOINT COMPATIBILITY above). */
-  def readStream(checkpointLocation: Option[String]): DataFrame = {
-    checkpointLocation.foreach(validateStreamCheckpoint)
-    val f = fs
-    val snap = TableStore.commitLock(path).synchronized {
-      val s = latest(f).getOrElse(throw noVersion)._2
-      f.mkdirs(new Path(filesDir)) // a fresh store streams an empty backlog
-      f.mkdirs(new Path(streamedDir))
-      // generation marker: names the layout this source reads (pre-r9
-      // checkpoints recorded files/ paths). pathGlobFilter keeps it out
-      // of the data stream.
-      val marker = new Path(s"$streamedDir/_source_v2")
-      if (!f.exists(marker)) f.create(marker, true).close()
-      reconcileStreamed(f, s.entries)
-      s
-    }
-    val schema = snap.schema.getOrElse(readFiles(snap.entries).schema)
-    spark.readStream.schema(schema)
-      .option("pathGlobFilter", "*.parquet")
-      .parquet(streamedDir)
+    * compact/upsert/delete rewrite rows into NEW file names, which the
+    * source would re-deliver (the same caveat that makes Delta route
+    * CDC readers through the change feed instead). Reads under the
+    * schema committed when readStream is called. */
+  def readStream: DataFrame = {
+    val snap = latest().getOrElse(throw noVersion)._2
+    spark.readStream.format(classOf[StoreSourceProvider].getName)
+      .schema(snap.schema.getOrElse(readAll(snap).schema))
+      .load(path)
   }
 
-  /** Refuse a stream checkpoint created against the pre-mirror files/
-    * source layout. A FileStreamSource checkpoint records consumed
-    * paths VERBATIM under `<ckpt>/sources/<i>/`; if any recorded path
-    * points into this store's files/ directory the checkpoint predates
-    * the streamed/ mirror and a resume would re-deliver the whole
-    * backlog as "new" files. Fail loudly with the remediation instead. */
-  def validateStreamCheckpoint(checkpointDir: String): Unit = {
-    val f = fs
-    val srcRoot = new Path(s"$checkpointDir/sources")
-    if (!f.exists(srcRoot)) return // fresh checkpoint: nothing recorded yet
-    val filesAbs = new Path(filesDir).toUri.getPath
-    val stale = new scala.collection.mutable.ArrayBuffer[String]()
-    val it = f.listFiles(srcRoot, true)
-    while (it.hasNext && stale.isEmpty) {
-      val st = it.next()
-      if (st.isFile) {
-        val in = f.open(st.getPath)
-        val text =
-          try {
-            val bos = new java.io.ByteArrayOutputStream()
-            org.apache.hadoop.io.IOUtils.copyBytes(in, bos, 8192, false)
-            bos.toString("UTF-8")
-          } finally in.close()
-        if (text.contains(s"$filesAbs/")) stale += st.getPath.toString
-      }
-    }
-    if (stale.nonEmpty)
-      throw new IllegalStateException(
-        s"stream checkpoint at $checkpointDir was created against this " +
-        s"store's OLD files/ source layout (recorded path under $filesAbs " +
-        s"in ${stale.head}); the source moved to streamed/ — resuming " +
-        "would re-deliver the entire backlog as duplicates. Discard the " +
-        "checkpoint and restart the query fresh (or deduplicate the sink " +
-        "by key for one run).")
-  }
-
-  /** Mirror every committed file into streamed/ (no-op until a stream
-    * reader has created the directory). Idempotent: an existing link
-    * is left alone. */
-  private def reconcileStreamed(f: FileSystem, entries: Seq[FileEntry]): Unit = {
-    val sd = new Path(streamedDir)
-    if (!f.exists(sd)) return
-    val present = f.listStatus(sd).map(_.getPath.getName).toSet
-    entries.filterNot(e => present.contains(e.name)).foreach(e => linkFile(f, e.name, streamedDir))
-  }
+  /** Path of data file `name`. */
+  private[core] def filePath(name: String): String = s"$filesDir/$name"
 
   /** Hardlink data file `name` from files/ into `dir` — zero data
     * movement on a local FS; byte copy elsewhere. An existing target
     * is left alone. */
   private def linkFile(f: FileSystem, name: String, dir: String): Unit = {
-    val src = new Path(s"$filesDir/$name")
+    val src = new Path(filePath(name))
     val dst = new Path(s"$dir/$name")
     if (f.getScheme == "file")
       try java.nio.file.Files.createLink(
@@ -363,7 +277,7 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
   def readVersion(version: Long): DataFrame =
     readAll(snapshotOf(version)) // the schema AS COMMITTED THEN, not today's
 
-  private def snapshotOf(version: Long): Snapshot = {
+  private[core] def snapshotOf(version: Long): Snapshot = {
     val p = new Path(s"$versionsDir/${VersionLog.fileName(version)}")
     if (!fs.exists(p))
       throw new IllegalArgumentException(
@@ -633,9 +547,6 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
       }
     }
     val entries = committed.get.entries
-    // the commit point has passed — surface this version's files to any
-    // attached streaming reader (no-op unless streamed/ exists)
-    reconcileStreamed(f, entries)
     // drop ONLY the stats this version committed: with two concurrent
     // writers on one store, a blanket clear() here would discard the
     // other writer's pending per-file stats before its commit, leaving
@@ -1356,13 +1267,6 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
         f.listStatus(new Path(filesDir)).toSeq
           .filterNot(s => live.contains(s.getPath.getName))
           .filter(_.getModificationTime <= cutoff) // inclusive: graceMs=0 means clean everything dead
-          .foreach(s => f.delete(s.getPath, false))
-      // streamed/ mirror entries dead in every retained manifest go
-      // too, or a FRESH stream reader's backlog would include them
-      if (f.exists(new Path(streamedDir)))
-        f.listStatus(new Path(streamedDir)).toSeq
-          .filterNot(s => live.contains(s.getPath.getName))
-          .filterNot(_.getPath.getName == "_source_v2") // layout marker, not data
           .foreach(s => f.delete(s.getPath, false))
     }
 }

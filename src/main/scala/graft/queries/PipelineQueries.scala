@@ -2056,7 +2056,7 @@ object PipelineQueries {
         }
         rows.toDF("j", "c", "cent", "ncent").coalesce(1)
           .write.mode("overwrite").parquet(s"$aux/pq_codebook.parquet")
-      } catch { case e: Throwable =>
+      } catch { case scala.util.control.NonFatal(e) =>
         System.err.println(s"[graft] oracle aux write pq_codebook failed (gate continues): ${e.getMessage}")
       }
     }
@@ -2138,7 +2138,7 @@ object PipelineQueries {
           .map { case (c, i) => (i, c.toSeq) }.toSeq.toDF("cell", "cent")
           .coalesce(1).write.mode("overwrite")
           .parquet(s"$aux/$name.parquet")
-      } catch { case e: Throwable =>
+      } catch { case scala.util.control.NonFatal(e) =>
         System.err.println(s"[graft] oracle aux write $name failed (gate continues): ${e.getMessage}")
       }
     }

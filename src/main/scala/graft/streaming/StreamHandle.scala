@@ -1,7 +1,7 @@
 package graft.streaming
 
 import java.util.concurrent.LinkedBlockingQueue
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 
 /** Client-facing stream result handle mirroring the reference's
@@ -52,22 +52,12 @@ object StreamHandle {
     * queue. `checkpoint` (optional) enables resume across handles — the
     * reference's continue-from-last-position. `capacity` matches the
     * reference's StreamQueue bound (sql/StreamQueue.java:44). */
-  def start(spark: SparkSession, stream: DataFrame, mode: OutputMode,
+  def start(stream: DataFrame, mode: OutputMode,
             checkpoint: Option[String] = None,
             triggerMs: Long = 100L,
             capacity: Int = 10000): StreamHandle = {
     val queue = new LinkedBlockingQueue[Row](capacity)
-    // graft rocksdb state-store alias → provider conf, resolved on an
-    // ISOLATED session copy (r13 advice; same pattern as
-    // StreamOps.runToMemory): applying it to the caller's session
-    // would permanently mutate the shared conf, silently redirecting
-    // every NON-graft stream started later on that session onto
-    // RocksDB. The clone carries all runtime conf, the query starts
-    // under it, and the provider is baked into the query at start —
-    // the caller's session is never touched.
-    val iso = org.apache.spark.sql.graft.CatalystBridge.isolatedCopy(spark)
-    StreamOps.applyStateStoreConf(iso)
-    var w = org.apache.spark.sql.graft.CatalystBridge.withSession(stream, iso).writeStream
+    var w = stream.writeStream
       .outputMode(mode)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         // toLocalIterator keeps at most one partition's rows in driver

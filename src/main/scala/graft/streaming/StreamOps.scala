@@ -16,18 +16,6 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object StreamOps {
 
-  /** Stream source over a parquet-backed table directory — the
-    * `SELECT STREAM` scan (reference S5: sql/SQLCursor.java:339-430).
-    * Schema is taken from a batch peek (file streams need it declared). */
-  def readTableStream(spark: SparkSession, dir: String, name: String): DataFrame =
-    graft.core.Tables.loadStream(spark, dir, name)
-
-  /** C2 — stream filter/projection: identical DataFrame ops as batch;
-    * Structured Streaming incrementalizes them. */
-  def filterProject(stream: DataFrame, condition: org.apache.spark.sql.Column,
-                    cols: Seq[org.apache.spark.sql.Column]): DataFrame =
-    stream.filter(condition).select(cols: _*)
-
   /** C3 — tumbling aggregation. The reference emits a group when the
     * id-ordered stream's key changes (sql/SQLGroupContainer.java:68-118);
     * Spark aggregates each key across the whole stream and revises in
@@ -340,36 +328,6 @@ object StreamOps {
     q.awaitTermination()
   }
 
-  /** Graft-level state-store selector (r12 judge ask #3): set the
-    * session conf `spark.graft.streaming.stateStore` to `rocksdb` and
-    * every graft-started stream's keyed state (dedupStream /
-    * heavyHitters / anomaly / throttle / count windows) runs on
-    * Spark's RocksDB state store provider — a local-disk LSM whose
-    * working set is block-cache-bounded, so 100 TB-scale keyspaces
-    * stop being executor-heap-bound. Unset (or `hdfs`) keeps the
-    * default in-memory+HDFS-backed provider: the right choice for
-    * small state, with no per-batch RocksDB commit latency. Resolved
-    * when a stream STARTS (the provider is baked into the query's
-    * checkpoint; switching mid-session affects later streams only).
-    * A providerClass explicitly set to a NON-DEFAULT class wins — the
-    * alias only fills the conf while it still holds Spark's default
-    * (getOption surfaces the default, so "unset" is indistinguishable
-    * from "explicitly the default"; both defer to the alias). Both
-    * graft start paths (runToMemory and StreamHandle.start) resolve
-    * the alias on an ISOLATED session clone (r13 advice), so the
-    * shared session conf is never mutated and non-graft streams
-    * started later on the same session keep their own provider. */
-  private[graft] def applyStateStoreConf(s: SparkSession): Unit = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val cur = s.conf.getOption(key)
-    val want = s.conf.getOption("spark.graft.streaming.stateStore")
-      .map(_.trim.toLowerCase)
-    if (want.contains("rocksdb") &&
-        cur.forall(_.endsWith("HDFSBackedStateStoreProvider")))
-      s.conf.set(key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-  }
-
   /** Run a streaming DataFrame to a memory sink until the source is
     * drained; returns the result table. Deterministic harness for the
     * correctness gate and tests (the production path is
@@ -377,31 +335,22 @@ object StreamOps {
   def runToMemory(spark: SparkSession, stream: DataFrame, name: String,
                   mode: OutputMode): DataFrame = {
     // Size the state shuffle to the workload: each state partition is a
-    // RocksDB/HDFS store instance with per-batch commit overhead; a
-    // drained gate query with small keyspaces doesn't need the session's
-    // scan parallelism. Cap 8 (r14, was 4): at the 10× bench corpus the
-    // stateful micro-batch is compute-bound, not commit-bound — raising
-    // the cap cut q_stream_session's 10×-scale wall ~20% while the
-    // per-batch commit cost on the many tiny gate streams stays in the
-    // tens of milliseconds (tmpfs checkpoints). The capped conf lives on
-    // an ISOLATED newSession so a concurrent batch query on `spark`
-    // never observes it (the partition count is baked into the fresh
-    // checkpoint; production streams with large keyspaces set their own
-    // session conf).
+    // state store instance with per-batch commit overhead, and a drained
+    // gate query with small keyspaces doesn't need the session's scan
+    // parallelism. Cap 8: at the 10× bench corpus the stateful
+    // micro-batch is compute-bound, and 8 cut q_stream_session's wall
+    // ~20% against 4 while the per-batch commit cost of the many tiny
+    // gate streams stays in the tens of milliseconds. The capped conf
+    // lives on an ISOLATED session copy so a concurrent batch query on
+    // `spark` never observes it (the partition count is baked into the
+    // fresh checkpoint).
     val iso = org.apache.spark.sql.graft.CatalystBridge.isolatedCopy(spark)
     val key = "spark.sql.shuffle.partitions"
-    // cap conf-tunable for scale A/Bs (r18): spark.graft.stream.statePartitions,
-    // default the measured 8 (r14 measured 4→8 ~20% at the 10× corpus;
-    // the r17 8→16 A/B was swamped by box load and is re-run quiet in r18)
-    val cap = spark.conf.getOption("spark.graft.stream.statePartitions")
-      .flatMap(_.toIntOption).getOrElse(8)
-    iso.conf.set(key,
-      math.min(spark.conf.get(key).toIntOption.getOrElse(cap), cap).toString)
+    iso.conf.set(key, math.min(spark.conf.get(key).toIntOption.getOrElse(8), 8).toString)
     // drain-once harness: the checkpoint is throwaway, so put its many
     // tiny offset/WAL/state-delta writes on tmpfs and retain the
     // minimum batch history — ~0.4s/batch of fsync latency at sf0.1
     iso.conf.set("spark.sql.streaming.minBatchesToRetain", "2")
-    applyStateStoreConf(iso) // graft rocksdb alias → provider conf
     val ckpt = graft.core.TempDirs.createFast("graft_ckpt_")
     val q = org.apache.spark.sql.graft.CatalystBridge.withSession(stream, iso)
       .writeStream
@@ -417,41 +366,20 @@ object StreamOps {
     iso.table(name)
   }
 
-  /** A7/C4 — count-based sliding window over an ordered stream
-    * (`WINDOW BY col INTERVAL = n`, sql/SQLGroupContainer.java:120-158):
-    * keep the last n rows; once full, emit one aggregate row per
-    * arriving row. Not native to Structured Streaming → stateful
-    * flatMapGroupsWithState with a bounded ring buffer.
-    *
-    * `key` partitions the stream; the reference's single global window
-    * is `_ => 0L`. At scale, window per user/entity key — state stays
-    * bounded at n rows per key and the shuffle distributes keys across
-    * executors. Rows must arrive in `orderBy` order across triggers
-    * (the reference assumes the same: monotonic @GeneratedValue ids). */
-  def slidingCountWindow[T, K, O](ds: Dataset[T], n: Int)(key: T => K)(orderBy: T => Long)(
-      emit: Seq[T] => O)(implicit ek: Encoder[K], et: Encoder[T], eo: Encoder[O],
-      etup: Encoder[(K, T)], ebuf: Encoder[Seq[T]]): Dataset[O] = {
-    ds.groupByKey(key)
-      .flatMapGroupsWithState[Seq[T], O](OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: K, rows: Iterator[T], state: GroupState[Seq[T]]) =>
-          var buf = state.getOption.getOrElse(Seq.empty[T])
-          val out = scala.collection.mutable.ArrayBuffer.empty[O]
-          rows.toSeq.sortBy(orderBy).foreach { r =>
-            buf = (buf :+ r).takeRight(n)
-            if (buf.size == n) out += emit(buf)
-          }
-          state.update(buf)
-          out.iterator
-      }
-  }
-
   /** One aggregate of the count window's select list:
     * func ∈ COUNT|SUM|MIN|MAX|AVG|LAST|PLAIN (PLAIN = current row's value). */
   final case class WindowAggSpec(func: String, in: String, out: String)
 
-  /** Row-typed count window used by the dialect's streaming lowering
-    * (`SELECT STREAM … WINDOW BY col INTERVAL = n`). Same semantics as
-    * `slidingCountWindow`, schema-driven instead of case-class-typed. */
+  /** A7/C4 — count-based sliding window over an ordered stream, the
+    * dialect's streaming lowering of `SELECT STREAM … WINDOW BY col
+    * INTERVAL = n` (sql/SQLGroupContainer.java:120-158): keep the last
+    * n rows per key; once full, emit one aggregate row per arriving
+    * row. Not native to Structured Streaming → stateful
+    * flatMapGroupsWithState with a bounded ring buffer. `keyCol`
+    * partitions the stream (None = the reference's single global
+    * window), so state stays bounded at n rows per key. Rows must arrive
+    * in `orderCol` order across triggers (the reference assumes the
+    * same: monotonic @GeneratedValue ids). */
   def slidingCountWindowRows(stream: DataFrame, orderCol: String, n: Int,
       specs: Seq[WindowAggSpec], keyCol: Option[String] = None): DataFrame = {
     import org.apache.spark.sql.types._

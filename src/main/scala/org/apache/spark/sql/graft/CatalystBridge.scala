@@ -31,4 +31,18 @@ object CatalystBridge {
     * clone are invisible to the original. */
   def isolatedCopy(s: org.apache.spark.sql.SparkSession): org.apache.spark.sql.SparkSession =
     s.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
+
+  /** Streaming DataFrame over the parquet files `paths` under `schema`,
+    * built the way Spark's FileStreamSource builds a micro-batch: a
+    * streaming LogicalRelation over a file relation, so column pruning
+    * and filter pushdown still reach the scan. */
+  def streamingParquet(s: org.apache.spark.sql.SparkSession, paths: Seq[String],
+                       schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.DataFrame = {
+    val cs = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val relation = org.apache.spark.sql.execution.datasources.DataSource(cs,
+      className = "parquet", paths = paths, userSpecifiedSchema = Some(schema))
+      .resolveRelation(checkFilesExist = false)
+    org.apache.spark.sql.classic.Dataset.ofRows(cs,
+      org.apache.spark.sql.execution.datasources.LogicalRelation(relation, isStreaming = true))
+  }
 }

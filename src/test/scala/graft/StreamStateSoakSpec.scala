@@ -5,42 +5,27 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.streaming.StreamOps
 
-/** RocksDB state store behind the graft alias (r12 judge ask #3):
-  * the default HDFS-backed provider keeps every keyed-state entry on
-  * executor heap, which cannot hold a 100 TB-scale keyspace; the
-  * selector `spark.graft.streaming.stateStore=rocksdb` moves
-  * graft-started streams onto Spark's RocksDB provider. This spec
-  * proves (1) the alias wiring (and that an explicit providerClass
-  * wins), (2) a SOAK: a 300k-distinct-key dedup state across
-  * micro-batches actually running ON RocksDB (provider-specific
-  * progress metrics present) with exact results, (3) provider
-  * equivalence: the same stateful query emits identical results under
-  * both providers — the state store is an execution detail, never a
-  * semantics change. */
+/** RocksDB state store for graft's stateful streams: the default
+  * HDFS-backed provider keeps every keyed-state entry on executor heap,
+  * which cannot hold a 100 TB-scale keyspace; Spark's
+  * `spark.sql.streaming.stateStore.providerClass` moves them onto the
+  * RocksDB provider. This spec proves (1) a SOAK: a 300k-distinct-key
+  * dedup state across micro-batches actually running ON RocksDB
+  * (provider-specific progress metrics present) with exact results,
+  * (2) provider equivalence: the same stateful query emits identical
+  * results under both providers — the state store is an execution
+  * detail, never a semantics change. */
 class StreamStateSoakSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
   private def cloned() =
     org.apache.spark.sql.graft.CatalystBridge.isolatedCopy(spark)
-
-  test("state-store alias: rocksdb resolves; explicit providerClass wins") {
-    val s = cloned()
-    s.conf.set("spark.graft.streaming.stateStore", "rocksdb")
-    StreamOps.applyStateStoreConf(s)
-    assert(s.conf.get("spark.sql.streaming.stateStore.providerClass")
-      .contains("RocksDBStateStoreProvider"))
-    val s2 = cloned()
-    s2.conf.set("spark.sql.streaming.stateStore.providerClass", "x.Custom")
-    s2.conf.set("spark.graft.streaming.stateStore", "rocksdb")
-    StreamOps.applyStateStoreConf(s2)
-    assert(s2.conf.get("spark.sql.streaming.stateStore.providerClass") == "x.Custom",
-      "an explicitly-set providerClass must win over the alias")
-  }
+  private val providerKey = "spark.sql.streaming.stateStore.providerClass"
+  private val rocksDb = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   test("soak: 300k-key cross-batch dedup state runs ON RocksDB, exact results") {
     val s = cloned()
-    s.conf.set("spark.graft.streaming.stateStore", "rocksdb")
-    StreamOps.applyStateStoreConf(s)
+    s.conf.set(providerKey, rocksDb)
     import s.implicits._
     implicit val sql = s.sqlContext
     val mem = MemoryStream[Long]
@@ -74,10 +59,7 @@ class StreamStateSoakSpec extends AnyFunSuite {
   test("provider equivalence: heavy hitters emits identical results on both stores") {
     def run(useRocks: Boolean): Set[(Int, Long, String, Long)] = {
       val s = cloned()
-      if (useRocks) {
-        s.conf.set("spark.graft.streaming.stateStore", "rocksdb")
-        StreamOps.applyStateStoreConf(s)
-      }
+      if (useRocks) s.conf.set(providerKey, rocksDb)
       import s.implicits._
       implicit val sql = s.sqlContext
       val mem = MemoryStream[String]
