@@ -18,7 +18,10 @@ import org.apache.spark.storage.StorageLevel
   */
 object Process {
 
-  final case class Result(processed: Long, retained: DataFrame)
+  /** `consumed` is the cached frame of rows the processor consumed;
+    * `retained` reads it, so the caller unpersists `consumed` once it
+    * no longer needs `retained`. */
+  final case class Result(processed: Long, retained: DataFrame, consumed: Dataset[Row])
 
   /** Run the processor over `table`.
     *
@@ -37,7 +40,7 @@ object Process {
           table.join(consumed.select(col(id)), Seq(id), "left_anti")
         case None => table.exceptAll(consumed)
       }
-    Result(nProcessed, retained)
+    Result(nProcessed, retained, consumed)
   }
 
   /** Execute the callback on every row matching the condition, returning

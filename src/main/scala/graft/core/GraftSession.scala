@@ -481,7 +481,10 @@ class GraftSession(val spark: SparkSession,
 
   /** Batch PROCESS: run the EventProcessor over matching rows of the
     * statement's table; delete semantics apply to the returned
-    * DataFrame (and to the TableStore if one backs the table). */
+    * DataFrame (and to the TableStore if one backs the table). The
+    * caller releases the result's cached `consumed` rows
+    * (`res.consumed.unpersist()`) once it is done with `retained`,
+    * which reads them. */
   def executeProcess(sql: String, processor: graft.cep.EventProcessor,
                      idCol: Option[String] = None): graft.cep.Process.Result = {
     val stmt = Parser.parse(sql)

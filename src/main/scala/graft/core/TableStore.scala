@@ -4,7 +4,8 @@ import java.util.UUID
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, IntegerType, LongType, MapType, ShortType, StructType}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, IntegerType, LongType, MapType, ShortType, StringType, StructType}
 import graft.cep.{EventProcessor, Process}
 import graft.ops.Profile
 
@@ -31,9 +32,19 @@ import graft.ops.Profile
   * readers tail the same log (see `readStream`).
   *
   * Appends are the hot path (the reference's 100k objects/s insert
-  * claim): executor-parallel columnar writes of NEW files plus one
-  * manifest commit — existing data is never rewritten, matching
-  * @NoCheck fast-insert semantics (persistent/Table.java:577-584).
+  * claim): columnar writes of NEW files plus one manifest commit —
+  * existing data is never rewritten, matching @NoCheck fast-insert
+  * semantics (persistent/Table.java:577-584). Two rules keep a keyed
+  * write at one Spark job and a point read at one job:
+  *   - a driver-local batch (optimized plan is a `LocalRelation`:
+  *     `TypedTable.persist(Seq)`, remote INSERT) is written as
+  *     ⌈estimated size ÷ `spark.sql.files.maxPartitionBytes`⌉ files —
+  *     one file under Spark's scan-split size — and its keys are taken
+  *     on the driver, without a job; any other frame keeps its own
+  *     partitioning and the distributed key path;
+  *   - every snapshot read is under the committed schema, so no read
+  *     infers a schema from a data file (a job, and the wrong schema on
+  *     an evolved table, whose rewrites would drop the added columns).
   *
   * Keyed mutations prune at file level: manifests carry per-file id
   * min/max (integral ids), so `upsert`/`deleteKeys` rewrite only files
@@ -179,8 +190,7 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
   /** Read `entries` under `schema` when one is committed: parquet
     * scans given an explicit schema surface columns a file predates
     * as nulls — additive evolution needs NO rewrite of old files. */
-  private def readFiles(entries: Seq[FileEntry], schema: Option[StructType] = None)
-      : DataFrame = {
+  private def readFiles(entries: Seq[FileEntry], schema: Option[StructType]): DataFrame = {
     val reader = schema.fold(spark.read)(s => spark.read.schema(s))
     if (entries.nonEmpty) reader.parquet(entries.map(e => filePath(e.name)): _*)
     else if (fs.exists(new Path(schemaDir)))
@@ -631,7 +641,7 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
         val cum = byMaxDesc.scanLeft(0L)(_ + _.rows.get).tail
         val prefix = byMaxDesc.take(cum.indexWhere(_ >= n) + 1)
         val bound = prefix.map(_.idMin.get).min
-        readFiles(entries.filter(_.idMax.get >= bound))
+        readFiles(entries.filter(_.idMax.get >= bound), snap.schema)
       }
     Some(scan.select(col(idCol))
       .orderBy(col(idCol).desc).limit(n.toInt)
@@ -761,8 +771,26 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
   /** Fast insert, no existence check (reference @NoCheck path): new
     * files + manifest commit, nothing rewritten. */
   def append(rows: DataFrame): Unit = Metrics.timer("persistInsertChunk").time {
-    val added = writeFiles(enforceSchema(rows, current.schema))
+    val enforced = enforceSchema(rows, current.schema)
+    val added = writeFiles(localBatch(enforced).getOrElse(enforced))
     commit(prev => prev.copy(entries = prev.entries ++ added))
+  }
+
+  /** A driver-local batch (its optimized plan is a `LocalRelation`)
+    * coalesced to ⌈estimated size ÷ `spark.sql.files.maxPartitionBytes`⌉
+    * partitions, i.e. files: one file under Spark's own scan-split size,
+    * where the local scan would split it into `defaultParallelism` small
+    * files. None for any other frame, which keeps its partitioning. */
+  private def localBatch(rows: DataFrame): Option[DataFrame] = {
+    val qe = rows.queryExecution
+    // only a plan over local leaves can optimize to one; others skip the optimizer
+    if (!qe.analyzed.collectLeaves().forall(_.isInstanceOf[LocalRelation])) None
+    else qe.optimizedPlan match {
+      case local: LocalRelation =>
+        val split = BigInt(qe.sparkSession.sessionState.conf.filesMaxPartitionBytes)
+        Some(rows.coalesce(((local.stats.sizeInBytes + split - 1) / split).max(1).toInt))
+      case _ => None
+    }
   }
 
   /** CHECKED append — the Delta table-constraints write contract: the
@@ -906,15 +934,37 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
   /** Key-merge of `rows` into `snap` — insert-or-update by id: the
     * files whose id range intersects the incoming keys, and their rows
     * with every incoming key replaced by the incoming row (pure inserts
-    * touch no file). */
+    * touch no file). A driver-local batch with an integral or string id
+    * takes its distinct non-null keys on the driver (the projection of
+    * a LocalRelation folds, so no job), prunes by their min/max and
+    * drops replaced rows with an IN filter; any other batch prunes by
+    * an aggregate and drops them with a left-anti join. Store rows with
+    * NULL ids are kept either way. */
   private def keyMerge(snap: Snapshot, rows0: DataFrame): (Seq[FileEntry], DataFrame) = {
     val rows = enforceSchema(rows0, snap.schema)
-    val (affected, _) = pruneByKeys(snap.entries, rows.select(col(idCol)))
+    val local = localBatch(rows)
+    val literalKeys = isIntegralId(rows) ||
+      rows.schema.fields.exists(f => f.name == idCol && f.dataType == StringType)
+    val (affected, dropReplaced) =
+      if (local.isDefined && literalKeys) {
+        val keys = rows.select(col(idCol)).collect().flatMap(r => Option(r.get(0))).distinct
+        val affected =
+          if (keys.isEmpty) Seq.empty
+          else if (!isIntegralId(rows)) snap.entries
+          else {
+            val ids = keys.map(_.asInstanceOf[Number].longValue())
+            snap.entries.filter(_.overlaps(ids.min, ids.max))
+          }
+        (affected, (old: DataFrame) => old.filter(col(idCol).isNull || !col(idCol).isin(keys: _*)))
+      } else {
+        val keys = rows.select(col(idCol))
+        (pruneByKeys(snap.entries, keys)._1,
+          (old: DataFrame) => old.join(keys, Seq(idCol), "left_anti"))
+      }
+    val batch = local.getOrElse(rows)
     val merged =
-      if (affected.isEmpty) rows
-      else readFiles(affected, Some(rows.schema))
-        .join(rows.select(col(idCol)), Seq(idCol), "left_anti")
-        .unionByName(rows)
+      if (affected.isEmpty) batch
+      else dropReplaced(readFiles(affected, Some(rows.schema))).unionByName(batch)
     (affected, merged)
   }
 
@@ -1037,14 +1087,14 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
     * manifest's file stats prune to the file(s) whose range covers the
     * key, then parquet row-group min/max prune within. */
   def find(id: Any): DataFrame = {
-    val entries = current.entries
+    val snap = current
     val pruned = id match {
       case n: Number =>
         val k = n.longValue()
-        entries.filter(_.overlaps(k, k))
-      case _ => entries
+        snap.entries.filter(_.overlaps(k, k))
+      case _ => snap.entries
     }
-    readFiles(pruned).filter(col(idCol) === lit(id))
+    readFiles(pruned, snap.schema).filter(col(idCol) === lit(id))
   }
 
   /** Range scan with manifest-level data skipping: only files whose
@@ -1059,8 +1109,8 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
     * `compact(clusterBy=id)` exists. Files without stats (non-integral
     * id, null ids) are conservatively always read. */
   def readRange(kmin: Long, kmax: Long): DataFrame = {
-    val entries = current.entries.filter(_.overlaps(kmin, kmax))
-    readFiles(entries)
+    val snap = current
+    readFiles(snap.entries.filter(_.overlaps(kmin, kmax)), snap.schema)
       .filter(col(idCol) >= lit(kmin) && col(idCol) <= lit(kmax))
   }
 
@@ -1110,7 +1160,8 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
     * driver (metadata-scale). Use deleteKeys for the stats-pruned
     * keyed path that avoids the find scan entirely. */
   def delete(condition: Column): Unit = {
-    val snapshot = current.entries
+    val snap = current
+    val snapshot = snap.entries
     if (snapshot.isEmpty) return
     // two evaluations of the predicate (find + rewrite) are only sound
     // when it is deterministic; a rand()/timestamp predicate would
@@ -1118,7 +1169,7 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
     // here the single-scan full rewrite is still available, so fall
     // back to it (one evaluation per row) instead of failing.
     if (!org.apache.spark.sql.graft.CatalystBridge.expression(condition).deterministic) {
-      val retained = readFiles(snapshot).filter(not(coalesce(condition, lit(false))))
+      val retained = readFiles(snapshot, snap.schema).filter(not(coalesce(condition, lit(false))))
       commitRewrite(snapshot, snapshot, writeFiles(retained))
       return
     }
@@ -1126,12 +1177,12 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
     // predicate reaches the parquet scan as a pushed filter and
     // row-group stats prune — Filter already drops NULL evaluations,
     // same row set, but Coalesce would not translate to a source filter
-    val matchedFiles = readFiles(snapshot)
+    val matchedFiles = readFiles(snapshot, snap.schema)
       .filter(condition).select(input_file_name().as("f")).distinct()
       .collect().map(_.getString(0)).toSet
     val affected = snapshot.filter(e => matchedFiles.exists(_.endsWith("/" + e.name)))
     if (affected.isEmpty) return // nothing matches: no new version
-    val retained = readFiles(affected).filter(not(coalesce(condition, lit(false))))
+    val retained = readFiles(affected, snap.schema).filter(not(coalesce(condition, lit(false))))
     commitRewrite(snapshot, affected, writeFiles(retained))
   }
 
@@ -1140,21 +1191,30 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
     * distributed — the PROCESS STREAM per-batch delete path). */
   def deleteKeys(keys: DataFrame): Unit = {
     val k = keys.select(col(idCol)).distinct()
-    val snapshot = current.entries
+    val snap = current
+    val snapshot = snap.entries
     val (affected, _) = pruneByKeys(snapshot, k)
     if (affected.isEmpty) return
-    val retained = readFiles(affected).join(k, Seq(idCol), "left_anti")
+    val retained = readFiles(affected, snap.schema).join(k, Seq(idCol), "left_anti")
     commitRewrite(snapshot, affected, writeFiles(retained))
   }
 
   /** PROCESS … WITHIN over this table: run the callback, persist the
     * post-delete state (reference: cluster-locked table rewrite —
-    * sql/SQLSelect.java:278-285). */
+    * sql/SQLSelect.java:278-285). The consumed rows' cache is released
+    * once the rewrite commits; the returned `retained` reads the
+    * committed files, so using it never re-runs the callback. */
   def process(condition: Column, processor: EventProcessor): Process.Result = {
-    val snapshot = current.entries
-    val res = Process.run(readFiles(snapshot), condition, processor, Some(idCol))
-    if (processor.delete()) commitRewrite(snapshot, snapshot, writeFiles(res.retained))
-    res
+    val snap = current
+    val res = Process.run(readFiles(snap.entries, snap.schema), condition, processor, Some(idCol))
+    try {
+      if (!processor.delete()) res
+      else {
+        val kept = writeFiles(res.retained)
+        commitRewrite(snap.entries, snap.entries, kept)
+        res.copy(retained = readFiles(kept, snap.schema))
+      }
+    } finally res.consumed.unpersist()
   }
 
   /** Retention truncation: remove all rows with id < cutoff. Files
@@ -1163,7 +1223,8 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
     * are rewritten — the @Threshold hot path stays O(1 file) per
     * enforcement instead of an O(table) rewrite. */
   def deleteBelowId(cutoff: Long): Unit = {
-    val snapshot = current.entries
+    val snap = current
+    val snapshot = snap.entries
     // whole-file drops require stats, and stats are only recorded for
     // null-free files (footerStats), so no NULL-id row is ever dropped
     // with a file; the straddling rewrite retains NULL ids explicitly
@@ -1174,7 +1235,7 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
     if (dropped.isEmpty && straddling.isEmpty) return
     val newFiles =
       if (straddling.isEmpty) Seq.empty
-      else writeFiles(readFiles(straddling)
+      else writeFiles(readFiles(straddling, snap.schema)
         .filter(col(idCol) >= cutoff || col(idCol).isNull))
     commitRewrite(snapshot, dropped ++ straddling, newFiles)
   }
@@ -1193,7 +1254,8 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
     * append hot path: appends stay O(batch), clustering restores
     * pruning precision off the hot path. */
   def compact(targetFiles: Int = 8, clusterBy: Seq[String] = Seq.empty): Unit = {
-    val snapshot = current.entries
+    val snap = current
+    val snapshot = snap.entries
     val n = math.max(targetFiles, 1)
     if (snapshot.isEmpty || (clusterBy.isEmpty && snapshot.size <= n)) return
     // clustered maintenance is idempotent: when the file count is
@@ -1206,7 +1268,7 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
           val ranges = snapshot.map(e => (e.idMin.get, e.idMax.get)).sorted
           ranges.zip(ranges.drop(1)).forall { case ((_, hi), (lo, _)) => hi < lo }
         }) return
-    val base = readFiles(snapshot)
+    val base = readFiles(snapshot, snap.schema)
     val packed =
       if (clusterBy.isEmpty) base.repartition(n)
       else base.repartitionByRange(n, clusterBy.map(col): _*)

@@ -52,7 +52,9 @@ final class TypedTable[T: Encoder](val spark: SparkSession, val store: TableStor
     * table get generated ids: strictly above every existing id, with
     * monotonically_increasing_id's partition-prefixed uniqueness — no
     * cross-executor coordination (reference: per-node id ranges,
-    * core/DistributedId.java:39). */
+    * core/DistributedId.java:39). With assigned ids a `Seq` is a
+    * driver-local batch: one Spark job, one new file under the
+    * scan-split size (TableStore). */
   def persist(objs: Seq[T]): Unit = persistDs(spark.createDataset(objs))
 
   // persistInsertChunk is timed at the TableStore layer (append/upsert),
