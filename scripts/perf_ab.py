@@ -15,7 +15,11 @@ time; the order flips from seed to seed (parent first on the first seed,
 change first on the next, ...). It then prints, per metric: the median of
 each side, the change/parent ratio, the parent's interquartile range, how
 many seed pairs the change won, and the metric's `BENCHMARK.json` bound,
-plus failed-op counts and the load average before and after.
+plus failed-op counts and the load average before and after. Each run's
+wall time (the whole `run.py` process: build check, input generation,
+setup and the timed pass) is printed with it, and per side the median
+and total wall, which is what a change does to a full benchmark check's
+time budget.
 
 Exit status: 0 when every run finished with 0 failed ops and no bounded
 metric's median is worse than its bound; 1 otherwise; 2 on bad usage.
@@ -29,6 +33,7 @@ import statistics
 import subprocess
 import sys
 import tempfile
+import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -74,15 +79,18 @@ def seeds(spec):
 
 
 def run(checkout, command, workload, seed, seconds, trace):
-    """One benchmark run; its final JSON line, or None when it crashed."""
+    """One benchmark run: its final JSON line (None when it crashed) and
+    its wall time in seconds."""
     cmd = [*command, "--workload", workload, "--seed", str(seed),
            "--seconds", str(seconds), "--trace", str(trace)]
+    t0 = time.monotonic()
     p = subprocess.run(cmd, cwd=checkout, capture_output=True, text=True)
+    wall = time.monotonic() - t0
     lines = p.stdout.strip().splitlines()
     if p.returncode != 0 or not lines:
         sys.stderr.write(p.stderr[-2000:])
-        return None
-    return json.loads(lines[-1])
+        return None, wall
+    return json.loads(lines[-1]), wall
 
 
 def quartiles(v):
@@ -116,12 +124,14 @@ def main():
     load_before = os.getloadavg()
 
     results = {"parent": [], "change": []}
+    walls = {"parent": [], "change": []}
     for i, seed in enumerate(seeds(a.seeds)):
         order = ["parent", "change"] if i % 2 == 0 else ["change", "parent"]
         for side in order:
-            r = run(dirs[side], bench["command"], a.workload, seed, seconds, a.trace)
+            r, wall = run(dirs[side], bench["command"], a.workload, seed, seconds, a.trace)
             results[side].append(r)
-            print(f"seed {seed} {side}: " + ("CRASHED" if r is None else
+            walls[side].append(wall)
+            print(f"seed {seed} {side}: wall {wall:.1f} s " + ("CRASHED" if r is None else
                   f"failed {r['failed']}/{r['attempted']} " + " ".join(
                       f"{k}={m['value']:.4g}" for k, m in sorted(r["metrics"].items()))),
                   flush=True)
@@ -135,7 +145,8 @@ def main():
           f"nproc {os.cpu_count()}; workload {a.workload}; seeds {a.seeds}; {seconds:g} s")
     for s in sides:
         print(f"{s}: {len(results[s])} runs, {crashed[s]} crashed, {wrong[s]} incorrect, "
-              f"{failed[s]} failed ops")
+              f"{failed[s]} failed ops; wall median {statistics.median(walls[s]):.1f} s, "
+              f"total {sum(walls[s]):.1f} s")
         ok &= crashed[s] == 0 and wrong[s] == 0 and failed[s] == 0
     pairs = [(p, c) for p, c in zip(results["parent"], results["change"]) if p and c]
     if not pairs:

@@ -3151,8 +3151,8 @@ object SparkEntry {
     * separator-wrapped symbols (sym → 0x1F+sym+0x1F, concatenated):
     * one greedy left-to-right non-overlapping merge pass is then
     * literally `replace(s, ⟨a⟩⟨b⟩, ⟨ab⟩)` — SQL replace is
-    * left-to-right non-overlapping, the exact fuse rule of the
-    * engine's compiled mergePass kernel and referenceLearn. A scan's
+    * left-to-right non-overlapping, the exact fuse rule of each pass
+    * of the engine's BpeKernel.mergeChain and referenceLearn. A scan's
     * best pair below minFreq=2 leaves its m-CTE empty, which empties
     * every later CTE — the engine's early stop falls out for free.
     * With `encode = true` the segmentation of the last NON-EMPTY

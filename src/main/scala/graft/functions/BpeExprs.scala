@@ -9,57 +9,52 @@ import org.apache.spark.sql.graft.CatalystBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Compiled kernels for the BPE trainer's two per-iteration inner
-  * loops (ops/Bpe.scala). The first spelling used Catalyst
-  * higher-order functions — an `aggregate` fold per dict word per
-  * merge and a `zip_with`-of-slices pair explode — which evaluate an
-  * interpreted lambda per array element outside whole-stage codegen
-  * and made q_bpe the 10×-bench's third-worst scaler. These kernels
-  * run the same algorithms as tight JVM loops behind single static
-  * calls; semantics are locked to `Bpe.referenceLearn` (the gate's
-  * cross-path identity check): a greedy left-to-right pass where a
-  * symbol fuses iff the LAST EMITTED symbol equals `left` and the
-  * current equals `right`.
+/** BPE kernels as tight JVM loops. `mergeChain` applies a rank-ordered
+  * merge list to one word's segmentation: the learner (ops/Bpe) calls
+  * it on its RDD rows, and `encode` through the [[BpeMergeChain]]
+  * expression. `adjacentPairs` is the pair explode behind
+  * [[AdjacentPairs]]. Merge semantics are locked to
+  * `Bpe.referenceLearn` (the gate's cross-path identity check): a
+  * greedy left-to-right pass where a symbol fuses iff the LAST
+  * EMITTED symbol equals `left` and the current equals `right`.
   */
 object BpeKernel {
 
-  /** One greedy merge pass: [..., a, b, ...] → [..., ab, ...],
-    * non-overlapping, left to right. Elements are cloned off the
-    * (possibly unsafe-backed) input buffer. */
-  def mergePass(syms: ArrayData, a: UTF8String, b: UTF8String): ArrayData = {
-    val n = syms.numElements()
-    val out = new Array[Any](n)
-    var m = 0 // emitted count
-    var i = 0
-    while (i < n) {
-      val cur = syms.getUTF8String(i)
-      if (m > 0 && out(m - 1).asInstanceOf[UTF8String].equals(a) && cur.equals(b)) {
-        out(m - 1) = UTF8String.concat(a, b)
-      } else {
-        out(m) = cur.clone()
-        m += 1
-      }
-      i += 1
-    }
-    new GenericArrayData(java.util.Arrays.copyOf(out.asInstanceOf[Array[AnyRef]], m))
+  /** The whole merge chain in rank order: per merge (lefts(r),
+    * rights(r)), one greedy left-to-right pass over the current
+    * segmentation. Returns a new array; `syms` is not modified. */
+  def mergeChain(syms: Array[UTF8String], lefts: Array[UTF8String],
+                 rights: Array[UTF8String]): Array[UTF8String] = {
+    val cur = syms.clone()
+    val len = fuse(cur, lefts, rights)
+    if (len == cur.length) cur else java.util.Arrays.copyOf(cur, len)
   }
 
-  /** The whole merge chain in rank order as ONE pass structure:
-    * per merge, a greedy pass over the current segmentation. Replaces
-    * |merges| chained expressions (and their per-merge array
-    * materializations in the plan) with a single call. */
-  def mergeChain(syms: ArrayData, lefts: Array[String], rights: Array[String]): ArrayData = {
-    val n0 = syms.numElements()
-    var cur = new Array[UTF8String](n0)
-    var len = n0
+  /** [[mergeChain]] over a Catalyst array<string> value. Elements are
+    * cloned off the (possibly unsafe-backed) input buffer. */
+  def mergeChain(syms: ArrayData, lefts: Array[UTF8String],
+                 rights: Array[UTF8String]): ArrayData = {
+    val n = syms.numElements()
+    val cur = new Array[UTF8String](n)
     var i = 0
-    while (i < n0) { cur(i) = syms.getUTF8String(i).clone(); i += 1 }
+    while (i < n) { cur(i) = syms.getUTF8String(i).clone(); i += 1 }
+    val len = fuse(cur, lefts, rights)
+    val out = new Array[Any](len)
+    i = 0
+    while (i < len) { out(i) = cur(i); i += 1 }
+    new GenericArrayData(out)
+  }
+
+  /** Applies the chain to `cur` in place; returns the new length. */
+  private def fuse(cur: Array[UTF8String], lefts: Array[UTF8String],
+                   rights: Array[UTF8String]): Int = {
+    var len = cur.length
     var r = 0
     while (r < lefts.length && len > 1) {
-      val a = UTF8String.fromString(lefts(r))
-      val b = UTF8String.fromString(rights(r))
+      val a = lefts(r)
+      val b = rights(r)
       var m = 0
-      i = 0
+      var i = 0
       while (i < len) {
         val s = cur(i)
         if (m > 0 && cur(m - 1).equals(a) && s.equals(b)) cur(m - 1) = UTF8String.concat(a, b)
@@ -69,10 +64,7 @@ object BpeKernel {
       len = m
       r += 1
     }
-    val out = new Array[Any](len)
-    i = 0
-    while (i < len) { out(i) = cur(i); i += 1 }
-    new GenericArrayData(out)
+    len
   }
 
   /** Adjacent (left, right) symbol pairs of a segmentation — the
@@ -93,27 +85,6 @@ object BpeKernel {
   }
 }
 
-case class BpeMergePass(child: Expression, left: String, right: String)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case _ => TypeCheckResult.TypeCheckFailure(s"$prettyName requires an array<string> column")
-  }
-  override def prettyName: String = "graft_bpe_merge"
-  @transient private lazy val aU = UTF8String.fromString(left)
-  @transient private lazy val bU = UTF8String.fromString(right)
-  override protected def nullSafeEval(input: Any): Any =
-    BpeKernel.mergePass(input.asInstanceOf[ArrayData], aU, bU)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val aRef = ctx.addReferenceObj("bpeLeft", aU, "org.apache.spark.unsafe.types.UTF8String")
-    val bRef = ctx.addReferenceObj("bpeRight", bU, "org.apache.spark.unsafe.types.UTF8String")
-    defineCodeGen(ctx, ev, c => s"graft.functions.BpeKernel.mergePass($c, $aRef, $bRef)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): BpeMergePass =
-    copy(child = newChild)
-}
-
 case class BpeMergeChain(child: Expression, lefts: Array[String], rights: Array[String])
     extends UnaryExpression {
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
@@ -122,11 +93,14 @@ case class BpeMergeChain(child: Expression, lefts: Array[String], rights: Array[
     case _ => TypeCheckResult.TypeCheckFailure(s"$prettyName requires an array<string> column")
   }
   override def prettyName: String = "graft_bpe_merge_chain"
+  @transient private lazy val leftsU = lefts.map(UTF8String.fromString)
+  @transient private lazy val rightsU = rights.map(UTF8String.fromString)
   override protected def nullSafeEval(input: Any): Any =
-    BpeKernel.mergeChain(input.asInstanceOf[ArrayData], lefts, rights)
+    BpeKernel.mergeChain(input.asInstanceOf[ArrayData], leftsU, rightsU)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val lRef = ctx.addReferenceObj("bpeLefts", lefts, "java.lang.String[]")
-    val rRef = ctx.addReferenceObj("bpeRights", rights, "java.lang.String[]")
+    val utf8s = "org.apache.spark.unsafe.types.UTF8String[]"
+    val lRef = ctx.addReferenceObj("bpeLefts", leftsU, utf8s)
+    val rRef = ctx.addReferenceObj("bpeRights", rightsU, utf8s)
     defineCodeGen(ctx, ev, c => s"graft.functions.BpeKernel.mergeChain($c, $lRef, $rRef)")
   }
   override protected def withNewChildInternal(newChild: Expression): BpeMergeChain =
@@ -152,8 +126,6 @@ case class AdjacentPairs(child: Expression)
 }
 
 object BpeFunctions {
-  def mergePass(syms: Column, left: String, right: String): Column =
-    CatalystBridge.column(BpeMergePass(CatalystBridge.expression(syms), left, right))
   def mergeChain(syms: Column, lefts: Array[String], rights: Array[String]): Column =
     CatalystBridge.column(BpeMergeChain(CatalystBridge.expression(syms), lefts, rights))
   def adjacentPairs(syms: Column): Column =

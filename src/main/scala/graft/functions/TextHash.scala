@@ -164,16 +164,15 @@ object TextHash {
     s
   }
 
-  /** Linear score from a PRECOMPUTED bucket array (as produced by
+  /** Linear score from a PRECOMPUTED bucket array (the values of
     * [[bucketArray]]): bias + Σ w[b_i]. Identical result to
     * [[bowScore]] over the source text (both drop empty tokens) —
-    * lets the perceptron's per-epoch scans sum cached ints instead of
+    * lets the perceptron's epochs sum cached ints instead of
     * re-tokenizing and re-hashing every document every epoch. */
-  def bowScoreBuckets(b: ArrayData, w: Array[Long], bias: Long): Long = {
-    val n = b.numElements()
+  def bowScoreBuckets(b: Array[Int], w: Array[Long], bias: Long): Long = {
     var s = bias
     var i = 0
-    while (i < n) { s += w(b.getInt(i)); i += 1 }
+    while (i < b.length) { s += w(b(i)); i += 1 }
     s
   }
 

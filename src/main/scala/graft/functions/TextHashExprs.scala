@@ -99,27 +99,6 @@ case class BowScore(child: Expression, dims: Int,
     copy(child = newChild)
 }
 
-/** [[BowScore]] from a precomputed bucket array (array<int>) — the
-  * perceptron's per-epoch hot path without re-tokenization. */
-case class BowScoreBuckets(child: Expression, weights: Array[Long], bias: Long)
-    extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(org.apache.spark.sql.types.IntegerType, _) => TypeCheckResult.TypeCheckSuccess
-    case _ => TypeCheckResult.TypeCheckFailure(s"$prettyName requires an array<int> column")
-  }
-  override def prettyName: String = "graft_bow_score_buckets"
-  override protected def nullSafeEval(input: Any): Any =
-    TextHash.bowScoreBuckets(input.asInstanceOf[ArrayData], weights, bias)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val wRef = ctx.addReferenceObj("bowWeights", weights, "long[]")
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.TextHash.bowScoreBuckets($c, $wRef, ${bias}L)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): BowScoreBuckets =
-    copy(child = newChild)
-}
-
 /** Agreeing-position count between two signature arrays — the
   * estimated-Jaccard numerator as one compiled call, keeping LSH
   * pair scoring inside whole-stage codegen (the HOF spelling it
@@ -286,8 +265,6 @@ object TextHashFunctions {
     CatalystBridge.column(BucketArray(CatalystBridge.expression(text), dims))
   def bowScore(text: Column, dims: Int, weights: Array[Long], bias: Long): Column =
     CatalystBridge.column(BowScore(CatalystBridge.expression(text), dims, weights, bias))
-  def bowScoreBuckets(buckets: Column, weights: Array[Long], bias: Long): Column =
-    CatalystBridge.column(BowScoreBuckets(CatalystBridge.expression(buckets), weights, bias))
   def sigAgree(a: Column, b: Column): Column =
     CatalystBridge.column(SigAgree(CatalystBridge.expression(a), CatalystBridge.expression(b)))
   def bandHashes(sig: Column, bands: Int, rows: Int): Column =

@@ -1,7 +1,9 @@
 package graft.ops
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.functions.{TextHash, TextHashFunctions}
 
 /** Distributed linear quality/domain classifier over hashed
@@ -12,12 +14,15 @@ import graft.functions.{TextHash, TextHashFunctions}
   *
   *   - features: token → floorMod(fnv1a(token), dims) — no vocabulary
   *     to build, no driver-side dictionary, dims is the only knob;
-  *   - training: BATCH perceptron. Each epoch scores every document
-  *     under the current weights (one compiled map-side kernel pass,
-  *     `BowScore` — no explode, no join), then aggregates one
-  *     per-bucket update Σ label over the misclassified docs' tokens
-  *     (one shuffle whose rows are (bucket, Σlabel) — at most `dims`
-  *     rows reach the driver, metadata scale);
+  *   - training: BATCH perceptron over an RDD of (label, bucket array)
+  *     rows, hashed once and persisted. Each epoch is ONE
+  *     `treeAggregate` job: every task scores its documents under the
+  *     current weights (shipped in the task closure) and folds a
+  *     `dims + 2` long array — the per-bucket Σ label over the
+  *     misclassified documents, the bias delta and the count of
+  *     correctly classified documents — which the driver applies. An
+  *     epoch builds no query plan, so nothing is analysed, staged or
+  *     code-generated per epoch;
   *   - ALL-INTEGER arithmetic: scores, weights, and updates are
   *     Longs, so the fit is bit-identical under any partitioning,
   *     any evaluation order, and any cluster size — unlike float
@@ -49,81 +54,84 @@ object Classifier {
     * correctly — the classic pocket algorithm, still all-integer and
     * still bit-identical to `referenceFit`. Ties keep the EARLIER
     * epoch (both paths scan epochs in order with a strict `>`).
-    * Stops early when an epoch's net update is zero. The input is
-    * localCheckpointed once: every epoch re-reads materialized rows,
-    * not the upstream plan. */
+    * Stops early when an epoch's net update is zero. Rows with a null
+    * text or label are skipped.
+    *
+    * Jobs: one to persist the (label, buckets) rows, one per epoch,
+    * and one to count the final weights' correct documents when the
+    * fit did not converge — at most `epochs + 2`. The persisted rows
+    * are coalesced toward ~32k per task, so an epoch schedules tasks
+    * sized to the corpus, not to the scan's partitioning. */
   def fitBatch(df: DataFrame, textCol: String, labelCol: String,
                dims: Int = 256, epochs: Int = 5): Model = {
     require(dims > 0 && Integer.bitCount(dims) == 1,
       "Classifier.fitBatch: dims must be a positive power of two")
-    // text itself never rides into the checkpoint: epochs only need
-    // the label and the bucket array (ints), so the materialized
-    // per-epoch input is bytes per document, not the document.
-    // Coalesced toward ~32k rows per task first (r18, the Bpe-learner
-    // sizing): every epoch schedules one stage over these partitions,
-    // so a scan-parallelism partition count (32 near-empty tasks at
-    // gate scale) pays 20× the task-launch floor for nothing. The fit
-    // is integer sums — partitioning cannot change it.
-    var base = df
-      .select(col(labelCol).cast("long").as("__y"),
-        TextHashFunctions.bowBuckets(col(textCol), dims).as("__b"))
-      .localCheckpoint(false)
-    val nRows = base.count()
-    val parts0 = base.rdd.getNumPartitions
-    val target = math.max(1L, math.min(parts0.toLong, nRows / 32768L + 1L)).toInt
-    if (target < parts0) {
-      val prev = base
-      base = base.coalesce(target).localCheckpoint(true)
-      prev.unpersist()
-    }
+    import df.sparkSession.implicits._
+    // text never rides into the pin: epochs only need the label and
+    // the bucket array, bytes per document
+    val pinned = df
+      .filter(col(labelCol).isNotNull && col(textCol).isNotNull)
+      .select(col(labelCol).cast("long").as("_1"),
+        TextHashFunctions.bowBuckets(col(textCol), dims).as("_2"))
+      .as[(Long, Array[Int])].rdd
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val n = pinned.count()
+    val docs = pinned.coalesce(
+      math.max(1L, math.min(pinned.getNumPartitions.toLong, n / 32768L + 1L)).toInt)
     val w = new Array[Long](dims)
     var bias = 0L
     var pocketW = w.clone(); var pocketBias = bias; var pocketCorrect = -1L
     var e = 0
     var converged = false
     while (e < epochs && !converged) {
-      // score from the checkpointed bucket arrays — bit-identical to
-      // bowScore(__text) but skips re-tokenizing/re-hashing the corpus
-      // on every epoch (the old per-epoch hot cost)
-      val scored = base.withColumn("__s",
-        TextHashFunctions.bowScoreBuckets(col("__b"), w.clone(), bias))
-      // ONE job per epoch (r13; was two): the pocket-accuracy count
-      // rides the delta aggregation as sentinel bucket −2 — a
-      // correctly-classified doc emits only (−2, +1), a misclassified
-      // one its buckets plus the bias sentinel −1 with its label, and
-      // a single groupBy-sum returns ≤ dims+3 rows. Same integer sums
-      // in the same order as the two-job schedule, so the fit stays
-      // bit-identical to referenceFit.
-      val rows = scored
-        .select(col("__y"),
-          explode(when(col("__y") * col("__s") > 0L, array(lit(-2)))
-            .otherwise(concat(col("__b"), array(lit(-1))))).as("__k"))
-        .groupBy(col("__k"))
-        .agg(sum(when(col("__k") === -2, lit(1L)).otherwise(col("__y"))).as("__d"))
-        .collect()
-      val correct = rows.find(_.getInt(0) == -2).map(_.getLong(1)).getOrElse(0L)
+      val sums = epochSums(docs, dims, w, bias)
+      val correct = sums(dims + 1)
       if (correct > pocketCorrect) {
         pocketCorrect = correct; pocketW = w.clone(); pocketBias = bias
       }
-      val deltas = rows.filter(_.getInt(0) != -2)
-      val biasDelta = deltas.find(_.getInt(0) == -1).map(_.getLong(1)).getOrElse(0L)
       // converged = the NET update is zero (mirrors referenceFit: a
       // +1/-1 misclassified pair over identical tokens nets to zero)
-      if (deltas.forall(_.getLong(1) == 0L) && biasDelta == 0L) converged = true
+      if (sums.iterator.take(dims + 1).forall(_ == 0L)) converged = true
       else {
-        deltas.foreach(r => if (r.getInt(0) >= 0) w(r.getInt(0)) += r.getLong(1))
-        bias += biasDelta
+        var i = 0
+        while (i < dims) { w(i) += sums(i); i += 1 }
+        bias += sums(dims)
         e += 1
       }
     }
-    // the post-loop weights are one more candidate (the final update
-    // was applied but never evaluated)
-    val finalCorrect = base.filter(col("__y") *
-      TextHashFunctions.bowScoreBuckets(col("__b"), w.clone(), bias) > 0L).count()
-    if (finalCorrect > pocketCorrect) { pocketW = w.clone(); pocketBias = bias }
-    base.unpersist()
+    // the post-loop weights are one more candidate: the final update
+    // was applied but never evaluated (a converged fit's were)
+    if (!converged) {
+      val bF = bias
+      val finalCorrect = docs.filter { case (y, b) =>
+        y * TextHash.bowScoreBuckets(b, w, bF) > 0L }.count()
+      if (finalCorrect > pocketCorrect) { pocketW = w.clone(); pocketBias = bias }
+    }
+    pinned.unpersist(blocking = false)
     Model(dims, pocketW, pocketBias, e)
   }
+
+  /** One epoch as one job: slots 0 until dims hold Σ label per bucket
+    * over the documents misclassified under (w, bias), slot dims their
+    * Σ label (the bias delta), slot dims + 1 the correct count. */
+  private def epochSums(docs: RDD[(Long, Array[Int])], dims: Int,
+                        w: Array[Long], bias: Long): Array[Long] =
+    docs.treeAggregate(new Array[Long](dims + 2))(
+      (acc, doc) => {
+        val (y, b) = doc
+        if (y * TextHash.bowScoreBuckets(b, w, bias) > 0L) acc(dims + 1) += 1L
+        else {
+          var i = 0
+          while (i < b.length) { acc(b(i)) += y; i += 1 }
+          acc(dims) += y
+        }
+        acc
+      },
+      (a, b) => {
+        var i = 0
+        while (i < a.length) { a(i) += b(i); i += 1 }
+        a
+      })
 
   /** Independent driver-side reference implementation (same spec, no
     * Spark) for the gate's cross-path identity check: batch updates

@@ -1018,19 +1018,18 @@ object PipelineQueries {
       .select(col("doc_id"), col("text"),
         when(cnt("spark") > cnt("vector"), 1L).otherwise(-1L).as("y"))
     val dims = 256
-    // the fixture-shape counts (n, nPos) are independent of the fit:
-    // ONE aggregate job, launched from a driver thread so it overlaps
-    // the fit's sequential epoch jobs (r18, guide §2.6; was two
-    // separate post-fit corpus passes)
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val shapeF = Future {
-      s.sparkContext.setJobDescription("q_classifier: fixture shape counts")
-      val r = d.agg(count(lit(1)), sum(when(col("y") > 0, 1L).otherwise(0L))).head()
-      (r.getLong(0), r.getLong(1))
-    }(ExecutionContext.global)
     val model = Classifier.fitBatch(d, "text", "y", dims = dims, epochs = 20)
-    val (nL, nPos) = Await.result(shapeF, Duration.Inf)
+    val scored = d
+      .withColumn("score", model.score(col("text")))
+      // pred is score's sign BY DEFINITION (Model.predict) — derive it
+      // from the already-computed score column instead of running the
+      // tokenize+hash kernel a second time per row
+      .withColumn("pred", when(col("score") >= 0L, 1).otherwise(-1))
+    // the fixture shape (n, nPos) and the training accuracy: one job
+    def ones(c: Column) = coalesce(sum(when(c, 1L).otherwise(0L)), lit(0L))
+    val shape = scored.agg(count(lit(1)), ones(col("y") > 0),
+      ones(col("pred") * col("y") > 0)).head()
+    val (nL, nPos, nCorrect) = (shape.getLong(0), shape.getLong(1), shape.getLong(2))
     val n = nL.toDouble
     // cross-path identity replay is single-threaded O(docs × epochs) on
     // the driver — run it at gate scales, skip at the 10× bench corpus
@@ -1044,13 +1043,7 @@ object PipelineQueries {
         s"q_classifier: distributed fit diverged from reference " +
           s"(epochs ${model.epochsRun} vs ${ref.epochsRun}, bias ${model.bias} vs ${ref.bias})")
     }
-    val scored = d
-      .withColumn("score", model.score(col("text")))
-      // pred is score's sign BY DEFINITION (Model.predict) — derive it
-      // from the already-computed score column instead of running the
-      // tokenize+hash kernel a second time per row (r18, §1.2 step 2)
-      .withColumn("pred", when(col("score") >= 0L, 1).otherwise(-1))
-    val acc = scored.filter(col("pred") * col("y") > 0).count() / n
+    val acc = nCorrect / n
     val majority = math.max(nPos, nL - nPos) / n
     require(acc > majority && acc >= 0.8,
       f"q_classifier: training accuracy $acc%.3f (majority $majority%.3f) — fit failed to separate")

@@ -63,6 +63,49 @@ class BpeSpec extends AnyFunSuite {
     assert(merges.size == 60)
   }
 
+  test("a count table wider than the top-pair window stays identical to the reference") {
+    // >100 symbols make the pair table far wider than the 4,096 rows a
+    // scan brings to the driver, so every early scan is truncated and
+    // acceptance runs through the tail-frequency bound
+    val alphabet = ('a' to 'z') ++ ('0' to '9') ++ ('à' to 'þ').filter(_ != '÷') ++
+      ('α' to 'ω').filter(_ != 'ς') ++ ('а' to 'я')
+    val rnd = new scala.util.Random(4096)
+    val vocab = (1 to 4000).map { _ =>
+      (1 to (3 + rnd.nextInt(6))).map(_ => alphabet(rnd.nextInt(alphabet.length))).mkString
+    }
+    // skewed word frequencies: low ranks repeat far more often
+    val docs = (1 to 3000).map { _ =>
+      (1 to 10).map(_ => vocab(rnd.nextInt(1 + rnd.nextInt(vocab.size)))).mkString(" ")
+    }.toDF("text")
+    val words = graft.core.Checkpoints.pin(Bpe.wordFreq(docs, "text"))
+    val dict = words.select(col("word"), col("wcount"))
+      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+    val pairs = dict.flatMap { case (w, _) =>
+      val syms = w.map(_.toString) :+ Bpe.EndOfWord
+      syms.zip(syms.tail)
+    }.distinct
+    assert(alphabet.size >= 100 && pairs.size > 4096, s"${pairs.size} distinct pairs")
+    val merges = Bpe.learnMerges(words, numMerges = 40)
+    val ref = Bpe.referenceLearn(dict, numMerges = 40)
+    assert(merges == ref,
+      s"diverged at ${merges.zip(ref).indexWhere(p => p._1 != p._2)}:\n" +
+        s" spark=${merges.take(8)}\n ref=  ${ref.take(8)}")
+    assert(merges.size == 40)
+  }
+
+  test("learnMerges runs at most one job per scan plus one per materialization") {
+    // one 12-letter word: every top pair overlaps the next, so each
+    // scan accepts exactly one merge — 10 merges are 10 scans, and the
+    // dict is materialized twice (the pin, and once after 8 merges)
+    val words = graft.core.Checkpoints.pin(
+      Bpe.wordFreq(Seq.fill(5)("abcdefghijkl").toDF("text"), "text"))
+    val (merges, jobs) = SparkJobs.count(spark.sparkContext)(
+      Bpe.learnMerges(words, numMerges = 10))
+    assert(merges == Bpe.referenceLearn(Seq("abcdefghijkl" -> 5L), numMerges = 10))
+    assert(merges.map(_.left).last == "abcdefghij")
+    assert(jobs <= 10 + 2, s"$jobs jobs for 10 scans")
+  }
+
   test("greedy left-to-right merge handles overlapping runs") {
     // 'aaaa' with merge (a,a): non-overlapping left-to-right -> [aa][aa]
     val df = Seq.fill(3)("aaaa").toDF("text")

@@ -36,6 +36,20 @@ class ClassifierSpec extends AnyFunSuite {
     assert(m.epochsRun == ref.epochsRun)
   }
 
+  test("fitBatch runs at most one job per epoch plus two") {
+    val docs = (0 until 120).map { i =>
+      val words = Seq.tabulate(5 + i % 7)(j => s"w${(i * 31 + j * 17) % 23}")
+      (i.toLong, words.mkString(" "), if ((i * 7) % 3 == 0) 1L else -1L)
+    }
+    val df = docs.toDF("id", "text", "y")
+    val epochs = 12
+    val (m, jobs) = SparkJobs.count(spark.sparkContext)(
+      Classifier.fitBatch(df, "text", "y", dims = 128, epochs = epochs))
+    val ref = Classifier.referenceFit(docs.map(d => (d._2, d._3)), 128, epochs = epochs)
+    assert(m.weights.sameElements(ref.weights) && m.bias == ref.bias)
+    assert(jobs <= epochs + 2, s"$jobs jobs for $epochs epochs")
+  }
+
   test("compression sizes satisfy format bounds and rank redundancy") {
     val rep = Seq.fill(300)("aaaa").mkString(" ")
     val mixed = (0 until 300).map(i => (i * 2654435761L).toHexString).mkString(" ")

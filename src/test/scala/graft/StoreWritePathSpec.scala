@@ -1,10 +1,8 @@
 package graft
 
-import java.util.UUID
 import java.util.concurrent.atomic.AtomicLong
 import scala.annotation.meta.field
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.col
 import graft.annotations.Id
@@ -31,24 +29,7 @@ class StoreWritePathSpec extends AnyFunSuite {
   private def store(): TableStore =
     new TableStore(spark, TempDirs.create("graft_write_path_"), "id")
 
-  /** Jobs launched by `body` on this thread. */
-  private def jobsOf[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val group = s"write-path-${UUID.randomUUID()}"
-    val jobs = new AtomicLong()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "write-path job count")
-      val out = try body finally sc.clearJobGroup()
-      org.apache.spark.graft.ListenerBusDrain(sc)
-      (out, jobs.get.toInt)
-    } finally sc.removeSparkListener(listener)
-  }
+  private def jobsOf[T](body: => T): (T, Int) = SparkJobs.count(spark.sparkContext)(body)
 
   private def contents(st: TableStore): (Seq[String], Seq[String]) = {
     val df = st.read
