@@ -49,7 +49,9 @@ object Checkpoints {
     * the ContextCleaner's (both modes keep blocks until the frame is
     * garbage-collected; every pin here is id+hash/token-scale, bytes
     * per row). Callers that DO fully consume the pin in-scope should
-    * `unpersist()` it explicitly. */
+    * take it inside [[persistedDuring]] and call the release thunk:
+    * `Dataset.unpersist()` does not free the RDD a local checkpoint
+    * persisted. */
   def pin(df: DataFrame): DataFrame =
     df.sparkSession.conf.getOption("spark.graft.pin.mode").getOrElse("local") match {
       case "persist" =>

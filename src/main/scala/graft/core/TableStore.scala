@@ -2,7 +2,7 @@ package graft.core
 
 import java.util.UUID
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, IntegerType, LongType, MapType, ShortType, StringType, StructType}
@@ -20,7 +20,6 @@ import graft.ops.Profile
   *                                        "name<TAB>idMin<TAB>idMax<TAB>rowCount" per
   *                                        file, then #txn, #colstats and #schema lines
   *   <path>/_versions/v{N}.claim          exclusive commit claim for version N
-  *   <path>/_schema/                      zero-row parquet schema anchor
   *   <path>/_pending_revert               journaled rollback target, if any
   *
   * A version is committed by renaming a temp manifest into place —
@@ -44,7 +43,11 @@ import graft.ops.Profile
   *     partitioning and the distributed key path;
   *   - every snapshot read is under the committed schema, so no read
   *     infers a schema from a data file (a job, and the wrong schema on
-  *     an evolved table, whose rewrites would drop the added columns).
+  *     an evolved table, whose rewrites would drop the added columns),
+  *     and a version with no files reads as zero rows under it.
+  *
+  * Every version records its schema: the previous version's, widened
+  * by the schema of the rows the commit wrote (see `Written`).
   *
   * Keyed mutations prune at file level: manifests carry per-file id
   * min/max (integral ids), so `upsert`/`deleteKeys` rewrite only files
@@ -69,15 +72,43 @@ object TableStore {
     * (~2 min of backoff) exceeds it, so a genuinely crashed committer
     * still self-heals within one commit call. */
   private[core] val staleClaimMs: Long = 60000L
+
+  /** `dt` with every field, element and map value nullable: how a
+    * parquet scan types a requested schema, and the structure schema
+    * enforcement compares (nullability is not a type change). */
+  private def nullable(dt: DataType): DataType = dt match {
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
+    case s: StructType => StructType(s.fields.map(f =>
+      f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case other => other
+  }
+
+  /** `committed` widened by `written`, the schema rows were written
+    * under: every committed column keeps its place (a concurrent
+    * commit may have added one the write never saw), a written column
+    * takes its written field, and columns new to the table follow in
+    * written order. */
+  private def widen(committed: StructType, written: StructType): StructType = {
+    val byName = written.fields.map(f => f.name -> f).toMap
+    val known = committed.fieldNames.toSet
+    StructType(committed.fields.map(f => byName.getOrElse(f.name, f)) ++
+      written.fields.filterNot(f => known(f.name)))
+  }
+
+  /** New immutable data files and the schema their rows were written
+    * under. */
+  private final case class Written(files: Seq[FileEntry], schema: StructType) {
+    /** `prev` listing `entries`, its schema widened by this write's —
+      * the snapshot a commit of these files records. */
+    def onto(prev: Snapshot, entries: Seq[FileEntry]): Snapshot =
+      prev.copy(entries = entries, schema = widen(prev.schema, schema))
+  }
 }
 
 final class TableStore(val spark: SparkSession, val path: String, val idCol: String) {
   private val filesDir = s"$path/files"
   private val versionsDir = s"$path/${VersionLog.dirName}"
-  /** Schema of the last written/initialized rows, recorded at this
-    * store's next commit (None before any write on a reopened table:
-    * the commit carries the previous version's schema forward). */
-  @volatile private var lastSchema: Option[StructType] = None
 
   private def fs: FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -139,68 +170,51 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
       .sortBy(_._1)
   }
 
-  /** The latest committed version, decoded once — every operation
-    * resolves its snapshot through here exactly one time. */
-  private def latest(f: FileSystem = fs): Option[(Long, Snapshot)] =
-    listVersions(f).lastOption.map { case (v, p) => (v, VersionLog.decode(readUtf8(f, p))) }
+  private def readSnapshot(f: FileSystem, p: Path): Snapshot =
+    VersionLog.decode(readUtf8(f, p), p.toString)
 
-  /** The latest snapshot; empty when no version is committed. */
+  /** The latest committed version, decoded once — every operation
+    * resolves its snapshot through here exactly one time. None when no
+    * version is committed yet. */
+  private def latest(f: FileSystem = fs): Option[(Long, Snapshot)] =
+    listVersions(f).lastOption.map { case (v, p) => (v, readSnapshot(f, p)) }
+
+  /** The latest snapshot; [[Snapshot.empty]] when no version is committed. */
   private def current: Snapshot = latest().fold(Snapshot.empty)(_._2)
 
   def exists: Boolean = listVersions(fs).nonEmpty
 
-  /** Row count AND snapshot DataFrame from ONE manifest resolution —
-    * `None` when no version is committed; the inner count is `None` on
-    * legacy stat-less manifests (callers fall back to a probe job over
-    * the returned frame). Callers that need both MUST use this instead
-    * of `rowCountFromManifest` + `read`: those resolve the manifest
-    * twice, and a commit landing between the two calls pairs a stale
-    * count with a newer snapshot (the dedup indexes' O(1)
-    * saturation-skip would then judge a larger index by a smaller
-    * count). */
-  def committedSnapshot: Option[(Option[Long], DataFrame)] =
-    committedSnapshotVersioned.map { case (_, n, df) => (n, df) }
-
-  /** [[committedSnapshot]] plus the VERSION the snapshot came from —
-    * for callers memoizing per-version facts about the immutable
-    * snapshot (the dedup probes' saturation verdict): a version's
-    * content never changes, so a fact computed against (path, version)
-    * holds for every later read of that version. */
-  def committedSnapshotVersioned: Option[(Long, Option[Long], DataFrame)] =
+  /** The latest version, its row count and its snapshot DataFrame,
+    * from ONE manifest resolution — None when no version is committed.
+    * Callers that need the count and the rows MUST use this instead of
+    * `rowCountFromManifest` + `read`: those resolve the manifest twice,
+    * and a commit landing between the two calls pairs a stale count
+    * with a newer snapshot (the dedup indexes' O(1) saturation-skip
+    * would then judge a larger index by a smaller count). The version
+    * serves callers memoizing per-version facts (the dedup probes'
+    * saturation verdict): a version's content never changes. */
+  def committedSnapshot: Option[(Long, Long, DataFrame)] =
     latest().map { case (v, s) => (v, s.rowCount, readAll(s)) }
 
-  private val schemaDir = s"$path/_schema"
-
-  /** Commit an empty version with a zero-row schema anchor, so reads
-    * work before the first persist (the reference's registerTable
-    * creates the table eagerly — persistent/Session.java:181-277).
-    * No-op if a version already exists. */
+  /** Commit an empty version under `schema`, so reads work before the
+    * first persist (the reference's registerTable creates the table
+    * eagerly — persistent/Session.java:181-277). Metadata only, no
+    * Spark job. No-op if a version already exists. */
   def initialize(schema: StructType): Unit =
     TableStore.commitLock(path).synchronized {
-      lastSchema = Some(schema)
-      // backfill the anchor for pre-anchor tables too, not only fresh
-      // ones — an already-populated table still needs it once every
-      // row is deleted and vacuum empties files/
-      if (!fs.exists(new Path(schemaDir)))
-        spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-          .write.mode("overwrite").parquet(schemaDir)
-      if (!exists) commit(prev => prev)
+      if (!exists) commit(prev => prev.copy(schema = TableStore.widen(prev.schema, schema)))
     }
 
-  /** Read `entries` under `schema` when one is committed: parquet
-    * scans given an explicit schema surface columns a file predates
-    * as nulls — additive evolution needs NO rewrite of old files. */
-  private def readFiles(entries: Seq[FileEntry], schema: Option[StructType]): DataFrame = {
-    val reader = schema.fold(spark.read)(s => spark.read.schema(s))
-    if (entries.nonEmpty) reader.parquet(entries.map(e => filePath(e.name)): _*)
-    else if (fs.exists(new Path(schemaDir)))
-      reader.parquet(schemaDir) // zero rows, schema preserved
-    // legacy committed-empty fallback — the requested schema must
-    // still apply (a post-evolution diff reads an empty FROM side
-    // under the widened TO schema; inferring from files/ here made
-    // that exceptAll a column-count mismatch)
-    else reader.parquet(filesDir).limit(0)
-  }
+  /** Read `entries` under `schema`: parquet scans given an explicit
+    * schema surface columns a file predates as nulls — additive
+    * evolution needs NO rewrite of old files. No entries read as an
+    * empty local relation typed as a scan would type it (every column
+    * nullable), which Catalyst prunes from joins and set operations
+    * (an append's diff reads an empty FROM side). */
+  private def readFiles(entries: Seq[FileEntry], schema: StructType): DataFrame =
+    if (entries.isEmpty) spark.createDataFrame(java.util.List.of[Row](),
+      TableStore.nullable(schema).asInstanceOf[StructType])
+    else spark.read.schema(schema).parquet(entries.map(e => filePath(e.name)): _*)
 
   /** A whole snapshot under its committed schema. */
   private def readAll(s: Snapshot): DataFrame = readFiles(s.entries, s.schema)
@@ -229,7 +243,7 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
   def readStream: DataFrame = {
     val snap = latest().getOrElse(throw noVersion)._2
     spark.readStream.format(classOf[StoreSourceProvider].getName)
-      .schema(snap.schema.getOrElse(readAll(snap).schema))
+      .schema(snap.schema)
       .load(path)
   }
 
@@ -292,7 +306,7 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
     if (!fs.exists(p))
       throw new IllegalArgumentException(
         s"version $version not present at $path (available: ${versions.mkString(",")})")
-    VersionLog.decode(readUtf8(fs, p))
+    readSnapshot(fs, p)
   }
 
   /** Row-level snapshot diff `fromV → toV`: (added, removed) frames.
@@ -359,8 +373,7 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
     }
 
   /** Write `rows` as new immutable files with per-file id stats. */
-  private def writeFiles(rows: DataFrame): Seq[FileEntry] = {
-    lastSchema = Some(rows.schema)
+  private def writeFiles(rows: DataFrame): TableStore.Written = {
     val f = fs
     f.mkdirs(new Path(filesDir))
     val tmp = s"$path/_tmp_${UUID.randomUUID().toString.take(8)}"
@@ -391,13 +404,13 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
       Future.traverse(renamed) { n =>
         Future((n, footerStats(f, new Path(s"$filesDir/$n"), integral)))
       }, 10.minutes)
-    statted.flatMap { case (n, (rowCount, range, colStats)) =>
+    TableStore.Written(statted.flatMap { case (n, (rowCount, range, colStats)) =>
       if (rowCount == 0L) { f.delete(new Path(s"$filesDir/$n"), false); None }
       else {
         if (colStats.nonEmpty) pendingColStats.put(n, colStats)
-        Some(FileEntry(n, range.map(_._1), range.map(_._2), Some(rowCount)))
+        Some(FileEntry(n, range.map(_._1), range.map(_._2), rowCount))
       }
-    }
+    }, rows.schema)
   }
 
   /** Per-file numeric column stats written at this store's next
@@ -490,9 +503,11 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
     * with the newly observed snapshot). Updates change the entries and
     * the cumulative txn state; returning the txn UNCHANGED when the
     * marker says a batch is already applied is how a replayed
-    * micro-batch becomes a no-op commit. The commit itself records
-    * this store's last written schema (else the update's, carried
-    * forward) and adds the pending column stats of its new files. */
+    * micro-batch becomes a no-op commit. The update also returns the
+    * schema the version records: a data-free commit (revert, txn-only,
+    * delete-to-empty) carries the previous one forward, a write widens
+    * it ([[TableStore.Written]]). The commit itself adds the pending
+    * column stats of its new files. */
   private def commit(update: Snapshot => Snapshot): Unit =
     TableStore.commitLock(path).synchronized {
     // The monitor serializes commits from this driver JVM (where all
@@ -511,13 +526,9 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
     while (committed.isEmpty) {
       val (prevVer, prev) = latest(f).getOrElse((-1L, Snapshot.empty))
       val updated = update(prev)
-      // schema carries forward: a data-free commit (revert, txn-only,
-      // delete-to-empty) must not drop the committed schema, or an
-      // evolved table's old files would silently stop surfacing the
-      // newer columns. Column stats carry forward too; encode drops
-      // entries for files no longer in the version.
-      val next = updated.copy(schema = lastSchema.orElse(updated.schema),
-        colStats = updated.colStats ++ pendingColStats)
+      // column stats carry forward; encode drops entries for files no
+      // longer in the version
+      val next = updated.copy(colStats = updated.colStats ++ pendingColStats)
       val versionFile = new Path(s"$versionsDir/${VersionLog.fileName(prevVer + 1)}")
       val tmp = new Path(s"$versionsDir/.tmp-${UUID.randomUUID().toString.take(8)}")
       val out = f.create(tmp, false)
@@ -583,14 +594,15 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
   }
 
   private def commitRewrite(snapshot: Seq[FileEntry], replaced: Seq[FileEntry],
-                            newFiles: Seq[FileEntry]): Unit = {
-    val update = rewrite(snapshot, replaced, newFiles)
-    commit(prev => prev.copy(entries = update(prev.entries)))
+                            written: TableStore.Written): Unit = {
+    val update = rewrite(snapshot, replaced, written.files)
+    commit(prev => written.onto(prev, update(prev.entries)))
   }
 
   /** Largest id in the table, METADATA-ONLY when every live file
     * carries id stats (the normal case for integral, null-free ids);
-    * falls back to a column scan for legacy/stat-less manifests. The
+    * falls back to a column scan when a file has none (NULL or
+    * non-integral ids). The
     * @DistributedId id-base read — reference keeps this in its id
     * generator (persistent/Table.java:61-157); here the manifest IS
     * that state. */
@@ -605,9 +617,8 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
     }
   }
 
-  /** Total rows, metadata-only when possible (None forces the caller's
-    * fallback — only legacy manifests lack per-file counts). */
-  private[graft] def rowCountFromManifest: Option[Long] = current.rowCount
+  /** Total rows, from the manifest's per-file counts (no job). */
+  private[graft] def rowCountFromManifest: Long = current.rowCount
 
   /** Cutoff id such that `deleteBelowId(cutoff)` retains the newest
     * `n` rows by id order; None when the table already holds <= n rows
@@ -627,18 +638,12 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
     if (n > Int.MaxValue) return None // limit(Int) would truncate silently
     val snap = current
     val entries = snap.entries
-    val statted = entries.nonEmpty &&
-      entries.forall(e => e.rows.isDefined && e.idMin.isDefined && e.idMax.isDefined)
-    val total: Long =
-      if (statted) entries.flatMap(_.rows).sum
-      else if (entries.isEmpty) 0L
-      else readAll(snap).count()
-    if (total <= n) return None
+    if (snap.rowCount <= n) return None
     val scan =
-      if (!statted) readAll(snap)
+      if (!entries.forall(e => e.idMin.isDefined && e.idMax.isDefined)) readAll(snap)
       else {
         val byMaxDesc = entries.sortBy(e => -e.idMax.get)
-        val cum = byMaxDesc.scanLeft(0L)(_ + _.rows.get).tail
+        val cum = byMaxDesc.scanLeft(0L)(_ + _.rows).tail
         val prefix = byMaxDesc.take(cum.indexWhere(_ >= n) + 1)
         val bound = prefix.map(_.idMin.get).min
         readFiles(entries.filter(_.idMax.get >= bound), snap.schema)
@@ -734,46 +739,37 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
     * null on write), but may never CHANGE an existing column's type —
     * that is the silent-corruption path a 100 TB table cannot afford,
     * so it throws. Returns the incoming rows aligned to the merged
-    * schema. Legacy tables with no committed schema pass through. */
-  private def enforceSchema(rows: DataFrame, committed: Option[StructType]): DataFrame =
-    committed match {
-      case None => rows
-      case Some(cur) =>
+    * schema (unchanged when already aligned). */
+  private def enforceSchema(rows: DataFrame, cur: StructType): DataFrame = {
+    val curByName = cur.fields.map(f => f.name -> f).toMap
+    rows.schema.fields.foreach { f =>
+      curByName.get(f.name).foreach { c =>
         // nullability (incl. containsNull/valueContainsNull inside
-        // containers) is not a TYPE change — compare erased structure
-        def erased(dt: DataType): DataType = dt match {
-          case a: ArrayType => ArrayType(erased(a.elementType), containsNull = true)
-          case m: MapType => MapType(erased(m.keyType), erased(m.valueType), valueContainsNull = true)
-          case s: StructType => StructType(s.fields.map(f =>
-            f.copy(dataType = erased(f.dataType), nullable = true)))
-          case other => other
-        }
-        val curByName = cur.fields.map(f => f.name -> f).toMap
-        rows.schema.fields.foreach { f =>
-          curByName.get(f.name).foreach { c =>
-            if (erased(c.dataType) != erased(f.dataType))
-              throw new IllegalArgumentException(
-                s"schema enforcement at $path: column '${f.name}' arrives as " +
-                  s"${f.dataType.simpleString} but is committed as " +
-                  s"${c.dataType.simpleString}; type changes require an explicit rewrite")
-          }
-        }
-        val incomingByName = rows.schema.fields.map(f => f.name -> f).toMap
-        val newFields = rows.schema.fields
-          .filterNot(f => curByName.contains(f.name)).map(_.copy(nullable = true))
-        val merged = StructType(cur.fields ++ newFields)
-        rows.select(merged.fields.map { f =>
-          if (incomingByName.contains(f.name)) col(f.name)
-          else lit(null).cast(f.dataType).as(f.name)
-        }.toIndexedSeq: _*)
+        // containers) is not a TYPE change
+        if (TableStore.nullable(c.dataType) != TableStore.nullable(f.dataType))
+          throw new IllegalArgumentException(
+            s"schema enforcement at $path: column '${f.name}' arrives as " +
+              s"${f.dataType.simpleString} but is committed as " +
+              s"${c.dataType.simpleString}; type changes require an explicit rewrite")
+      }
     }
+    val incomingByName = rows.schema.fields.map(f => f.name -> f).toMap
+    val newFields = rows.schema.fields
+      .filterNot(f => curByName.contains(f.name)).map(_.copy(nullable = true))
+    val merged = StructType(cur.fields ++ newFields)
+    if (merged.fieldNames.sameElements(rows.schema.fieldNames)) rows
+    else rows.select(merged.fields.map { f =>
+      if (incomingByName.contains(f.name)) col(f.name)
+      else lit(null).cast(f.dataType).as(f.name)
+    }.toIndexedSeq: _*)
+  }
 
   /** Fast insert, no existence check (reference @NoCheck path): new
     * files + manifest commit, nothing rewritten. */
   def append(rows: DataFrame): Unit = Metrics.timer("persistInsertChunk").time {
     val enforced = enforceSchema(rows, current.schema)
     val added = writeFiles(localBatch(enforced).getOrElse(enforced))
-    commit(prev => prev.copy(entries = prev.entries ++ added))
+    commit(prev => added.onto(prev, prev.entries ++ added.files))
   }
 
   /** A driver-local batch (its optimized plan is a `LocalRelation`)
@@ -806,8 +802,11 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
                     uniqueKey: Option[String] = None): Unit = {
     // materialize ONCE: the constraint scan and the write read the
     // same batch (a re-evaluated nondeterministic upstream cannot
-    // slip different rows past the checks)
-    val pinned = rows.localCheckpoint(true)
+    // slip different rows past the checks). Released through the
+    // persisted-RDD diff: Dataset.unpersist does not reach the RDD a
+    // local checkpoint persisted
+    val (pinned, release) =
+      Checkpoints.persistedDuring(spark.sparkContext)(rows.localCheckpoint(true))
     try {
       val report = Profile.expectations(pinned, checks, uniqueKey).collect()
       val failed = report.filter(_.getInt(2) == 0)
@@ -816,7 +815,7 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
           "appendChecked: constraint violations, append aborted — " +
             failed.map(r => s"${r.getString(0)}=${r.getLong(1)}").mkString(", "))
       append(pinned)
-    } finally pinned.unpersist()
+    } finally release()
   }
 
   /** Quarantine ingest — the routing sibling of [[appendChecked]]'s
@@ -847,7 +846,8 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
   def appendQuarantine(rows: DataFrame, checks: Seq[(String, Column)],
                        quarantine: TableStore): (Long, Long) = {
     require(checks.nonEmpty, "appendQuarantine: no checks")
-    val pinned = rows.localCheckpoint(true)
+    val (pinned, release) =
+      Checkpoints.persistedDuring(spark.sparkContext)(rows.localCheckpoint(true))
     try {
       val violated = array(checks.map { case (name, pred) =>
         when(coalesce(pred, lit(false)), lit(null).cast("string"))
@@ -863,7 +863,7 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
       if (nBad > 0) quarantine.append(bad) // violations first — see crash ordering above
       if (nGood > 0) append(good)
       (nGood, nBad)
-    } finally pinned.unpersist()
+    } finally release()
   }
 
   /** Last applied idempotence version for `appId` (a streaming sink's
@@ -881,18 +881,18 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
     * writing files. The loser of that race drops its orphaned files.
     * Returns true when applied. */
   private def commitOnce(appId: String, version: Long, snap: Snapshot)(
-      write: => (Seq[FileEntry], Seq[FileEntry] => Seq[FileEntry])): Boolean = {
+      write: => (TableStore.Written, Seq[FileEntry] => Seq[FileEntry])): Boolean = {
     if (snap.txn.get(appId).exists(_ >= version)) return false
     val (added, update) = write
     var applied = false
     commit { prev =>
       applied = !prev.txn.get(appId).exists(_ >= version)
       if (!applied) prev
-      else prev.copy(entries = update(prev.entries), txn = prev.txn + (appId -> version))
+      else added.onto(prev, update(prev.entries)).copy(txn = prev.txn + (appId -> version))
     }
     if (!applied) {
       val f = fs
-      added.foreach { e =>
+      added.files.foreach { e =>
         pendingColStats.remove(e.name) // never let an orphan's stats linger
         try f.delete(new Path(s"$filesDir/${e.name}"), false)
         catch { case _: java.io.IOException => }
@@ -913,7 +913,7 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
     val snap = current
     commitOnce(appId, version, snap) {
       val added = writeFiles(enforceSchema(rows, snap.schema))
-      (added, _ ++ added)
+      (added, _ ++ added.files)
     }
   }
 
@@ -964,7 +964,7 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
     val batch = local.getOrElse(rows)
     val merged =
       if (affected.isEmpty) batch
-      else dropReplaced(readFiles(affected, Some(rows.schema))).unionByName(batch)
+      else dropReplaced(readFiles(affected, rows.schema)).unionByName(batch)
     (affected, merged)
   }
 
@@ -993,7 +993,7 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
     commitOnce(appId, version, snap) {
       val (affected, merged) = keyMerge(snap, rows)
       val newFiles = writeFiles(merged)
-      (newFiles, rewrite(snap.entries, affected, newFiles))
+      (newFiles, rewrite(snap.entries, affected, newFiles.files))
     }
   }
 
@@ -1008,7 +1008,7 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
     val snap = current
     commitOnce(appId, version, snap) {
       val newFiles = writeFiles(enforceSchema(rows, snap.schema))
-      (newFiles, _ => newFiles)
+      (newFiles, _ => newFiles.files)
     }
   }
 
@@ -1042,7 +1042,8 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
       if (insertNotMatched) append(source)
       return
     }._2
-    val src = enforceSchema(source, snap.schema).localCheckpoint(true)
+    val (src, release) = Checkpoints.persistedDuring(spark.sparkContext)(
+      enforceSchema(source, snap.schema).localCheckpoint(true))
     try {
       val dups = src.groupBy(col(idCol)).agg(count(lit(1)).as("n"))
         .filter(col("n") > 1).limit(1).count()
@@ -1061,7 +1062,7 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
           if (!insertNotMatched) return
           writeFiles(src)
         } else {
-          val tgt = readFiles(affected, Some(src.schema)).alias("t")
+          val tgt = readFiles(affected, src.schema).alias("t")
           val joined = tgt.join(src.alias("s"),
             col(s"t.$idCol") === col(s"s.$idCol"), "left")
           val matched = col(s"s.$idCol").isNotNull
@@ -1080,7 +1081,7 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
           writeFiles(updated.unionByName(inserts))
         }
       commitRewrite(snapshot, affected, outFiles)
-    } finally src.unpersist()
+    } finally release()
   }
 
   /** `session.find(cls, id)` (persistent/Session.java:326-342): the
@@ -1212,7 +1213,7 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
       else {
         val kept = writeFiles(res.retained)
         commitRewrite(snap.entries, snap.entries, kept)
-        res.copy(retained = readFiles(kept, snap.schema))
+        res.copy(retained = readFiles(kept.files, snap.schema))
       }
     } finally res.consumed.unpersist()
   }
@@ -1234,7 +1235,7 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
     val straddling = snapshot.diff(dropped ++ untouched)
     if (dropped.isEmpty && straddling.isEmpty) return
     val newFiles =
-      if (straddling.isEmpty) Seq.empty
+      if (straddling.isEmpty) TableStore.Written(Seq.empty, snap.schema)
       else writeFiles(readFiles(straddling, snap.schema)
         .filter(col(idCol) >= cutoff || col(idCol).isNull))
     commitRewrite(snapshot, dropped ++ straddling, newFiles)
@@ -1323,7 +1324,7 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
       // deleting a file out from under a within-grace manifest would
       // leave readable versions pointing at nothing
       val live = (all.lastOption.toSeq ++ keptOld).flatMap { case (_, p) =>
-        VersionLog.decode(readUtf8(f, p)).entries.map(_.name)
+        readSnapshot(f, p).entries.map(_.name)
       }.toSet
       if (f.exists(new Path(filesDir)))
         f.listStatus(new Path(filesDir)).toSeq

@@ -72,8 +72,8 @@ final class TypedTable[T: Encoder](val spark: SparkSession, val store: TableStor
         if (needGen.isEmpty) df
         else {
           // id base from manifest stats — metadata-only, no table scan
-          // per insert batch (TableStore.maxId falls back to a scan
-          // only for legacy stat-less manifests)
+          // per insert batch (TableStore.maxId scans only when a file
+          // has no id stats, i.e. holds a NULL id)
           val base: Long =
             if (!store.exists) 0L
             else store.maxId.map(m => math.max(0L, m)).getOrElse(0L)

@@ -3,10 +3,10 @@ package graft.core
 import org.apache.spark.sql.types.{DataType, StructType}
 
 /** One committed data file in a table version: name (relative to the
-  * store's files/ dir), optional integral-id min/max for file pruning,
-  * optional row count for metadata-only aggregates. */
+  * store's files/ dir), its row count (for metadata-only aggregates),
+  * and optional integral-id min/max for file pruning. */
 private[graft] case class FileEntry(name: String, idMin: Option[Long],
-                                   idMax: Option[Long], rows: Option[Long]) {
+                                   idMax: Option[Long], rows: Long) {
   def overlaps(kmin: Long, kmax: Long): Boolean = (idMin, idMax) match {
     case (Some(lo), Some(hi)) => lo <= kmax && hi >= kmin
     case _ => true // no stats → always a rewrite candidate
@@ -22,28 +22,28 @@ private[graft] case class FileEntry(name: String, idMin: Option[Long],
   * ONE file instead of replaying the commit chain, and `vacuum` can
   * trim old versions without checkpoint machinery. The schema as of a
   * version rides IN that version: evolved tables read old files
-  * against it (absent columns → null), and time travel sees the schema
-  * as committed then. */
+  * against it (absent columns → null), an empty version reads as zero
+  * rows under it, and time travel sees the schema as committed then. */
 private[graft] final case class Snapshot(
     entries: Seq[FileEntry],
+    schema: StructType,
     txn: Map[String, Long] = Map.empty,
-    colStats: Map[String, Map[String, (Double, Double)]] = Map.empty,
-    schema: Option[StructType] = None) {
-  /** Total rows from per-file counts; None when a legacy entry has none. */
-  def rowCount: Option[Long] =
-    if (entries.forall(_.rows.isDefined)) Some(entries.flatMap(_.rows).sum) else None
+    colStats: Map[String, Map[String, (Double, Double)]] = Map.empty) {
+  def rowCount: Long = entries.map(_.rows).sum
 }
 
 private[graft] object Snapshot {
-  val empty: Snapshot = Snapshot(Seq.empty)
+  /** The state before a store's first commit: no files, no columns. */
+  val empty: Snapshot = Snapshot(Seq.empty, new StructType())
 }
 
 /** The version-log codec: `_versions/v{N}.manifest`, tab-separated,
   * one line per data file (`name\tidMin\tidMax\trows`), then
   * `#txn\tappId\tversion`, `#colstats\tfile\t{"col":[min,max],…}` and
-  * `#schema\t<StructType JSON>` lines. The commit protocol that writes
-  * these files (claim + atomic rename, optimistic retry) is
-  * TableStore's. */
+  * one `#schema\t<StructType JSON>` line. Every file line carries a
+  * row count and every version a schema; a version file without them
+  * fails to decode. The commit protocol that writes these files
+  * (claim + atomic rename, optimistic retry) is TableStore's. */
 private[graft] object VersionLog {
   val dirName = "_versions"
   def fileName(v: Long): String = s"v$v.manifest"
@@ -58,7 +58,7 @@ private[graft] object VersionLog {
   /** Column stats of files no longer in the snapshot are dropped. */
   def encode(s: Snapshot): String = {
     def opt(o: Option[Long]) = o.map(_.toString).getOrElse("")
-    val files = s.entries.map(e => s"${e.name}\t${opt(e.idMin)}\t${opt(e.idMax)}\t${opt(e.rows)}")
+    val files = s.entries.map(e => s"${e.name}\t${opt(e.idMin)}\t${opt(e.idMax)}\t${e.rows}")
     val txns = s.txn.toSeq.sortBy(_._1).map { case (app, ver) => s"#txn\t$app\t$ver" }
     val names = s.entries.map(_.name).toSet
     val stats = s.colStats.toSeq.filter(e => names.contains(e._1)).sortBy(_._1)
@@ -68,13 +68,16 @@ private[graft] object VersionLog {
         s"#colstats\t$file\t$json"
       }
     // StructType.json is single-line JSON with no raw tabs/newlines
-    val schema = s.schema.map(st => s"#schema\t${st.json}").toSeq
-    (files ++ txns ++ stats ++ schema).mkString("", "\n", "\n")
+    val schema = s"#schema\t${s.schema.json}"
+    (files ++ txns ++ stats :+ schema).mkString("", "\n", "\n")
   }
 
-  def decode(content: String): Snapshot = {
+  /** Decode the content of version file `file` (named in errors). */
+  def decode(content: String, file: String): Snapshot = {
     import scala.jdk.CollectionConverters._
     def opt(s: String) = Option(s).filter(_.nonEmpty).map(_.toLong)
+    def invalid(why: String) =
+      new IllegalStateException(s"version file $file is not a valid manifest: $why")
     val entries = Seq.newBuilder[FileEntry]
     val txn = Map.newBuilder[String, Long]
     val colStats = Map.newBuilder[String, Map[String, (Double, Double)]]
@@ -82,18 +85,19 @@ private[graft] object VersionLog {
     content.split("\n").map(_.trim).filter(_.nonEmpty).foreach { line =>
       line.split("\t", -1) match {
         case Array("#txn", app, ver) => txn += app -> ver.toLong
-        case Array("#colstats", file, json) =>
-          colStats += file -> mapper.readTree(json).properties().asScala.map { e =>
+        case Array("#colstats", name, json) =>
+          colStats += name -> mapper.readTree(json).properties().asScala.map { e =>
             e.getKey -> ((e.getValue.get(0).asDouble(), e.getValue.get(1).asDouble()))
           }.toMap
         case Array("#schema", json) =>
           schema = Some(DataType.fromJson(json).asInstanceOf[StructType])
         case other if other.head.startsWith("#") => () // unknown metadata line
-        case Array(n, lo, hi, rc) => entries += FileEntry(n, opt(lo), opt(hi), opt(rc))
-        case Array(n, lo, hi) => entries += FileEntry(n, opt(lo), opt(hi), None) // pre-rowCount manifest
-        case other => entries += FileEntry(other.head, None, None, None)
+        case Array(n, lo, hi, rc) if rc.nonEmpty =>
+          entries += FileEntry(n, opt(lo), opt(hi), rc.toLong)
+        case other => throw invalid(s"the line of data file '${other.head}' has no row count")
       }
     }
-    Snapshot(entries.result(), txn.result(), colStats.result(), schema)
+    Snapshot(entries.result(), schema.getOrElse(throw invalid("no #schema line")),
+      txn.result(), colStats.result())
   }
 }

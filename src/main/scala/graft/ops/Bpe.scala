@@ -211,13 +211,8 @@ object Bpe {
     * merge chain over every occurrence instead costs |corpus| / |vocab|
     * times more compute for identical results — measured 511 s → the
     * dictionary path at the 10× bench corpus, where each word repeats
-    * thousands of times. The dictionary is pinned and COUNTED, and the
-    * join carries an explicit broadcast hint while the measured row
-    * count is under `spark.graft.encode.dictBroadcastRows` (default
-    * 2M) — Spark's own estimate for a pinned aggregate is the
-    * unknown-size default, far over the auto-broadcast threshold, so
-    * without the hint the corpus-sized token explode was shuffled for
-    * a sort-merge join against a vocabulary-sized dict (r18, §3.1).
+    * thousands of times. The explode, join and reassembly are
+    * [[dictEncode]]'s.
     *
     * PRECONDITION: `idCol` must be unique and non-null — reassembly
     * groups by the id and re-attaches payload columns by an id
@@ -230,37 +225,51 @@ object Bpe {
     * `n_bpe_tokens`. Rows with no tokens get empty arrays. */
   def encode(df: DataFrame, textCol: String, merges: Seq[Merge],
              idCol: String = "doc_id"): DataFrame = {
-    val dict0 = graft.core.Checkpoints.pin(
+    val dict = graft.core.Checkpoints.pin(
       segmentDict(wordFreq(df, textCol), merges)
         .select(col("word"), col("syms"), size(col("syms")).cast("long").as("n")))
-    val bcastMax = df.sparkSession.conf
-      .getOption("spark.graft.encode.dictBroadcastRows").map(_.toLong)
-      .getOrElse(2000000L)
-    val dict = if (dict0.count() <= bcastMax) broadcast(dict0) else dict0
-    // Reassembly is keyed on `idCol` ALONE (r17, guide §2.3/§8): the
-    // token explode previously carried EVERY column — including the
-    // full document text — so the dictionary join and the
-    // reassembling aggregate moved (and, past the object-hash-agg
-    // fallback threshold, SORTED) the text once per token. Now the
-    // explode ships (id, pos, word), the aggregate shuffles (id,
-    // pieces), and the documents' payload columns attach once by id.
+    dictEncode(df, textCol, idCol, dict, "bpe_tokens", "n_bpe_tokens")
+  }
+
+  /** Largest segmented dictionary [[dictEncode]] broadcasts. */
+  private val DictBroadcastRows = 2000000L
+
+  /** The tail of a dictionary encode ([[encode]], [[Unigram.encode]]):
+    * `dict` (word, syms, n) is the caller's pinned segmented
+    * dictionary. It is COUNTED, and the join carries an explicit
+    * broadcast hint while the count is at most [[DictBroadcastRows]] —
+    * Spark's own estimate for a pinned aggregate is the unknown-size
+    * default, far over the auto-broadcast threshold, so without the
+    * hint the corpus-sized token explode was shuffled for a sort-merge
+    * join against a vocabulary-sized dict.
+    *
+    * Reassembly is keyed on `idCol` ALONE: the explode ships (id, pos,
+    * word) rather than every column (carrying the document text
+    * through the join and the reassembling aggregate once per token),
+    * the aggregate shuffles (id, pieces), and the documents' payload
+    * columns attach once by id. Output adds `tokensCol` (pieces in
+    * word order, empty when none) and `countCol`. */
+  private[ops] def dictEncode(df: DataFrame, textCol: String, idCol: String,
+                              dict: DataFrame, tokensCol: String,
+                              countCol: String): DataFrame = {
+    val hinted = if (dict.count() <= DictBroadcastRows) broadcast(dict) else dict
     val exploded = df
       .select(col(idCol).as("__eid"),
         filter(split(btrim(lower(col(textCol))), "\\s+"), w => w =!= "").as("__words"))
       .select(col("__eid"), posexplode_outer(col("__words")).as(Seq("__pos", "word")))
-    val perDoc = exploded.join(dict, Seq("word"), "left")
+    val perDoc = exploded.join(hinted, Seq("word"), "left")
       .groupBy(col("__eid"))
       .agg(
         coalesce(
           flatten(array_sort(collect_list(struct(col("__pos"), col("syms"))))
             .getField("syms")),
-          array().cast("array<string>")).as("bpe_tokens"),
-        coalesce(sum(col("n")), lit(0L)).as("n_bpe_tokens"))
+          array().cast("array<string>")).as(tokensCol),
+        coalesce(sum(col("n")), lit(0L)).as(countCol))
     df.join(perDoc, df(idCol) <=> perDoc("__eid"), "left")
       .drop("__eid")
-      .withColumn("bpe_tokens",
-        coalesce(col("bpe_tokens"), array().cast("array<string>")))
-      .withColumn("n_bpe_tokens", coalesce(col("n_bpe_tokens"), lit(0L)))
+      .withColumn(tokensCol,
+        coalesce(col(tokensCol), array().cast("array<string>")))
+      .withColumn(countCol, coalesce(col(countCol), lit(0L)))
   }
 
   /** Apply the merge chain to a word-frequency dict: the WHOLE

@@ -227,18 +227,18 @@ object Dedup {
     *
     * Cost: one column-pruned aggregate over the bucket-key columns,
     * plus — only when something IS saturated — a sub-key aggregate
-    * over just the saturated rows. When the caller knows the index's
-    * TOTAL committed row count (manifest metadata, O(1)) and it is ≤
+    * over just the saturated rows. `totalRows` is the index's TOTAL
+    * committed row count (manifest metadata, O(1)); when it is ≤
     * maxBucket, no bucket can exceed the cap and the jobs are skipped
     * outright — small/young indexes pay nothing. Returns
     * (saturatedBuckets, cappedRows). */
   private[graft] def observeSaturation(idx: DataFrame, keys: Seq[String],
                                      maxBucket: Int, counterPrefix: String,
-                                     totalRows: Option[Long] = None,
+                                     totalRows: Long,
                                      withSub: DataFrame => DataFrame = identity)
       : (Long, Long) = {
     val (nb, nr, nSplit) =
-      if (totalRows.exists(_ <= maxBucket)) (0L, 0L, 0L)
+      if (totalRows <= maxBucket) (0L, 0L, 0L)
       else {
         val row = idx.groupBy(keys.map(col): _*)
           .agg(count(lit(1)).as("bsz"))

@@ -58,8 +58,8 @@ final class IncrementalDedup private (
     sig.select(col("id"), posexplode(Dedup.bandHashes(col("sig"), bands, rows)))
       .select(col("pos").as("band"), col("col").as("bucket"), col("id"))
 
-  /** Sub-bucket key for saturated-bucket splitting (r14,
-    * [[Dedup.resolveSaturated]]): the value of the NEXT band —
+  /** Sub-bucket key for saturated-bucket splitting
+    * ([[Dedup.resolveSaturated]]): the value of the NEXT band —
     * (band+1) mod bands — of the row's own signature. Both sides of a
     * collision compute it from their own content, so a probe whose
     * near-dup agrees on the secondary band lands in its twin's
@@ -97,10 +97,9 @@ final class IncrementalDedup private (
     * against that pin: lazy, but with NO index-snapshot read and NO
     * signature computation in the lineage (the hazards that would make
     * a lazy result unsafe — a recompute against an index that has
-    * since moved), so a caller action pays one scan of its own batch.
-    * (Through r13 this method instead pinned every surviving input row
-    * — document text included — a block-storage write that grew with
-    * the data while the decision it protects is just ids.) Signatures
+    * since moved), so a caller action pays one scan of its own batch,
+    * and the pin stays ids-sized where pinning the survivors would
+    * grow with the document text. Signatures
     * are computed exactly once per batch (one cached (id, sig) pass
     * feeds the within-batch pairing, the index verify, and the index
     * append).
@@ -119,7 +118,7 @@ final class IncrementalDedup private (
     * rows) and the duplicates inflate bucket-occupancy counts toward
     * the `maxBucket` saturation threshold — any source that can replay
     * should pass the token. Saturated buckets are resolved, not
-    * skipped (r13 exemplar sampling; r14 adds the sub-bucket SPLIT —
+    * skipped (sub-bucket SPLIT plus exemplar sampling —
     * [[Dedup.resolveSaturated]]): a copy of a saturated family
     * verifies against an exemplar (or its own sub-bucket) and drops,
     * and a replayed batch still meets its kept copies and re-drops.
@@ -173,26 +172,19 @@ final class IncrementalDedup private (
       // what makes a replayed foreachBatch micro-batch idempotent
       // instead of colliding with its own first-attempt index entries
       // and silently vanishing (see the replay spec).
-      // emptiness from manifest metadata (O(1)) instead of an isEmpty
-      // JOB — this operator is a long sequential chain of small
-      // actions, and every removed action is wall time at any scale
-      // (legacy stat-less manifests fall back to the probe job).
-      // ONE manifest resolution serves BOTH the row count and the
-      // collision-join snapshot — two resolutions could straddle a
-      // concurrent commit and judge a newer, larger snapshot by a
-      // stale count (r12 advice)
+      // emptiness from manifest row counts (O(1)), not an isEmpty JOB —
+      // this operator is a long sequential chain of small actions, and
+      // every removed action is wall time at any scale. ONE manifest
+      // resolution serves BOTH the row count and the collision-join
+      // snapshot — two resolutions could straddle a concurrent commit
+      // and judge a newer, larger snapshot by a stale count
       val snap = buckets.committedSnapshot
-      val keptRows = snap.flatMap(_._1)
+      val keptRows = snap.fold(0L)(_._2)
       // set by the saturated branch; invoked after the drop-set pin
       // materializes (resolveSaturated caches the saturated slice)
       var resolveCleanup: () => Unit = () => ()
       val indexDropped: DataFrame =
-        (snap match {
-          case None => None
-          case Some((Some(0L), _)) => None
-          case Some((Some(_), df)) => Some(df)
-          case Some((None, df)) => Some(df).filterNot(_.isEmpty)
-        }) match {
+        snap.collect { case (_, rows, df) if rows > 0 => df } match {
           case None => sig.limit(0).select(col("id"))
           case Some(idx) =>
             // saturation probe (counters minhashIndexSaturatedBuckets/
@@ -200,16 +192,14 @@ final class IncrementalDedup private (
             // skipped for free while the whole index fits one bucket.
             // Its result picks the collision-join shape: with NOTHING
             // saturated (the steady state, asserted at gate scale) the
-            // join is a PLAIN band-bucket equi-join — none of the
-            // cap/split machinery rides the per-batch plan (r14;
-            // through r13 every batch paid an in-plan bucket-count
-            // aggregate + window). With real saturation, saturated
-            // buckets resolve via Dedup.resolveSaturated: sub-bucket
-            // SPLIT by a secondary band of the member's own signature
-            // (full recall for secondary-band-intact probes — the r13
-            // mutually-FAR residual) plus the r13 global exemplars, so
-            // recall strictly dominates r13 at the same 2×maxBucket
-            // per-probe bound.
+            // join is a PLAIN band-bucket equi-join — no in-plan
+            // bucket-count aggregate or cap/split machinery rides the
+            // per-batch plan. With real saturation, saturated buckets
+            // resolve via Dedup.resolveSaturated: sub-bucket SPLIT by a
+            // secondary band of the member's own signature (full recall
+            // for secondary-band-intact probes, including mutually-FAR
+            // members of one bucket) plus global exemplars, at a
+            // 2×maxBucket per-probe bound.
             val (nb, _) = Dedup.observeSaturation(idx, Seq("band", "bucket"),
               maxBucket, "minhashIndex", keptRows, withSub = idxWithSub)
             val collided =
@@ -243,11 +233,9 @@ final class IncrementalDedup private (
         }
 
       // materialize the WHOLE dedup decision once as the pinned DROP
-      // SET — a frame of bare ids, KBs at any batch size. Through r13
-      // this step pinned every SURVIVING input row (document text
-      // included): a block-storage write whose bytes grew with the
-      // data while the decision it protects is just ids. Every
-      // downstream consumer anti-joins this pin BROADCAST — without
+      // SET — a frame of bare ids, KBs at any batch size (pinning the
+      // surviving rows instead would write the document text to block
+      // storage, growing with the data). Every downstream consumer anti-joins this pin BROADCAST — without
       // the hint the pinned side has no stats, the planner picks a
       // sort-merge join, and every consumer action re-shuffles the
       // full batch (text included): measured ~2× on the sf2 gate. A
@@ -258,8 +246,8 @@ final class IncrementalDedup private (
           .localCheckpoint(true))
         // the pinned drop set no longer reads the slice — and if the
         // eager checkpoint/broadcast THROWS, the slices cached inside
-        // resolveSaturated must not stay pinned for the session
-        // (r15 ADVICE), so the release rides a finally
+        // resolveSaturated must not stay pinned for the session, so
+        // the release rides a finally
         finally resolveCleanup()
 
       // stage 3 — commit the survivors to the index (bands first, sigs
@@ -307,15 +295,10 @@ final class IncrementalDedup private (
     try {
       val empty = sig.limit(0).select(col("id").as(idCol),
         col("id").as("kept_id"), lit(1.0).as("est_jaccard"))
-      val snap = buckets.committedSnapshotVersioned
-      val keptRows = snap.flatMap(_._2)
+      val snap = buckets.committedSnapshot
+      val keptRows = snap.fold(0L)(_._2)
       val snapVersion = snap.map(_._1)
-      (snap match {
-        case None => None
-        case Some((_, Some(0L), _)) => None
-        case Some((_, Some(_), df)) => Some(df)
-        case Some((_, None, df)) => Some(df).filterNot(_.isEmpty)
-      }) match {
+      snap.collect { case (_, rows, df) if rows > 0 => df } match {
         case None => empty.localCheckpoint(true)
         case Some(idx) =>
           // read-only path: no saturation-counter action — when the
@@ -327,7 +310,7 @@ final class IncrementalDedup private (
           // and only a version with a genuinely saturated bucket pays
           // the split/exemplar resolution in-plan
           val (collided, resolveCleanup) =
-            if (keptRows.exists(_ <= maxBucket) ||
+            if (keptRows <= maxBucket ||
                 !Dedup.saturationVerdict(
                   s"${buckets.path}@${snapVersion.getOrElse(-1L)}" +
                     s"!${snapVersion.map(buckets.versionToken).getOrElse("-")}#$maxBucket",
@@ -350,7 +333,7 @@ final class IncrementalDedup private (
                   .select(col("id"), col("kept_id"))), free)
             }
           // pin before the signature cache drops; release the
-          // saturated slices even if the checkpoint throws (r15 ADVICE)
+          // saturated slices even if the checkpoint throws
           try collided.distinct()
             .join(sigs.read.select(col("id").as("kept_id"), col("sig").as("kept_sig")),
               Seq("kept_id"))

@@ -55,18 +55,12 @@ object LanguageModel {
     // them so the scoring joins probe docBigram in place instead of
     // shuffling it twice more (r18, guide §3.1; Spark can't estimate
     // a pinned aggregate's size, so without the hint both joins went
-    // sort-merge). spark.graft.lm.broadcastCounts=false restores SMJ
-    // for corpora whose distinct-bigram table outgrows a broadcast
-    // (8 GB / 512M-row cap).
-    val hint: DataFrame => DataFrame =
-      if (docs.sparkSession.conf.getOption("spark.graft.lm.broadcastCounts")
-            .forall(_.toBoolean)) broadcast _
-      else identity _
-    val bigramCounts = hint(docBigram.groupBy(col("w1"), col("w2"))
+    // sort-merge).
+    val bigramCounts = broadcast(docBigram.groupBy(col("w1"), col("w2"))
       .agg(sum(col("k")).as("cb")))
     // c(w1·) = Σ_w2 c(w1,w2): derived from the bigram counts —
     // vocabulary-scale input — instead of a fourth corpus-scale pass
-    val startCounts = hint(bigramCounts.groupBy(col("w1"))
+    val startCounts = broadcast(bigramCounts.groupBy(col("w1"))
       .agg(sum(col("cb")).as("cs")))
     val vocab = withToks.select(explode(col("t")).as("w"))
       .agg(countDistinct(col("w")).as("v"))

@@ -33,17 +33,16 @@ import graft.core.TableStore
   * the index, so they can never drop a future payload).
   *
   * Hot buckets (shared design with [[IncrementalDedup]]): a content
-  * family larger than `maxBucket` saturates its index bucket. Through
-  * r12 the skew cap EXCLUDED such buckets from future collision joins
-  * and later copies leaked; r13 sampled saturated buckets down to
-  * exemplars; r14 additionally SPLITS them into sub-buckets keyed by
-  * a secondary band of the member's own hash
-  * ([[Dedup.resolveSaturated]]) — the join-cost bound stays
-  * O(maxBucket) per probe per bucket, a later copy of a family
-  * verifies against an exemplar (or its own sub-bucket) and drops,
-  * and a bucket of mutually-FAR members (unrelated content colliding
-  * on one 16-bit band — the r13 residual) retains recall against
-  * EVERY member for probes whose flips miss the secondary band pair.
+  * family larger than `maxBucket` saturates its index bucket. Such a
+  * bucket stays in the collision join, sampled down to exemplars and
+  * SPLIT into sub-buckets keyed by a secondary band of the member's
+  * own hash ([[Dedup.resolveSaturated]]; excluding it instead would
+  * let later copies leak) — the join-cost bound stays O(maxBucket)
+  * per probe per bucket, a later copy of a family verifies against an
+  * exemplar (or its own sub-bucket) and drops, and a bucket of
+  * mutually-FAR members (unrelated content colliding on one 16-bit
+  * band) retains recall against EVERY member for probes whose flips
+  * miss the secondary band pair.
   * The engine counters `perceptualIndexSaturatedBuckets` /
   * `perceptualIndexCappedRows` / `perceptualIndexSplitBuckets`
   * (core.Metrics → JMX, bumped by every [[dedupBatch]]) mark exactly
@@ -79,8 +78,8 @@ final class PerceptualDedupIndex private (
         posexplode(Dedup.hammingBands(col("h"), maxHamming = 6)))
       .select(col("pos").as("band"), col("col").as("bucket"), col("id"), col("h"))
 
-  /** Sub-bucket key for saturated-bucket splitting (r14,
-    * [[Dedup.resolveSaturated]]): the value of the NEXT band pair —
+  /** Sub-bucket key for saturated-bucket splitting
+    * ([[Dedup.resolveSaturated]]): the value of the NEXT band pair —
     * (band+1) mod 28 — computed from the row's own 64-bit hash, so
     * both sides of a collision derive it identically. Every index row
     * carries `h`, so no side table is needed (unlike the MinHash
@@ -103,8 +102,8 @@ final class PerceptualDedupIndex private (
     * against that pin: lazy, but with no payload re-hash and no
     * index-snapshot read in the lineage (the hazards that would make a
     * lazy result unsafe), so a caller action pays one scan of its own
-    * batch. (Through r13 this pinned every surviving input row —
-    * payloads included — into block storage.)
+    * batch, and the pin stays ids-sized where pinning the survivors
+    * would write their payloads to block storage.
     *
     * IDEMPOTENT under at-least-once re-delivery (the foreachBatch
     * retry contract): survivors never vanish on replay — a kept
@@ -121,29 +120,21 @@ final class PerceptualDedupIndex private (
     * rows PERMANENTLY (compact() rewrites files, it does not
     * deduplicate rows) and the duplicates inflate bucket-occupancy
     * counts toward the `maxBucket` sampling threshold — any source
-    * that can replay should pass the token. (Through r12 a bucket the
-    * first attempt saturated was INVISIBLE to the replay's collision
-    * join — a payload dropped on attempt one could survive the
-    * replay; r13's exemplar sampling keeps saturated buckets in the
-    * join, so the replay still meets the kept copies and re-drops.) */
+    * that can replay should pass the token. Saturated buckets stay in
+    * the collision join (exemplars and sub-buckets), so a replay still
+    * meets the kept copies and re-drops. */
   def dedupBatch(batch: DataFrame, idCol: String, binCol: String,
                  txn: Option[(String, Long)] = None): DataFrame = {
     val h = hashed(batch, idCol, binCol).cache()
     try {
-      // emptiness from manifest metadata (O(1)) instead of an isEmpty
-      // JOB (legacy stat-less manifests fall back to the probe job).
+      // emptiness from manifest row counts (O(1)), not an isEmpty JOB.
       // ONE manifest resolution serves BOTH the row count and the
       // collision-join snapshot — two resolutions could straddle a
       // concurrent commit and judge a newer, larger snapshot by a
-      // stale count (r12 advice)
+      // stale count
       val snap = buckets.committedSnapshot
-      val keptRows = snap.flatMap(_._1)
-      val idxOpt = snap match {
-        case None => None
-        case Some((Some(0L), _)) => None
-        case Some((Some(_), df)) => Some(df)
-        case Some((None, df)) => Some(df).filterNot(_.isEmpty)
-      }
+      val keptRows = snap.fold(0L)(_._2)
+      val idxOpt = snap.collect { case (_, rows, df) if rows > 0 => df }
 
       // stage 1 — within-batch greedy min-id drop: id2 of any pair
       // within maxHamming drops (same rule as the one-shot pair ops)
@@ -170,13 +161,12 @@ final class PerceptualDedupIndex private (
           // Its result picks the collision-join shape: with NOTHING
           // saturated (the steady state) the join is a PLAIN
           // band-bucket equi-join — no cap/split machinery on the
-          // per-batch plan (r14). With real saturation, saturated
-          // buckets resolve via Dedup.resolveSaturated: sub-bucket
-          // SPLIT by the secondary band pair of the member's own hash
-          // (full recall for probes whose flips miss that pair — the
-          // r13 mutually-FAR residual) plus the r13 global exemplars;
-          // recall strictly dominates r13 at the same 2×maxBucket
-          // per-probe bound.
+          // per-batch plan. With real saturation, saturated buckets
+          // resolve via Dedup.resolveSaturated: sub-bucket SPLIT by the
+          // secondary band pair of the member's own hash (full recall
+          // for probes whose flips miss that pair, including
+          // mutually-FAR members of one bucket) plus global exemplars,
+          // at a 2×maxBucket per-probe bound.
           val (nb, _) = Dedup.observeSaturation(idx, Seq("band", "bucket"),
             maxBucket, "perceptualIndex", keptRows, withSub = withSub)
           val keptCols = Seq(col("band"), col("bucket"),
@@ -200,9 +190,9 @@ final class PerceptualDedupIndex private (
       }
 
       // materialize the WHOLE dedup decision once as the pinned DROP
-      // SET (bare ids — through r13 this pinned every surviving input
-      // row, PAYLOADS included: megabytes of block storage per batch
-      // protecting a decision that is just ids). BROADCAST: the
+      // SET (bare ids; pinning the surviving rows would put their
+      // PAYLOADS in block storage, megabytes per batch, to protect a
+      // decision that is just ids). BROADCAST: the
       // pinned side has no stats, and without the hint every consumer
       // action would re-shuffle the full payload batch through a
       // sort-merge join (see IncrementalDedup for the measurement).
@@ -210,7 +200,7 @@ final class PerceptualDedupIndex private (
         try broadcast(withinDropped.unionByName(indexDropped).distinct()
           .localCheckpoint(true))
         // the pinned drop set no longer reads the slice — release it
-        // even if the eager checkpoint/broadcast throws (r15 ADVICE)
+        // even if the eager checkpoint/broadcast throws
         finally resolveCleanup()
 
       val survivorBands = banded(h.join(dropped, Seq("id"), "left_anti"))
@@ -237,15 +227,10 @@ final class PerceptualDedupIndex private (
     try {
       val empty = h.limit(0).select(col("id").as(idCol),
         col("id").as("kept_id"), lit(0).as("hamming"))
-      val snap = buckets.committedSnapshotVersioned
-      val keptRows = snap.flatMap(_._2)
+      val snap = buckets.committedSnapshot
+      val keptRows = snap.fold(0L)(_._2)
       val snapVersion = snap.map(_._1)
-      (snap match {
-        case None => None
-        case Some((_, Some(0L), _)) => None
-        case Some((_, Some(_), df)) => Some(df)
-        case Some((_, None, df)) => Some(df).filterNot(_.isEmpty)
-      }) match {
+      snap.collect { case (_, rows, df) if rows > 0 => df } match {
         case None => empty.localCheckpoint(true)
         case Some(idx) =>
           // read-only path: no saturation-counter action — plain join
@@ -258,7 +243,7 @@ final class PerceptualDedupIndex private (
           val keptCols = Seq(col("band"), col("bucket"),
             col("id").as("kept_id"), col("h").as("kept_h"))
           val (collided, resolveCleanup) =
-            if (keptRows.exists(_ <= maxBucket) ||
+            if (keptRows <= maxBucket ||
                 !Dedup.saturationVerdict(
                   s"${buckets.path}@${snapVersion.getOrElse(-1L)}" +
                     s"!${snapVersion.map(buckets.versionToken).getOrElse("-")}#$maxBucket",
@@ -274,7 +259,7 @@ final class PerceptualDedupIndex private (
                   Seq("band", "bucket", "__sub")).drop("__sub")), free)
             }
           // pin before the hash cache drops; release the saturated
-          // slices even if the checkpoint throws (r15 ADVICE)
+          // slices even if the checkpoint throws
           try collided
             .withColumn("hamming",
               bit_count(col("h").bitwiseXOR(col("kept_h"))).cast("int"))
@@ -336,11 +321,11 @@ object PerceptualDedupIndex {
     // index must not open through that window — in particular a pin
     // deleted mid-rewrite must NOT be silently recreated from THIS
     // call's modality argument (the kernel-mismatch guard would be
-    // lost; r13 advice)
+    // lost)
     require(!fs.exists(new Path(hdir, "_dedup_params.migrating")),
       s"index at $dir has an interrupted band-layout migration — run " +
         "PerceptualDedupIndex.reband(spark, dir) to complete it before opening")
-    // hashfmt versions the BAND LAYOUT (2 = r12's C(8,2) pair-of-8-bit-
+    // hashfmt versions the BAND LAYOUT (2 = the C(8,2) pair-of-8-bit-
     // blocks scheme, recall guaranteed to Hamming 6; 1 was 4×16 single
     // blocks, guaranteed only to 3): an index persisted under the old
     // layout must fail loudly on reopen — its rows would silently never
@@ -381,12 +366,12 @@ object PerceptualDedupIndex {
     * params pin rewrites. Idempotent and crash-safe at every point:
     * the replace is txn-marked (a re-run after a crash re-applies
     * nothing), and the pin rewrite is journaled through a
-    * `_dedup_params.migrating` marker holding the TARGET pin content
-    * (r13 advice — the rewrite is delete-then-rename, and a crash
-    * between the two used to leave the index pinless, so the next
-    * open() recreated the pin from the CALLER's modality argument and
-    * the kernel-mismatch guard was silently lost for that window).
-    * Now the marker is written first; while it exists, open() refuses
+    * `_dedup_params.migrating` marker holding the TARGET pin content:
+    * the rewrite is delete-then-rename, and a crash between the two
+    * without the marker would leave the index pinless, so the next
+    * open() would recreate the pin from the CALLER's modality argument
+    * and the kernel-mismatch guard would be silently lost for that
+    * window. The marker is written first; while it exists, open() refuses
     * the index and names this method, and a reband re-run completes
     * the rewrite FROM THE MARKER (never from a caller argument).
     * No-op when the pin is already hashfmt=2 (a leftover marker from

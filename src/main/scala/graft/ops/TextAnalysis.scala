@@ -32,7 +32,6 @@ object TextAnalysis {
       length(regexp_replace(text, "[^.,!?;:]", ""))
   }
 
-  private val punctClass = "[.,!?;:]"
   private val defaultStopwords = Seq("the", "a", "and", "of", "to", "in", "is")
 
   /** Raw counting stats in ONE compiled pass (native

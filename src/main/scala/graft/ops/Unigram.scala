@@ -85,23 +85,29 @@ object Unigram {
             seedSize: Int = 2048, maxPieceLen: Int = 6): Seq[Piece] = {
     require(vocabSize >= 1 && iters >= 1 && seedSize >= vocabSize && maxPieceLen >= 1,
       "Unigram.learn: vocabSize >= 1, iters >= 1, seedSize >= vocabSize, maxPieceLen >= 1")
-    val dict = words.select(col("word"), col("wcount").cast("long").as("wcount"))
-      .localCheckpoint(true)
+    // both pins are released through the persisted-RDD diff:
+    // Dataset.unpersist does not reach the RDD a local checkpoint persisted
+    val sc = words.sparkSession.sparkContext
+    val (dict, releaseDict) = graft.core.Checkpoints.persistedDuring(sc)(
+      words.select(col("word"), col("wcount").cast("long").as("wcount")).localCheckpoint(true))
     try {
       // --- seeding: substring frequencies ---
-      // Pinned (r17, guide §2.4): `sub` feeds TWO collects (seed top-K
-      // and the alphabet) — unpinned, the second re-ran the dict-scale
-      // substring explode + aggregation. Post-agg it is distinct-
-      // substring-scale (bytes per row).
-      val sub = graft.core.Checkpoints.pin(dict.select(col("wcount"),
-          explode(concat((1 to maxPieceLen).map(k =>
-            graft.functions.TextHashFunctions.charShingles(
-              col("word"), k, distinct = false)): _*)).as("p"))
-        .groupBy(col("p")).agg(sum(col("wcount")).as("freq")))
-      val top = sub.orderBy(desc("freq"), asc("p")).limit(seedSize)
-        .collect().map(r => (r.getString(0), r.getLong(1)))
-      val alphabet = sub.filter(length(col("p")) === 1)
-        .collect().map(r => (r.getString(0), r.getLong(1)))
+      // Pinned: `sub` feeds TWO collects (seed top-K and the alphabet) —
+      // unpinned, the second re-ran the dict-scale substring explode +
+      // aggregation. Post-agg it is distinct-substring-scale (bytes per
+      // row).
+      val (sub, releaseSub) = graft.core.Checkpoints.persistedDuring(sc)(
+        graft.core.Checkpoints.pin(dict.select(col("wcount"),
+            explode(concat((1 to maxPieceLen).map(k =>
+              graft.functions.TextHashFunctions.charShingles(
+                col("word"), k, distinct = false)): _*)).as("p"))
+          .groupBy(col("p")).agg(sum(col("wcount")).as("freq"))))
+      val (top, alphabet) =
+        try (sub.orderBy(desc("freq"), asc("p")).limit(seedSize)
+            .collect().map(r => (r.getString(0), r.getLong(1))),
+          sub.filter(length(col("p")) === 1)
+            .collect().map(r => (r.getString(0), r.getLong(1))))
+        finally releaseSub()
       var vocab: Seq[(String, Long)] =
         (top ++ alphabet).distinctBy(_._1).toSeq
       var logp: Map[String, Long] = toLogpFp(vocab)
@@ -131,7 +137,7 @@ object Unigram {
       }
       vocab.map { case (p, c) => Piece(p, c, logp(p), logpToDouble(logp(p))) }
         .sortBy(_.piece).toSeq
-    } finally dict.unpersist()
+    } finally releaseDict()
   }
 
   private def toLogpFp(vocab: Seq[(String, Long)]): Map[String, Long] = {
@@ -143,11 +149,9 @@ object Unigram {
   /** Corpus-scale application of a learned vocabulary — DICTIONARY-
     * ENCODED like [[Bpe.encode]]: the Viterbi kernel segments each
     * DISTINCT word once (vocabulary-scale), documents explode to
-    * (doc, pos, word), join the segmented dictionary (pinned, counted,
-    * and broadcast-hinted under the measured-row-count guard
-    * `spark.graft.encode.dictBroadcastRows` — see [[Bpe.encode]]) and
-    * reassemble in word order. Output adds `uni_tokens` (pieces, word
-    * order) and `n_uni_tokens`.
+    * (doc, pos, word), join the segmented dictionary and reassemble in
+    * word order ([[Bpe.dictEncode]]). Output adds `uni_tokens` (pieces,
+    * word order) and `n_uni_tokens`.
     *
     * PRECONDITION: `idCol` must be unique and non-null — reassembly
     * groups by the id and re-attaches payload columns by an id
@@ -156,36 +160,12 @@ object Unigram {
              maxPieceLen: Int = 6, idCol: String = "doc_id"): DataFrame = {
     val pieces = vocab.map(_.piece).toArray
     val lps = vocab.map(_.logp_fp).toArray
-    val dict0 = graft.core.Checkpoints.pin(
+    val dict = graft.core.Checkpoints.pin(
       Bpe.wordFreq(df, textCol).select(col("word"))
         .withColumn("syms", graft.functions.UnigramFunctions.segment(
           col("word"), pieces, lps, maxPieceLen))
         .select(col("word"), col("syms"), size(col("syms")).cast("long").as("n")))
-    val bcastMax = df.sparkSession.conf
-      .getOption("spark.graft.encode.dictBroadcastRows").map(_.toLong)
-      .getOrElse(2000000L)
-    val dict = if (dict0.count() <= bcastMax) broadcast(dict0) else dict0
-    // id-keyed reassembly (r17, guide §2.3/§8 — same reshape as
-    // Bpe.encode): the token explode ships (id, pos, word) instead of
-    // every document column, and the payload columns re-attach once by
-    // id after the aggregate.
-    val exploded = df
-      .select(col(idCol).as("__eid"),
-        filter(split(btrim(lower(col(textCol))), "\\s+"), w => w =!= "").as("__words"))
-      .select(col("__eid"), posexplode_outer(col("__words")).as(Seq("__pos", "word")))
-    val perDoc = exploded.join(dict, Seq("word"), "left")
-      .groupBy(col("__eid"))
-      .agg(
-        coalesce(
-          flatten(array_sort(collect_list(struct(col("__pos"), col("syms"))))
-            .getField("syms")),
-          array().cast("array<string>")).as("uni_tokens"),
-        coalesce(sum(col("n")), lit(0L)).as("n_uni_tokens"))
-    df.join(perDoc, df(idCol) <=> perDoc("__eid"), "left")
-      .drop("__eid")
-      .withColumn("uni_tokens",
-        coalesce(col("uni_tokens"), array().cast("array<string>")))
-      .withColumn("n_uni_tokens", coalesce(col("n_uni_tokens"), lit(0L)))
+    Bpe.dictEncode(df, textCol, idCol, dict, "uni_tokens", "n_uni_tokens")
   }
 
   /** Segment a word under a learned vocabulary — same Viterbi spec as

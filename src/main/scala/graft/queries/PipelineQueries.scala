@@ -70,7 +70,7 @@ object PipelineQueries {
       // zero-tolerance DuckDB oracle (r13) also locks at the gate SF.
       // It runs at the oracle SF and EVERY real bench SF and skips
       // only derived scaling corpora (logged).
-      if (ScaleGuard.probeEnabled(s, dir, "q_dedup_minhash")) {
+      if (ScaleGuard.probeEnabled(dir, "q_dedup_minhash")) {
         // sentinel ids are derived from the corpus's own max id, and
         // planted survivors are counted by JOINING back to the planted
         // set — an absolute id-range sentinel silently collided with
@@ -156,7 +156,7 @@ object PipelineQueries {
         // the oracle SF and EVERY real bench SF and skips only derived
         // scaling corpora (logged), where it would re-verify the same
         // machinery at double the cost.
-        if (ScaleGuard.probeEnabled(s, dir, "q_dedup_incremental")) {
+        if (ScaleGuard.probeEnabled(dir, "q_dedup_incremental")) {
           val oneShot = Dedup.minhashDedupSigned(d, "doc_id", sig,
             threshold = 0.6, numHashes = 64, bands = 16, maxBucket = cap)
             .select(col("doc_id"))
@@ -198,7 +198,7 @@ object PipelineQueries {
     // recall property that the zero-tolerance DuckDB oracle (r13)
     // also locks at the gate SF; it runs at the oracle SF and EVERY
     // real bench SF and skips only derived scaling corpora (logged).
-    if (ScaleGuard.probeEnabled(s, dir, "q_dedup_simhash")) {
+    if (ScaleGuard.probeEnabled(dir, "q_dedup_simhash")) {
       // the sentinel offset derives from the corpus's own max id (see
       // the q_dedup_minhash shard-collision lesson)
       val maxId = d.agg(max(col("doc_id"))).head().getLong(0)
@@ -1562,7 +1562,7 @@ object PipelineQueries {
     // locked by PipelineOpsSpec's exact-vs-LSH test). It runs at the
     // oracle SF and EVERY real bench SF and skips only derived
     // scaling corpora (logged).
-    if (ScaleGuard.probeEnabled(s, dir, "q_sim_lsh")) {
+    if (ScaleGuard.probeEnabled(dir, "q_sim_lsh")) {
       val dim = 32
       def hashVec(id: org.apache.spark.sql.Column, seed: Int) =
         transform(sequence(lit(0), lit(dim - 1)), j =>

@@ -1,49 +1,28 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
-
-/** Explicit on/off decision for the gates' cost-heavy in-query
-  * self-check probes (the second/third full-pipeline passes in
-  * q_dedup_minhash, q_dedup_incremental, q_dedup_simhash, q_sim_lsh,
-  * q_stream_neardup, q_stream_throttle).
+/** On/off decision for the gates' cost-heavy in-query self-check
+  * probes (the second/third full-pipeline passes in q_dedup_minhash,
+  * q_dedup_incremental, q_dedup_simhash, q_sim_lsh, q_stream_neardup,
+  * q_stream_throttle), taken from corpus provenance, never from a row
+  * count: a row-count threshold would silently stop the probes at
+  * every scale once the first bench SF outgrew it.
   *
-  * r14 keyed these guards on magic row-count thresholds
-  * (`nCorpus <= 10000`), which had two failure modes the r14 ADVICE
-  * named: (a) if the first bench SF ever grows past a threshold, the
-  * probes silently stop running at EVERY scale — including the scale
-  * where the r12 minhash sentinel-collision bug was historically
-  * caught — and (b) a skip left no trace, so a bench record could not
-  * show whether its run ever exercised the checks.
-  *
-  * The decision is now provenance-driven and logged:
-  *
-  *  - session conf `spark.graft.selfcheck` = `full` → probes always
-  *    run (any corpus, any scale);
-  *  - `off` → probes never run (dev knob; every skip still logged);
-  *  - `scale` (default) → probes run on every REAL corpus (the oracle
-  *    SF and the driver's first bench SF, whatever their sizes) and
-  *    skip only a DERIVED scaling corpus, detected by ScaleUp's
-  *    completion marker in the input directory — an explicit artifact
-  *    of corpus provenance, not a row count. Scaling corpora exist to
-  *    measure wall growth; re-running a corpus-size-independent probe
-  *    there doubles the measured gate without verifying anything the
-  *    first SF didn't (each site's comment carries its own argument).
+  * Probes run on every REAL corpus (the oracle SF and the driver's
+  * first bench SF, whatever their sizes) and skip only a DERIVED
+  * scaling corpus, detected by ScaleUp's completion marker in the
+  * input directory. Scaling corpora exist to measure wall growth;
+  * re-running a corpus-size-independent probe there doubles the
+  * measured gate without verifying anything the first SF didn't (each
+  * site's comment carries its own argument).
   *
   * Every skip prints one stderr line naming the gate, so a bench run
   * that never exercised a probe is visible in its output record.
   */
 object ScaleGuard {
-  def probeEnabled(s: SparkSession, dir: String, gate: String): Boolean = {
-    val mode = s.conf.get("spark.graft.selfcheck", "scale").trim.toLowerCase
-    val run = mode match {
-      case "full" => true
-      case "off"  => false
-      case _      => !graft.tools.ScaleUp.completeMarker(dir).exists()
-    }
+  def probeEnabled(dir: String, gate: String): Boolean = {
+    val run = !graft.tools.ScaleUp.completeMarker(dir).exists()
     if (!run) System.err.println(
-      s"[graft] $gate: in-gate self-check probe SKIPPED (" +
-        (if (mode == "off") "spark.graft.selfcheck=off"
-         else s"derived scaling corpus at $dir") + ")")
+      s"[graft] $gate: in-gate self-check probe SKIPPED (derived scaling corpus at $dir)")
     run
   }
 

@@ -6,7 +6,7 @@ import org.apache.spark.sql.streaming.OutputMode
 import java.util.concurrent.atomic.AtomicLong
 import graft.core.{GraftSession, Tables}
 import graft.streaming.StreamOps
-import graft.cep.{EventProcessor, Process}
+import graft.cep.EventProcessor
 
 /** Structured-Streaming and CEP operators driven end-to-end through the
   * correctness gate: each query runs a real streaming query (file
@@ -513,7 +513,7 @@ object StreamQueries {
       // asserted at every SF (a silently-empty sink must redden the
       // gate, not vacuously pass the equivalence).
       require(fromStream.count() > 0, "q_stream_neardup: streamed sink is empty")
-      if (ScaleGuard.probeEnabled(s, dir, "q_stream_neardup")) {
+      if (ScaleGuard.probeEnabled(dir, "q_stream_neardup")) {
         val direct = IncrementalDedup.open(s, s"$base/idx_direct", threshold = 0.9)
         val d1 = direct.dedupBatch(half1, "doc_id", "text").select(col("doc_id"), col("source"))
         val d2 = direct.dedupBatch(half2, "doc_id", "text").select(col("doc_id"), col("source"))
@@ -651,7 +651,7 @@ object StreamQueries {
       // ev.collect() into a driver OOM — above 2M events (the same
       // bound q_stream_anomaly's probe kept) skip + log instead. The
       // row count rides the min/max action at the top of the gate.
-      if (ScaleGuard.probeEnabled(s, dir, "q_stream_throttle") &&
+      if (ScaleGuard.probeEnabled(dir, "q_stream_throttle") &&
           ScaleGuard.collectBounded(evRows, 2000000L, "q_stream_throttle")) {
         val all = ev.collect().map(x =>
           (x.getLong(0).toString, x.getLong(1), x.getLong(2))).toSeq

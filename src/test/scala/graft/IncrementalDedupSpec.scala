@@ -169,7 +169,7 @@ class IncrementalDedupSpec extends AnyFunSuite {
     def c(name: String) = graft.core.Metrics.snapshot
       .get(s"counter.$name").map(_.count).getOrElse(0L)
     val (b0, s0, r0) = (c("tSaturatedBuckets"), c("tSplitBuckets"), c("tCappedRows"))
-    Dedup.observeSaturation(df, Seq("band", "bucket"), maxBucket, "t", None, withSub)
+    Dedup.observeSaturation(df, Seq("band", "bucket"), maxBucket, "t", df.count(), withSub)
     assert(c("tSaturatedBuckets") - b0 == 2L)
     assert(c("tCappedRows") - r0 == 14L)
     assert(c("tSplitBuckets") - s0 == 1L,

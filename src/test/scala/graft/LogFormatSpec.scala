@@ -40,26 +40,51 @@ class LogFormatSpec extends AnyFunSuite {
     val schema = StructType(Seq(StructField("id", LongType, nullable = false),
       StructField("tags", ArrayType(StringType)), StructField("v", DoubleType)))
     val snap = Snapshot(
-      Seq(FileEntry("a-part-0.parquet", Some(-3L), Some(9L), Some(5L)),
-        FileEntry("b-part-1.parquet", None, None, Some(3L)),
-        FileEntry("c-part-2.parquet", Some(10L), Some(10L), Some(1L))),
+      Seq(FileEntry("a-part-0.parquet", Some(-3L), Some(9L), 5L),
+        FileEntry("b-part-1.parquet", None, None, 3L),
+        FileEntry("c-part-2.parquet", Some(10L), Some(10L), 1L)),
+      schema,
       txn = Map("sinkA" -> 7L, "sinkB" -> 0L),
-      colStats = Map("a-part-0.parquet" -> Map("v" -> ((-1.5, 2.25)), "n" -> ((0.0, 4.0)))),
-      schema = Some(schema))
-    assert(VersionLog.decode(VersionLog.encode(snap)) == snap)
-    assert(snap.rowCount.contains(9L))
+      colStats = Map("a-part-0.parquet" -> Map("v" -> ((-1.5, 2.25)), "n" -> ((0.0, 4.0)))))
+    def roundTrip(s: Snapshot) = VersionLog.decode(VersionLog.encode(s), "v0.manifest")
+    assert(roundTrip(snap) == snap)
+    assert(snap.rowCount == 9L)
     // stats of files no longer in the version are not written
     val stale = snap.copy(colStats = snap.colStats + ("gone.parquet" -> Map("v" -> ((0.0, 1.0)))))
-    assert(VersionLog.decode(VersionLog.encode(stale)) == snap)
-    assert(VersionLog.decode(VersionLog.encode(Snapshot.empty)) == Snapshot.empty)
-    // legacy entries: no row count, no stats at all
-    val legacy = VersionLog.decode("f1\t1\t2\nf2\n")
-    assert(legacy.entries == Seq(FileEntry("f1", Some(1L), Some(2L), None),
-      FileEntry("f2", None, None, None)))
-    assert(legacy.rowCount.isEmpty && legacy.schema.isEmpty && legacy.txn.isEmpty)
+    assert(roundTrip(stale) == snap)
+    assert(roundTrip(Snapshot.empty) == Snapshot.empty)
+    // a file line without a row count, or a version without a schema,
+    // is rejected with the version file named
+    val schemaLine = s"#schema\t${schema.json}\n"
+    Seq("f1\t1\t2\n" + schemaLine, "f1\t1\t2\t\n" + schemaLine, "f2\n" + schemaLine,
+        "f1\t1\t2\t4\n").foreach { legacy =>
+      val e = intercept[IllegalStateException](VersionLog.decode(legacy, "/t/_versions/v3.manifest"))
+      assert(e.getMessage.contains("/t/_versions/v3.manifest"), e.getMessage)
+    }
     assert(VersionLog.fileName(12L) == "v12.manifest")
     assert(VersionLog.versionOf("v12.manifest").contains(12L))
     assert(VersionLog.versionOf("v12.claim").isEmpty && VersionLog.versionOf(".tmp-ab12").isEmpty)
+  }
+
+  test("initialize runs no Spark job; an emptied, vacuumed store reads zero rows under its schema") {
+    val dir = TempDirs.create("graft_lf_init_")
+    val st = new TableStore(spark, dir, "id")
+    val (_, jobs) = SparkJobs.count(spark.sparkContext)(st.initialize(freshRows(1).schema))
+    assert(jobs == 0, s"initialize ran $jobs Spark jobs")
+    def columns(df: org.apache.spark.sql.DataFrame) =
+      df.schema.fields.toSeq.map(f => f.name -> f.dataType)
+    assert(st.versions.size == 1 && st.read.count() == 0L)
+    assert(columns(st.read) == Seq("id" -> LongType, "tag" -> StringType, "v" -> DoubleType))
+    // widen the schema, then delete every row and vacuum every file away
+    st.append(freshRows(10).withColumn("w", col("id") * 2))
+    st.delete(col("id") >= 0L)
+    st.vacuum(graceMs = 0L)
+    assert(new java.io.File(s"$dir/files").list().count(_.endsWith(".parquet")) == 0)
+    assert(!new java.io.File(s"$dir/_schema").exists())
+    val reopened = new TableStore(spark, dir, "id")
+    assert(reopened.read.count() == 0L && reopened.rowCountFromManifest == 0L)
+    assert(columns(reopened.read) ==
+      Seq("id" -> LongType, "tag" -> StringType, "v" -> DoubleType, "w" -> LongType))
   }
 
   test("reopen resumes versions and txn state") {
@@ -71,7 +96,7 @@ class LogFormatSpec extends AnyFunSuite {
     assert(reopened.versions == st.versions && reopened.versions.size == 2)
     assert(reopened.lastTxn("sink").contains(0L))
     // row count and max id come from manifest metadata, not a scan
-    assert(reopened.rowCountFromManifest.contains(25L))
+    assert(reopened.rowCountFromManifest == 25L)
     assert(reopened.maxId.contains(104L))
     assert(!reopened.appendOnce("sink", 0L, freshRows(3)))
     reopened.append(freshRows(5).withColumn("id", col("id") + 1000))
@@ -124,7 +149,7 @@ class LogFormatSpec extends AnyFunSuite {
     val referenced = new java.io.File(s"$rdir/_versions").listFiles()
       .filter(f => VersionLog.versionOf(f.getName).isDefined)
       .flatMap(f => VersionLog.decode(new String(
-        java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")).entries.map(_.name)).toSet
+        java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"), f.getName).entries.map(_.name)).toSet
     val orphans = new java.io.File(s"$rdir/files").list()
       .filter(_.endsWith(".parquet")).filterNot(referenced)
     assert(orphans.isEmpty, s"files no version references: ${orphans.mkString(",")}")

@@ -211,14 +211,14 @@ class SchemaRegistrySpec extends AnyFunSuite {
     val filesDir = new java.io.File(s"$dir/files")
     filesDir.listFiles().foreach(f => assert(f.delete()))
     // metadata accessors still answer from the manifest alone
-    assert(tt.store.rowCountFromManifest.contains(50L))
+    assert(tt.store.rowCountFromManifest == 50L)
     assert(tt.store.maxId.contains(50L))
     assert(tt.store.newestCutoff(100L).isEmpty) // under threshold: zero jobs
     // generated-id persist: base comes from manifest idMax; the new ids
     // (51+) overlap no existing file range, so nothing old is read
     tt.persist(Seq(EventRow(0, "gen1"), EventRow(0, "gen2")))
     assert(tt.store.maxId.exists(_ > 50L))
-    assert(tt.store.rowCountFromManifest.contains(52L))
+    assert(tt.store.rowCountFromManifest == 52L)
   }
 
   test("newestCutoff scans only files that can contain a top-n id") {

@@ -34,7 +34,7 @@ class StoreConcurrencySpec extends AnyFunSuite {
     val latest = versionsDir.listFiles().filter(_.getName.endsWith(".manifest"))
       .maxBy(f => VersionLog.versionOf(f.getName).get)
     val snap = VersionLog.decode(
-      new String(java.nio.file.Files.readAllBytes(latest.toPath), "UTF-8"))
+      new String(java.nio.file.Files.readAllBytes(latest.toPath), "UTF-8"), latest.getName)
     val entries = snap.entries
     val stats = snap.colStats
     assert(entries.size >= 12, s"expected 12 committed files, got ${entries.size}")

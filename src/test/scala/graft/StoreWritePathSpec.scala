@@ -31,6 +31,14 @@ class StoreWritePathSpec extends AnyFunSuite {
 
   private def jobsOf[T](body: => T): (T, Int) = SparkJobs.count(spark.sparkContext)(body)
 
+  /** `body`'s result and the persistent RDDs it left registered. */
+  private def pinsLeft[T](body: => T): (T, Set[Int]) = {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val out = body
+    (out, sc.getPersistentRDDs.keySet.diff(before).toSet)
+  }
+
   private def contents(st: TableStore): (Seq[String], Seq[String]) = {
     val df = st.read
     (df.schema.fields.toSeq.map(f => s"${f.name}:${f.dataType.simpleString}"),
@@ -93,14 +101,30 @@ class StoreWritePathSpec extends AnyFunSuite {
   test("batch PROCESS releases its consumed cache and runs the callback once per match") {
     val st = store()
     st.append((1L to 6L).map(i => (i, s"v$i")).toDF("id", "v"))
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet
     CountingConsumer.calls.set(0L)
-    val res = st.process(col("id") <= 3L, CountingConsumer)
-    assert(sc.getPersistentRDDs.keySet.diff(before).isEmpty, "PROCESS left a persistent RDD")
+    val (res, left) = pinsLeft(st.process(col("id") <= 3L, CountingConsumer))
+    assert(left.isEmpty, "PROCESS left a persistent RDD")
     assert(res.processed == 3 && CountingConsumer.calls.get == 3)
     assert(res.retained.select("id").as[Long].collect().sorted.toSeq == Seq(4L, 5L, 6L))
     assert(CountingConsumer.calls.get == 3, "reading retained re-ran the callback")
     assert(st.read.count() == 3)
+  }
+
+  test("checked, quarantine and merge writes release the batch they pin") {
+    val st = store()
+    st.append((1L to 6L).map(i => (i, s"v$i")).toDF("id", "v"))
+    val checks = Seq("v set" -> col("v").isNotNull)
+    val (_, checked) = pinsLeft(
+      st.appendChecked((7L to 8L).map(i => (i, s"v$i")).toDF("id", "v"), checks))
+    assert(checked.isEmpty, "appendChecked left a persistent RDD")
+    val quarantine = store()
+    val (counts, quarantined) = pinsLeft(st.appendQuarantine(
+      Seq((9L, "v9"), (10L, null)).toDF("id", "v"), checks, quarantine))
+    assert(counts == ((1L, 1L)))
+    assert(quarantined.isEmpty, "appendQuarantine left a persistent RDD")
+    val (_, merged) = pinsLeft(st.merge(Seq((2L, "m2"), (11L, "v11")).toDF("id", "v"),
+      matchedUpdate = Map("v" -> col("s.v"))))
+    assert(merged.isEmpty, "merge left a persistent RDD")
+    assert(st.read.count() == 10L && st.find(2L).head.getString(1) == "m2")
   }
 }

@@ -46,6 +46,14 @@ class UnigramSpec extends AnyFunSuite {
     assert(v1 == ref, s"diverges from reference:\n  ${v1.take(3)}\n  ${ref.take(3)}")
   }
 
+  test("learn releases the dictionary and substring pins") {
+    val words = Bpe.wordFreq(corpus, "text").select(col("word"), col("wcount"))
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    Unigram.learn(words, vocabSize = 32, iters = 1, seedSize = 64, maxPieceLen = 4)
+    assert(sc.getPersistentRDDs.keySet.diff(before).isEmpty, "learn left a persistent RDD")
+  }
+
   test("segmentWord: losslessness and longer-piece tie-break") {
     // fixed-point log-probs from counts over total 16: p(ab) = 4/16 =
     // (8/16)·(8/16) = p(a)·p(b) — exact powers of two, so the Q32
