@@ -3,7 +3,8 @@ package graft
 import java.nio.file.{Files, Paths, StandardOpenOption}
 import java.util.Locale
 import scala.util.control.NonFatal
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
+import graft.core.Checkpoints.Pins
 
 /** Benchmark entry: times every `SparkEntry` query at the fast scale
   * (`SPARK_GRAFT_SF_DIR`) and, when a second scale is configured, at a
@@ -227,9 +228,9 @@ object Bench {
     catch { case NonFatal(e) =>
       System.err.println(s"[bench] remote endpoint warm-up failed: ${e.getMessage}") }
 
-    // Gates pin results with cache()/localCheckpoint(); the blocks each
-    // query created are dropped as soon as its write returns, so old-gen
-    // pressure does not build up across the run.
+    // Gates pin results with cache() or the Checkpoints seam; the blocks
+    // each query created are dropped as soon as its write returns, so
+    // old-gen pressure does not build up across the run.
     def runOnce(name: String, dir: String): Double = {
       val (secs, free) = graft.core.Checkpoints.persistedDuring(spark.sparkContext) {
         val q0 = System.nanoTime()
@@ -374,35 +375,33 @@ object Bench {
     val schema = StructType(Seq(StructField("id", LongType, nullable = false),
       StructField("payload", BinaryType)))
     implicit val enc = org.apache.spark.sql.Encoders.row(schema)
-    def corpus(render: Long => Array[Byte]): DataFrame =
+    def probe(tag: String, render: Long => Array[Byte], kernel: Column => Column): Media =
       spark.range(nRows.toLong).toDF("id")
         .repartition(spark.sparkContext.defaultParallelism)
         .mapPartitions(_.map(r => Row(r.getLong(0), render(r.getLong(0)))))
-        .localCheckpoint(true)
-    def probe(tag: String, df: DataFrame, kernel: Column => Column): Media = {
-      val mb = df.agg(sum(octet_length(col("payload")))).head().getLong(0) / 1e6
-      val secs = (1 to 2).map { _ =>
-        val p0 = System.nanoTime()
-        val ok = df.filter(kernel(col("payload")).isNotNull).count()
-        require(ok == nRows, s"media_mb $tag: only $ok/$nRows payloads decoded")
-        (System.nanoTime() - p0) / 1e9
-      }.min
-      df.unpersist()
-      Media(tag, mb, nRows / secs, mb / secs)
-    }
+        .withPin { df =>
+          val mb = df.agg(sum(octet_length(col("payload")))).head().getLong(0) / 1e6
+          val secs = (1 to 2).map { _ =>
+            val p0 = System.nanoTime()
+            val ok = df.filter(kernel(col("payload")).isNotNull).count()
+            require(ok == nRows, s"media_mb $tag: only $ok/$nRows payloads decoded")
+            (System.nanoTime() - p0) / 1e9
+          }.min
+          Media(tag, mb, nRows / secs, mb / secs)
+        }
     // dims sized so each payload lands ~1 MB (JPEG spends ~0.6
     // bytes/pixel on LCG noise; WAV is exact: 65×8000 samples × 2 B)
     Seq(
       probe("image",
-        corpus(id => graft.ops.Multimodal.renderNoiseImage(1600, 1072, "jpeg", id)),
+        id => graft.ops.Multimodal.renderNoiseImage(1600, 1072, "jpeg", id),
         graft.functions.ImageHashFunctions.dhash64),
       probe("audio",
-        corpus(id => graft.ops.Multimodal.renderWalkWav(8000, 44100, seed = id)),
+        id => graft.ops.Multimodal.renderWalkWav(8000, 44100, seed = id),
         graft.functions.MediaHashFunctions.audioFp64),
       probe("video",
-        corpus(id => graft.ops.Multimodal.muxAvi(
+        id => graft.ops.Multimodal.muxAvi(
           (0 until 22).map(i => graft.ops.Multimodal.renderNoiseImage(320, 240, "jpeg", id * 131L + i)),
-          320, 240, 40000)),
+          320, 240, 40000),
         graft.functions.MediaHashFunctions.videoDHash64))
   } catch { case NonFatal(e) =>
     System.err.println(s"[bench] media_mb probe failed (ignored): ${e.getMessage}")

@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, IntegerType, LongType, MapType, ShortType, StringType, StructType}
 import graft.cep.{EventProcessor, Process}
 import graft.ops.Profile
+import graft.core.Checkpoints.Pins
 
 /** Mutable table with a version-manifest commit protocol — the
   * ingest/point-op surface of the reference (`session.persist` /
@@ -397,13 +398,8 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
     // footer reads are independent metadata round-trips — parallelize
     // (sequential opens would make commit latency linear in file count
     // on an object store)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration._
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val statted = Await.result(
-      Future.traverse(renamed) { n =>
-        Future((n, footerStats(f, new Path(s"$filesDir/$n"), integral)))
-      }, 10.minutes)
+    val statted = Jobs.overlap(math.min(renamed.size, Runtime.getRuntime.availableProcessors))(
+      renamed.map(n => () => (n, footerStats(new Path(s"$filesDir/$n"), integral))))
     TableStore.Written(statted.flatMap { case (n, (rowCount, range, colStats)) =>
       if (rowCount == 0L) { f.delete(new Path(s"$filesDir/$n"), false); None }
       else {
@@ -430,7 +426,7 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
     * in a column are fine for VALUE-range pruning (a null row cannot
     * satisfy a range predicate), unlike the id range, which keyed
     * mutations rely on and which stays null-strict. */
-  private def footerStats(f: FileSystem, p: Path, integral: Boolean)
+  private def footerStats(p: Path, integral: Boolean)
       : (Long, Option[(Long, Long)], Map[String, (Double, Double)]) = {
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -802,12 +798,8 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
                     uniqueKey: Option[String] = None): Unit = {
     // materialize ONCE: the constraint scan and the write read the
     // same batch (a re-evaluated nondeterministic upstream cannot
-    // slip different rows past the checks). Released through the
-    // persisted-RDD diff: Dataset.unpersist does not reach the RDD a
-    // local checkpoint persisted
-    val (pinned, release) =
-      Checkpoints.persistedDuring(spark.sparkContext)(rows.localCheckpoint(true))
-    try {
+    // slip different rows past the checks)
+    rows.withPin { pinned =>
       val report = Profile.expectations(pinned, checks, uniqueKey).collect()
       val failed = report.filter(_.getInt(2) == 0)
       if (failed.nonEmpty)
@@ -815,7 +807,7 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
           "appendChecked: constraint violations, append aborted — " +
             failed.map(r => s"${r.getString(0)}=${r.getLong(1)}").mkString(", "))
       append(pinned)
-    } finally release()
+    }
   }
 
   /** Quarantine ingest — the routing sibling of [[appendChecked]]'s
@@ -846,9 +838,7 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
   def appendQuarantine(rows: DataFrame, checks: Seq[(String, Column)],
                        quarantine: TableStore): (Long, Long) = {
     require(checks.nonEmpty, "appendQuarantine: no checks")
-    val (pinned, release) =
-      Checkpoints.persistedDuring(spark.sparkContext)(rows.localCheckpoint(true))
-    try {
+    rows.withPin { pinned =>
       val violated = array(checks.map { case (name, pred) =>
         when(coalesce(pred, lit(false)), lit(null).cast("string"))
           .otherwise(lit(name))
@@ -863,7 +853,7 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
       if (nBad > 0) quarantine.append(bad) // violations first — see crash ordering above
       if (nGood > 0) append(good)
       (nGood, nBad)
-    } finally release()
+    }
   }
 
   /** Last applied idempotence version for `appId` (a streaming sink's
@@ -1042,9 +1032,7 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
       if (insertNotMatched) append(source)
       return
     }._2
-    val (src, release) = Checkpoints.persistedDuring(spark.sparkContext)(
-      enforceSchema(source, snap.schema).localCheckpoint(true))
-    try {
+    enforceSchema(source, snap.schema).withPin { src =>
       val dups = src.groupBy(col(idCol)).agg(count(lit(1)).as("n"))
         .filter(col("n") > 1).limit(1).count()
       require(dups == 0L,
@@ -1057,31 +1045,31 @@ final class TableStore(val spark: SparkSession, val path: String, val idCol: Str
       // as null; a source batch's added columns are persisted, not
       // silently dropped)
       val targetCols = src.schema.fieldNames.toSeq
-      val outFiles =
-        if (affected.isEmpty) {
-          if (!insertNotMatched) return
-          writeFiles(src)
-        } else {
-          val tgt = readFiles(affected, src.schema).alias("t")
-          val joined = tgt.join(src.alias("s"),
-            col(s"t.$idCol") === col(s"s.$idCol"), "left")
-          val matched = col(s"s.$idCol").isNotNull
-          val deleted = matchedDeleteWhen
-            .map(c => matched && c).getOrElse(lit(false))
-          val updated = joined.filter(!deleted).select(targetCols.map { f =>
-            (if (matchedUpdate.contains(f))
-               when(matched, matchedUpdate(f)).otherwise(col(s"t.$f"))
-             else col(s"t.$f")).as(f)
-          }: _*)
-          val inserts =
-            if (insertNotMatched)
-              src.join(tgt.select(col(s"t.$idCol").as(idCol)), Seq(idCol), "left_anti")
-                .select(targetCols.map(col): _*)
-            else src.limit(0).select(targetCols.map(col): _*)
-          writeFiles(updated.unionByName(inserts))
-        }
-      commitRewrite(snapshot, affected, outFiles)
-    } finally release()
+      if (affected.nonEmpty || insertNotMatched) {
+        val outFiles =
+          if (affected.isEmpty) writeFiles(src)
+          else {
+            val tgt = readFiles(affected, src.schema).alias("t")
+            val joined = tgt.join(src.alias("s"),
+              col(s"t.$idCol") === col(s"s.$idCol"), "left")
+            val matched = col(s"s.$idCol").isNotNull
+            val deleted = matchedDeleteWhen
+              .map(c => matched && c).getOrElse(lit(false))
+            val updated = joined.filter(!deleted).select(targetCols.map { f =>
+              (if (matchedUpdate.contains(f))
+                 when(matched, matchedUpdate(f)).otherwise(col(s"t.$f"))
+               else col(s"t.$f")).as(f)
+            }: _*)
+            val inserts =
+              if (insertNotMatched)
+                src.join(tgt.select(col(s"t.$idCol").as(idCol)), Seq(idCol), "left_anti")
+                  .select(targetCols.map(col): _*)
+              else src.limit(0).select(targetCols.map(col): _*)
+            writeFiles(updated.unionByName(inserts))
+          }
+        commitRewrite(snapshot, affected, outFiles)
+      }
+    }
   }
 
   /** `session.find(cls, id)` (persistent/Session.java:326-342): the

@@ -36,12 +36,6 @@ object Tables {
       spark.read.parquet(path).schema)
   }
 
-  /** Drop all cached schemas (next load re-infers from footers). */
-  def invalidateSchemaCache(): Unit = {
-    schemaCache.clear()
-    nanosCache.clear()
-  }
-
   /** Top-level INT64 columns annotated TIMESTAMP(NANOS) in the parquet
     * FOOTER — the columns Spark surfaces as raw longs under
     * nanosAsLong. Driven by file metadata, not table/column names, so
@@ -127,9 +121,4 @@ object Tables {
       }
     }
   }
-
-  /** Register every table as a temp view so `spark.sql` and the graft
-    * dialect both resolve bare table names. */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    names.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
 }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.unsafe.types.UTF8String
 import graft.functions.BpeKernel
+import graft.core.Checkpoints.Pins
 
 /** Distributed byte-pair-encoding vocabulary learning — the tokenizer-
   * training step of an LLM data pipeline (Sennrich et al. 2016). The
@@ -225,9 +226,9 @@ object Bpe {
     * `n_bpe_tokens`. Rows with no tokens get empty arrays. */
   def encode(df: DataFrame, textCol: String, merges: Seq[Merge],
              idCol: String = "doc_id"): DataFrame = {
-    val dict = graft.core.Checkpoints.pin(
-      segmentDict(wordFreq(df, textCol), merges)
-        .select(col("word"), col("syms"), size(col("syms")).cast("long").as("n")))
+    val dict = segmentDict(wordFreq(df, textCol), merges)
+      .select(col("word"), col("syms"), size(col("syms")).cast("long").as("n"))
+      .pin
     dictEncode(df, textCol, idCol, dict, "bpe_tokens", "n_bpe_tokens")
   }
 

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Checkpoints.{Pins, persistedDuring}
 
 /** Deduplication operators for training-data pipelines, designed for
   * the 100 TB regime:
@@ -278,13 +279,12 @@ object Dedup {
   def minhashCandidates(df: DataFrame, idCol: String, textCol: String,
                         k: Int = 5, numHashes: Int = 64, bands: Int = 16,
                         maxBucket: Int = 1000): DataFrame =
-    // Pinned (r17, guide §2.4): minhashCandidatesSigned consumes the
-    // signature frame several times (capBuckets twice, the pair join
-    // twice) — unpinned, each walk re-ran the corpus scan + the
-    // 64-hash MinHash kernel, the call's dominant compute.
+    // Pinned: minhashCandidatesSigned consumes the signature frame
+    // several times (capBuckets twice, the pair join twice) — unpinned,
+    // each walk re-ran the corpus scan + the 64-hash MinHash kernel,
+    // the call's dominant compute.
     minhashCandidatesSigned(
-      graft.core.Checkpoints.pin(
-        df.select(col(idCol).as("id"), minhashSignature(col(textCol), k, numHashes).as("sig"))),
+      df.select(col(idCol).as("id"), minhashSignature(col(textCol), k, numHashes).as("sig")).pin,
       numHashes, bands, maxBucket)
 
   /** Candidate pairs from a PRECOMPUTED (id, sig) frame — the seam that
@@ -365,16 +365,14 @@ object Dedup {
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
                         k: Int = 5, threshold: Double = 0.7,
                         maxPostings: Int = 1000): DataFrame = {
-    // Pinned (r17, guide §2.4): this frame feeds THREE consumers — the
-    // postings explode and both verify-join sides — and capBuckets
-    // walks its input twice more, so the unpinned plan re-ran the
-    // corpus scan + shingle kernel up to 6× per call (the CC family
-    // calls this once per gate: q_dedup_cc/_canonical/_ngram/
-    // q_split_leakfree each re-paid it). (id, hashes) is bytes per
-    // row; blocks are reclaimed by the ContextCleaner once the result
-    // is dereferenced (the Overlap.maskMatrix precedent).
-    val sh = graft.core.Checkpoints.pin(df.select(col(idCol).as("id"),
-      array_distinct(graft.functions.TextHashFunctions.shingleHashes(col(textCol), k)).as("sh")))
+    // Pinned: this frame feeds THREE consumers — the postings explode
+    // and both verify-join sides — and capBuckets walks its input twice
+    // more, so the unpinned plan re-ran the corpus scan + shingle
+    // kernel up to 6× per call (the CC family calls this once per gate:
+    // q_dedup_cc/_canonical/_ngram/q_split_leakfree each re-paid it).
+    // (id, hashes) is bytes per row.
+    val sh = df.select(col(idCol).as("id"),
+      array_distinct(graft.functions.TextHashFunctions.shingleHashes(col(textCol), k)).as("sh")).pin
 
     val exploded = sh.select(col("id"), explode(col("sh")).as("s"))
     val postings = capBuckets(exploded, Seq("s"), maxPostings) // postings cap
@@ -538,12 +536,12 @@ object Dedup {
     * (SCALE.md "Scaling study"). */
   private[ops] def hammingBand64Pairs(hashed0: DataFrame, maxHamming: Int,
                                       maxBucket: Int): DataFrame = {
-    // Pinned (r17, guide §2.4): `banded` is walked twice by capBuckets
-    // and the capped frame twice more by the pair join, so the unpinned
-    // plan re-ran the corpus scan + hash kernel (simhash / dHash /
-    // audio fingerprint — the expensive part) up to 4× per call.
-    // (id, hash) is 16 bytes per row.
-    val hashed = graft.core.Checkpoints.pin(hashed0)
+    // Pinned: `banded` is walked twice by capBuckets and the capped
+    // frame twice more by the pair join, so the unpinned plan re-ran
+    // the corpus scan + hash kernel (simhash / dHash / audio
+    // fingerprint — the expensive part) up to 4× per call. (id, hash)
+    // is 16 bytes per row.
+    val hashed = hashed0.pin
     val banded = hashed.select(col("id"), col("h"),
       posexplode(hammingBands(col("h"), maxHamming)))
       .select(col("id"), col("h"), col("pos").as("band"), col("col").as("bucket"))
@@ -638,12 +636,12 @@ object Dedup {
     val sigs = array((0 until tables).map(t =>
       struct(lit(t).as("tbl"),
         Similarity.hyperplaneSignature(col(vecCol), nPlanes, seed = t).as("sig"))): _*)
-    // pinned (r17, guide §2.4): capBuckets walks this twice and the
-    // pair join twice more — unpinned, each walk re-ran the corpus
-    // scan + `tables` hyperplane-signature kernels. 24 bytes/row.
-    val banded0 = graft.core.Checkpoints.pin(
-      df.select(col(idCol).as("id"), explode(sigs).as("b"))
-        .select(col("id"), col("b.tbl").as("tbl"), col("b.sig").as("sig")))
+    // pinned: capBuckets walks this twice and the pair join twice more
+    // — unpinned, each walk re-ran the corpus scan + `tables`
+    // hyperplane-signature kernels. 24 bytes/row.
+    val banded0 = df.select(col(idCol).as("id"), explode(sigs).as("b"))
+      .select(col("id"), col("b.tbl").as("tbl"), col("b.sig").as("sig"))
+      .pin
     // skew guard: a hyperplane bucket crowded past maxBucket —
     // duplicate-flooded or degenerate (all-zero vectors hash together)
     // — would pair quadratically; drop it rather than let one bucket
@@ -709,13 +707,13 @@ object Dedup {
       cents: Array[Array[Double]], threshold: Double,
       maxCell: Int, probes: Int): DataFrame = {
     require(probes >= 1 && probes <= cents.length, "probes must be in [1, k]")
-    // pinned (r17, guide §2.4): capBuckets walks this twice and the
-    // per-cell self-join twice more — unpinned, each walk re-ran the
-    // corpus scan + the k-way nearest-cells codebook kernel.
-    val assigned = graft.core.Checkpoints.pin(
-      df.select(col(idCol).as("id"), col(vecCol).as("v"),
+    // pinned: capBuckets walks this twice and the per-cell self-join
+    // twice more — unpinned, each walk re-ran the corpus scan + the
+    // k-way nearest-cells codebook kernel.
+    val assigned = df.select(col(idCol).as("id"), col(vecCol).as("v"),
         explode(graft.functions.VectorFunctions.nearestCells(
-          col(vecCol), cents, probes)).as("cell")))
+          col(vecCol), cents, probes)).as("cell"))
+      .pin
     val capped = capBuckets(assigned, Seq("cell"), maxCell)
     capped.select(col("cell"), col("id").as("id1"), col("v").as("v1"))
       .join(capped.select(col("cell"), col("id").as("id2"), col("v").as("v2")),
@@ -740,9 +738,9 @@ object Dedup {
     * chain. Everything is joins/aggregations on (long, long) edges:
     * no neighbor lists are ever collected (a high-degree node skews a
     * groupBy partition, not a task's heap), and each round's result is
-    * localCheckpoint-pinned so the loop's lineage stays one round deep
-    * (Spark re-executes unpinned lazy lineage from the source each
-    * iteration — the cost grows quadratically by round).
+    * pinned so each round plans over one round and reads the previous
+    * round's blocks (Spark re-executes unpinned lazy lineage from the
+    * source each iteration — the cost grows quadratically by round).
     *
     * Returns (`id`, `component`) for every vertex present in `pairs`,
     * component = min id of the component. Vertices with no pairs are
@@ -834,12 +832,12 @@ object Dedup {
       (r.getLong(0),
         if (r.isNullAt(1)) java.math.BigDecimal.ZERO else r.getDecimal(1))
     }
-    // LAZY checkpoints throughout the loop (r14): the signature agg
-    // right after each checkpoint scans every partition, so it
-    // materializes the checkpoint blocks inside its own job — one job
-    // per round instead of two (materialize, then agg), and the
-    // convergence loop is pure fixed scheduling overhead at gate
-    // scale. Emptiness rides the signature's count, not a third job.
+    // LAZY pins throughout the loop: the signature agg right after each
+    // pin scans every partition, so it materializes the pinned blocks
+    // inside its own job — one job per round instead of two
+    // (materialize, then agg), and the convergence loop is pure fixed
+    // scheduling overhead at gate scale. Emptiness rides the
+    // signature's count, not a third job.
     // (r17 negative result, kept honest: a 2-rounds-per-action unroll
     // — both rounds lazy, one tagged union aggregation returning both
     // signatures — measured SLOWER at sf0.1, 10.8 s vs 9.0 s for the
@@ -847,18 +845,17 @@ object Dedup {
     // the unroll does not reduce, and the lazily-built extra round
     // past the fixed point is real computation. One round per action
     // stands.)
-    var (edges, freeEdges) = graft.core.Checkpoints.lazyLocal(
-      canon(pairs.select(col(aCol).as("u"), col(bCol).as("v"))))
+    val sc = pairs.sparkSession.sparkContext
+    var (edges, freeEdges) =
+      persistedDuring(sc)(canon(pairs.select(col(aCol).as("u"), col(bCol).as("v"))).pinLazily)
     var sig = signature(edges)
     var it = 0
     var converged = sig._1 == 0L
     while (!converged && it < maxIter) {
-      val (next, freeNext) = graft.core.Checkpoints.lazyLocal(round(edges))
+      val (next, freeNext) = persistedDuring(sc)(round(edges).pinLazily)
       val nextSig = signature(next)
       converged = nextSig == sig
-      // previous round's checkpoint blocks are dead once `next` is
-      // materialized — free the checkpoint's INTERNAL RDD (Checkpoints
-      // captured it; `edges.rdd.unpersist` only touched a derived RDD)
+      // the previous round's blocks are dead once `next` is materialized
       freeEdges()
       edges = next
       freeEdges = freeNext

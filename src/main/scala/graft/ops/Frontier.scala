@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
+import graft.core.Checkpoints.Pins
 
 /** Pareto-frontier (skyline) extraction — multi-criteria curation's
   * "keep what nothing else beats on every axis": freshest AND
@@ -35,7 +36,7 @@ object Frontier {
       .na.drop().dropDuplicates("x", "y")
       .repartitionByRange(partitions, desc("x"), desc("y"))
       .sortWithinPartitions(desc("x"), desc("y"))
-      .localCheckpoint(true) // both passes reread materialized blocks
+      .pin // both passes reread materialized blocks
     // Per-partition max-y, cumulated into each partition's incoming
     // threshold: partition i only sees points with larger x, so its
     // sweep starts from the best y any of them reached. P doubles of

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Checkpoints.Pins
 
 /** Fuzzy string self-join: all pairs within Levenshtein edit distance
   * `k`, exactly.
@@ -46,11 +47,10 @@ object FuzzyJoin {
   def editDistancePairs(df: DataFrame, idCol: String, strCol: String,
                         k: Int, maxBucket: Int = 10000): DataFrame = {
     require(k >= 1 && k <= 2, s"editDistancePairs supports k in 1..2, got $k")
-    // pinned (r17): three consumers (the key explode and both verify
-    // joins) — unpinned, each re-ran the source scan + the caller's
-    // string derivation. (id, short string) is bytes per row.
-    val base = graft.core.Checkpoints.pin(
-      df.select(col(idCol).as("fz_id"), col(strCol).as("fz_s")))
+    // pinned: three consumers (the key explode and both verify joins) —
+    // unpinned, each re-ran the source scan + the caller's string
+    // derivation. (id, short string) is bytes per row.
+    val base = df.select(col(idCol).as("fz_id"), col(strCol).as("fz_s")).pin
     // keys shuffle as 8-byte xxhash64 of the variant string, not the
     // string itself (r17, guide §2.3 "narrower types"): a hash
     // collision only MERGES two buckets — extra candidates, pruned by

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.core.Checkpoints.{Pins, persistedDuring}
 
 /** Link-graph analytics for corpus curation. Web-scale training-data
   * pipelines weight documents by the link structure of their sources
@@ -12,9 +13,10 @@ import org.apache.spark.sql.functions._
   * to edges on the source key (both sides arrive hash-partitioned on
   * it, so the edge side's exchange is planned once and reused), then
   * contributions two-phase-aggregate on the destination. Rank state is
-  * 16 B/node; edges carry (src, dst, outdeg) only. Lineage is cut with
-  * `localCheckpoint` every round — without it iteration k re-executes
-  * all k-1 predecessors (the quadratic-lineage trap).
+  * 16 B/node; edges carry (src, dst, outdeg) only. Every round is
+  * pinned, so iteration k plans over one round and reads the previous
+  * round's blocks — unpinned, it re-executes all k-1 predecessors (the
+  * quadratic-lineage trap).
   *
   * Arithmetic is FIXED-POINT INTEGER (rank ×1e6, floor division):
   * BIGINT sums are exact and order-invariant, so the result is
@@ -39,27 +41,26 @@ object Graphs {
     require(iters >= 1 && dampingPermille >= 0 && dampingPermille <= 1000)
     val floorFp = (1000L - dampingPermille) * 1000L // (1-d) × 1e6
     val n = nodes.select(col(nodeCol).as("node"))
-    // Outdegree folded onto the edge list once, up front; cached via
-    // localCheckpoint so every iteration rereads materialized blocks
-    // instead of re-scanning the source.
+    // Outdegree folded onto the edge list once, up front; pinned so
+    // every iteration rereads materialized blocks instead of
+    // re-scanning the source.
     val deg = edges.groupBy(col(srcCol)).agg(count(lit(1)).as("outdeg"))
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .join(deg.withColumnRenamed(srcCol, "src"), "src")
       .repartition(col("src"))
-      .localCheckpoint(true)
-    // LAZY per-iteration checkpoints (r14): each checkpoint still
-    // compiles its iteration's plan immediately (so Catalyst never
-    // sees more than one iteration of depth) and still cuts lineage
-    // at materialization, but the caller's FIRST action now runs the
-    // whole power iteration as one job's stage chain instead of
-    // paying a scheduled job per iteration. Each intermediate rank
-    // frame has exactly one consumer (the next iteration), so the
-    // strictly-ordered shuffle dependencies compute every marked RDD
-    // exactly once. `e` stays EAGER: it is read by every iteration's
-    // join stage, and concurrent stages recompute an unmaterialized
-    // frame instead of sharing it.
+      .pin
+    // LAZY per-iteration pins: each pin still compiles its iteration's
+    // plan immediately (so Catalyst never sees more than one iteration
+    // of depth) and still stores its rows at materialization, but the
+    // caller's FIRST action now runs the whole power iteration as one
+    // job's stage chain instead of paying a scheduled job per
+    // iteration. Each intermediate rank frame has exactly one consumer
+    // (the next iteration), so the strictly-ordered shuffle
+    // dependencies compute every marked RDD exactly once. `e` stays
+    // EAGER: it is read by every iteration's join stage, and concurrent
+    // stages recompute an unmaterialized frame instead of sharing it.
     var ranks = n.select(col("node"), lit(1000000L).as("r"))
-      .localCheckpoint(false)
+      .pinLazily
     for (_ <- 1 to iters) {
       val contribs = e.join(ranks, col("src") === col("node"))
         // `div`, not `/`: long division stays exact where the
@@ -71,7 +72,7 @@ object Graphs {
         .select(col("node"),
           (lit(floorFp) + expr(s"($dampingPermille * coalesce(s, 0L)) div 1000"))
             .as("r"))
-        .localCheckpoint(false)
+        .pinLazily
     }
     ranks.select(col("node"), col("r").as("rank_fp"))
   }
@@ -112,7 +113,7 @@ object Graphs {
           struct(col("u").as("s"), col("v").as("d")))
           .otherwise(struct(col("v").as("s"), col("u").as("d"))).as("e"))
       .select(col("e.s").as("s"), col("e.d").as("d"))
-      .localCheckpoint(true) // consumed three times below
+      .pin // consumed three times below
     // wedges (s; b, c): unordered out-neighbor pairs in both orders —
     // the closing edge b→c exists in exactly ONE orientation, so the
     // equi-join keeps each triangle once, at apex s
@@ -139,8 +140,8 @@ object Graphs {
     * a node can push its neighbors under k, so rounds CASCADE; the
     * fixed point is reached when a round removes nothing. Per round
     * the shuffle carries (node, deg) pairs — 16 B/row — and the edge
-    * set only shrinks; `localCheckpoint` per round cuts the quadratic
-    * lineage, exactly as in [[pageRank]]. Peeling is deterministic
+    * set only shrinks; a pin per round avoids the quadratic
+    * re-execution, exactly as in [[pageRank]]. Peeling is deterministic
     * (the k-core is unique), so any engine replaying the same rounds
     * lands on the identical survivor set.
     *
@@ -155,29 +156,27 @@ object Graphs {
     val und0 = edges.select(
         least(col(aCol), col(bCol)).as("u"), greatest(col(aCol), col(bCol)).as("v"))
       .filter(col("u") =!= col("v")).distinct()
-    // LAZY per-round checkpoints (r14, the connectedComponents shape):
-    // the round's count() materializes the checkpoint blocks inside
-    // its own job, so a peel round costs ONE job instead of three
-    // (materialize + next.count + sym.count) — the prior count is
-    // carried in a local instead of re-asked of the checkpointed frame
-    var (sym, freeSym) = graft.core.Checkpoints.lazyLocal(
-      und0.select(col("u").as("a"), col("v").as("b"))
-        .unionAll(und0.select(col("v").as("a"), col("u").as("b"))))
+    // LAZY per-round pins (the connectedComponents shape): the round's
+    // count() materializes the pinned blocks inside its own job, so a
+    // peel round costs ONE job instead of three (materialize +
+    // next.count + sym.count) — the prior count is carried in a local
+    // instead of re-asked of the pinned frame
+    val sc = edges.sparkSession.sparkContext
+    var (sym, freeSym) = persistedDuring(sc)(und0.select(col("u").as("a"), col("v").as("b"))
+      .unionAll(und0.select(col("v").as("a"), col("u").as("b"))).pinLazily)
     var nSym = sym.count()
     var converged = false
     var round = 0
     while (round < maxRounds && !converged) {
       val alive = sym.groupBy(col("a")).agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k).select(col("a").as("node"))
-      val (next, freeNext) = graft.core.Checkpoints.lazyLocal(sym
+      val (next, freeNext) = persistedDuring(sc)(sym
         .join(alive.select(col("node").as("a")), Seq("a"), "left_semi")
         .join(alive.select(col("node").as("b")), Seq("b"), "left_semi")
-        .select(col("a"), col("b")))
+        .select(col("a"), col("b")).pinLazily)
       val nNext = next.count()
       converged = nNext == nSym
-      // the previous round's blocks are dead once `next` is
-      // materialized — free the checkpoint's INTERNAL RDD (Checkpoints
-      // captured it; `sym.rdd.unpersist` only touched a derived RDD)
+      // the previous round's blocks are dead once `next` is materialized
       freeSym()
       sym = next
       freeSym = freeNext

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.core.TableStore
+import graft.core.Checkpoints.Pins
 
 /** Incremental near-dup dedup against a persistent corpus index — the
   * "dedup today's crawl against everything kept so far" shape a
@@ -91,18 +92,17 @@ final class IncrementalDedup private (
   /** Dedup one ingest batch against the index (and itself); append the
     * survivors' bands+signatures to the index; return the surviving
     * rows of `batch` with all original columns. The dedup DECISION is
-    * materialized exactly once — the dropped-id set is
-    * localCheckpoint-pinned (bare ids: KBs at any batch size) — and
-    * the returned survivors are the caller's `batch` anti-joined
-    * against that pin: lazy, but with NO index-snapshot read and NO
-    * signature computation in the lineage (the hazards that would make
-    * a lazy result unsafe — a recompute against an index that has
-    * since moved), so a caller action pays one scan of its own batch,
-    * and the pin stays ids-sized where pinning the survivors would
-    * grow with the document text. Signatures
-    * are computed exactly once per batch (one cached (id, sig) pass
-    * feeds the within-batch pairing, the index verify, and the index
-    * append).
+    * materialized exactly once — the dropped-id set is pinned (bare
+    * ids: KBs at any batch size) — and the returned survivors are the
+    * caller's `batch` anti-joined against that pin: lazy, but with NO
+    * index-snapshot read and NO signature computation in the lineage
+    * (the hazards that would make a lazy result unsafe — a recompute
+    * against an index that has since moved), so a caller action pays
+    * one scan of its own batch, and the pin stays ids-sized where
+    * pinning the survivors would grow with the document text.
+    * Signatures are computed exactly once per batch (one cached (id,
+    * sig) pass feeds the within-batch pairing, the index verify, and
+    * the index append).
     *
     * IDEMPOTENT under at-least-once re-delivery (the foreachBatch
     * retry contract): survivors never vanish on replay — a kept doc
@@ -243,9 +243,9 @@ final class IncrementalDedup private (
       // collectable by construction.
       val dropped =
         try broadcast(withinDropped.unionByName(indexDropped).distinct()
-          .localCheckpoint(true))
+          .pin)
         // the pinned drop set no longer reads the slice — and if the
-        // eager checkpoint/broadcast THROWS, the slices cached inside
+        // eager pin/broadcast THROWS, the slices cached inside
         // resolveSaturated must not stay pinned for the session, so
         // the release rides a finally
         finally resolveCleanup()
@@ -273,8 +273,8 @@ final class IncrementalDedup private (
       }
       // survivors: the caller's batch anti-joined against the PINNED
       // drop set — lazy, but the lineage holds no index-snapshot read
-      // and no signature computation (the two hazards that forced the
-      // old full-batch checkpoint), so a caller action pays one scan
+      // and no signature computation (the two hazards that would force
+      // pinning the full batch), so a caller action pays one scan
       // of its own batch plus a broadcast-sized anti-join
       batch.join(dropped.withColumnRenamed("id", idCol), Seq(idCol), "left_anti")
     }
@@ -299,7 +299,7 @@ final class IncrementalDedup private (
       val keptRows = snap.fold(0L)(_._2)
       val snapVersion = snap.map(_._1)
       snap.collect { case (_, rows, df) if rows > 0 => df } match {
-        case None => empty.localCheckpoint(true)
+        case None => empty.pin
         case Some(idx) =>
           // read-only path: no saturation-counter action — when the
           // manifest row count proves no bucket CAN be saturated, the
@@ -333,7 +333,7 @@ final class IncrementalDedup private (
                   .select(col("id"), col("kept_id"))), free)
             }
           // pin before the signature cache drops; release the
-          // saturated slices even if the checkpoint throws
+          // saturated slices even if the pin throws
           try collided.distinct()
             .join(sigs.read.select(col("id").as("kept_id"), col("sig").as("kept_sig")),
               Seq("kept_id"))
@@ -342,7 +342,7 @@ final class IncrementalDedup private (
               Dedup.estJaccard(col("sig"), col("kept_sig"), numHashes))
             .filter(col("est_jaccard") >= threshold)
             .select(col("id").as(idCol), col("kept_id"), col("est_jaccard"))
-            .localCheckpoint(true)
+            .pin
           finally resolveCleanup()
       }
     } finally { sig.unpersist(); () }

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Checkpoints.Pins
 
 /** Incremental view maintenance for keyed count/sum aggregates: keep a
   * materialized `GROUP BY` result current from row-level DELTAS
@@ -70,10 +71,10 @@ object Ivm {
           .select((keys.map(col) ++ stateCols(sums)): _*)
         (last +: steps).zip(steps).foreach { case (a, b) =>
           val (add, rem) = source.diff(a, b)
-          // LAZY lineage barrier (r18): the final replaceOnce write
+          // lazy plan barrier: the final replaceOnce write
           // materializes every leg in one job; eager pins cost one
           // mostly-idle job per commit caught up
-          cur = maintain(cur, add, rem, keys, sums).localCheckpoint(false)
+          cur = maintain(cur, add, rem, keys, sums).pinLazily
         }
         cur
     }

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Checkpoints.Pins
 
 /** Corpus-trained n-gram language-model scoring — the CCNet-style
   * quality signal: documents whose token transitions are unlike the
@@ -35,21 +36,19 @@ object LanguageModel {
     * Output: (doc_id, n_bigrams, nll). */
   def bigramNll(docs: DataFrame, idCol: String, textCol: String,
                 alpha: Double = 0.1): DataFrame = {
-    val withToks = graft.core.Checkpoints.pin(
-      // pinned (r17): feeds the bigram explode AND the vocab count —
-      // unpinned, the second consumer re-ran the scan + tokenize
-      docs.select(col(idCol).as("doc_id"), toks(col(textCol)).as("t")))
+    // pinned: feeds the bigram explode AND the vocab count
+    val withToks = docs.select(col(idCol).as("doc_id"), toks(col(textCol)).as("t")).pin
     // per-document DISTINCT bigram counts: every downstream join and
     // the per-doc aggregate ride this deduplicated frame instead of
     // the raw instance rows (r17, guide §2.3 "aggregate before you
     // shuffle" — the instance frame was previously shuffled three
     // more times: by (w1,w2), by w1, and by doc_id)
-    val docBigram = graft.core.Checkpoints.pin(withToks
+    val docBigram = withToks
       .select(col("doc_id"), explode(
           graft.functions.BpeFunctions.adjacentPairs(col("t"))).as("b"))
       .groupBy(col("doc_id"), col("b.left").as("w1"), col("b.right").as("w2"))
-      .agg(count(lit(1)).as("k")))
-      // feeds the global bigram counts AND the scoring join
+      .agg(count(lit(1)).as("k"))
+      .pin // feeds the global bigram counts AND the scoring join
     // The global count tables are POST-AGGREGATE and vocabulary-scale
     // (distinct corpus bigrams / distinct bigram starts) — broadcast
     // them so the scoring joins probe docBigram in place instead of

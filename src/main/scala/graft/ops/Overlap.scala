@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.core.Checkpoints.Pins
 
 /** Cross-source overlap matrix — "how much of source A is also in
   * source B": the contamination / provenance diagnostic run before
@@ -115,17 +116,9 @@ object Overlap {
       // pin: this subtree feeds pairIdx AND both perIdx broadcast
       // branches — without the pin, computing the corpus-sized bit_or
       // once instead of three times silently depends on AQE exchange
-      // reuse. Eager localCheckpoint, NOT .persist(): a persist() here
-      // would register one CacheManager entry per matrix call that
-      // nothing can ever unpersist (callers only see the derived
-      // result), pinning plans+blocks for the session lifetime;
-      // localCheckpoint blocks are reclaimed by the ContextCleaner
-      // once the RDD is unreferenced. The price is that CONSTRUCTING
-      // the matrix runs the aggregation eagerly — acceptable for an
-      // analytics entry point whose result is always consumed. After
-      // the aggregate it is metadata-scale (≤ distinct observed
-      // masks, ≪ 2^n in practice), so the pinned footprint is tiny.
-      .localCheckpoint(true)
+      // reuse. After the aggregate it is metadata-scale (≤ distinct
+      // observed masks, ≪ 2^n in practice), so the pin is tiny.
+      .pin
     // mask → its set-bit indexes, evaluated where the masks live
     val bits = maskCounts.select(col("cnt"),
       expr(s"filter(sequence(0, ${n - 1}), i -> (shiftright(mask, i) & 1) = 1)")

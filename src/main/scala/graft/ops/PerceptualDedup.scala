@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.core.TableStore
+import graft.core.Checkpoints.Pins
 
 /** Incremental PERCEPTUAL dedup against a persistent corpus index —
   * the media counterpart of [[IncrementalDedup]]: dedup each ingest
@@ -97,13 +98,13 @@ final class PerceptualDedupIndex private (
   /** Dedup one ingest batch against the index (and itself); append the
     * survivors' band rows; return the surviving rows of `batch` with
     * all original columns. The dedup DECISION is materialized exactly
-    * once — the dropped-id set is localCheckpoint-pinned (bare ids) —
-    * and the returned survivors are the caller's `batch` anti-joined
-    * against that pin: lazy, but with no payload re-hash and no
-    * index-snapshot read in the lineage (the hazards that would make a
-    * lazy result unsafe), so a caller action pays one scan of its own
-    * batch, and the pin stays ids-sized where pinning the survivors
-    * would write their payloads to block storage.
+    * once — the dropped-id set is pinned (bare ids) — and the returned
+    * survivors are the caller's `batch` anti-joined against that pin:
+    * lazy, but with no payload re-hash and no index-snapshot read in
+    * the lineage (the hazards that would make a lazy result unsafe), so
+    * a caller action pays one scan of its own batch, and the pin stays
+    * ids-sized where pinning the survivors would write their payloads
+    * to block storage.
     *
     * IDEMPOTENT under at-least-once re-delivery (the foreachBatch
     * retry contract): survivors never vanish on replay — a kept
@@ -198,9 +199,9 @@ final class PerceptualDedupIndex private (
       // sort-merge join (see IncrementalDedup for the measurement).
       val dropped =
         try broadcast(withinDropped.unionByName(indexDropped).distinct()
-          .localCheckpoint(true))
+          .pin)
         // the pinned drop set no longer reads the slice — release it
-        // even if the eager checkpoint/broadcast throws
+        // even if the eager pin/broadcast throws
         finally resolveCleanup()
 
       val survivorBands = banded(h.join(dropped, Seq("id"), "left_anti"))
@@ -231,7 +232,7 @@ final class PerceptualDedupIndex private (
       val keptRows = snap.fold(0L)(_._2)
       val snapVersion = snap.map(_._1)
       snap.collect { case (_, rows, df) if rows > 0 => df } match {
-        case None => empty.localCheckpoint(true)
+        case None => empty.pin
         case Some(idx) =>
           // read-only path: no saturation-counter action — plain join
           // while the manifest row count proves no bucket can be
@@ -259,14 +260,14 @@ final class PerceptualDedupIndex private (
                   Seq("band", "bucket", "__sub")).drop("__sub")), free)
             }
           // pin before the hash cache drops; release the saturated
-          // slices even if the checkpoint throws
+          // slices even if the pin throws
           try collided
             .withColumn("hamming",
               bit_count(col("h").bitwiseXOR(col("kept_h"))).cast("int"))
             .filter(col("hamming") <= maxHamming)
             .select(col("id").as(idCol), col("kept_id"), col("hamming"))
             .dropDuplicates(idCol, "kept_id")
-            .localCheckpoint(true)
+            .pin
           finally resolveCleanup()
       }
     } finally { h.unpersist(); () }

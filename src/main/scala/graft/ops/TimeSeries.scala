@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.Jobs
+import graft.core.Checkpoints.{Pins, persistedDuring}
 
 /** Regular-grid time-series operators over event tables: per-key
   * resampling with forward fill, and interval-concurrency sweeps.
@@ -93,11 +95,11 @@ object TimeSeries {
     // feeds a session-window agg). Materialize them once: the grouped
     // boundary set is ≤ 2× the interval count and 3 longs wide —
     // strictly smaller than the window pass shuffles anyway — while an
-    // uncut lineage re-runs the full upstream once per consumer.
+    // unpinned frame re-runs the full upstream once per consumer.
     val deltas = intervals.select(col(startCol).as("ts"), lit(1L).as("delta"))
       .unionAll(intervals.select(col(endCol).as("ts"), lit(-1L).as("delta")))
       .groupBy(col("ts"), col("delta")).agg(count(lit(1)).as("n"))
-      .localCheckpoint(true)
+      .pin
     // range-bucket cut points over the boundary timestamps (one
     // column-pruned approx-quantile scan; ties/duplicates collapse)
     val tsd = deltas.select(col("ts").cast("double").as("tsd"))
@@ -204,59 +206,35 @@ object TimeSeries {
     require(steps.nonEmpty, "funnel: at least one step")
     val spark = df.sparkSession
     import spark.implicits._
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    // Each frontier is LAZY-checkpointed and materialized by the count
-    // the step emits anyway (r17, guide §2.4): unpinned, step i's
-    // frontier lineage contained every earlier step's scan+join, so
-    // the per-step counts re-ran the whole chain — ~i corpus scans at
-    // step i (10 scans for a 4-step funnel). Now each step costs one
-    // corpus scan + a join against the previous pinned frontier.
-    //
-    // The counts run CONCURRENTLY from driver threads (r18, guide
-    // §2.6): step i+1's frontier only needs step i's frame, not its
-    // count, so the chain of #steps sequential count jobs collapses to
-    // overlapping jobs whose tails back-fill each other. A later count
-    // racing an earlier frontier's materialization at worst recomputes
-    // a not-yet-persisted partition (persist fills on first compute) —
-    // counts are of deterministic frames either way. Frontier blocks
-    // are reclaimed by the ContextCleaner once the frames drop out of
-    // scope (Dataset.unpersist does NOT free localCheckpoint blocks —
-    // r17 ADVICE — and frontiers are key+ts rows, bytes per entity).
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(steps.size, 4))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    val rows = try {
-      var frontier = df.filter(col(typeCol) === steps.head)
-        .groupBy(col(keyCol)).agg(min(col(tsCol)).as("__t"))
-        .localCheckpoint(false)
-      val futures = Seq.newBuilder[Future[(Int, String, Long)]]
-      def submit(idx: Int, step: String, f: DataFrame): Unit =
-        futures += Future {
-          spark.sparkContext.setJobDescription(s"funnel: count step $idx ($step)")
-          (idx, step, f.count())
-        }
-      submit(1, steps.head, frontier)
-      steps.zipWithIndex.drop(1).foreach { case (step, i) =>
-        val stepEv = df.filter(col(typeCol) === step)
-          .select(col(keyCol), col(tsCol).as("__ts"))
-        frontier = stepEv.join(frontier, Seq(keyCol))
-          .filter(col("__ts") > col("__t"))
-          .groupBy(col(keyCol)).agg(min(col("__ts")).as("__t"))
-          .localCheckpoint(false)
-        submit(i + 1, step, frontier)
-      }
-      futures.result().map(Await.result(_, Duration.Inf))
-    } finally pool.shutdown()
-    val withConv = rows.zip(rows.map(_._3).scanLeft(-1L)((_, n) => n)).map {
-      case ((idx, name, n), prev) =>
-        val conv =
-          if (idx == 1) 1000000L
-          else if (prev == 0) 0L
-          else 1000000L * n / prev
-        (idx, name, n, conv)
+    // Each frontier is pinned lazily and materialized by its step's
+    // count, so step i costs one scan of its events joined to the
+    // previous frontier instead of re-running every earlier step. The
+    // counts overlap: step i+1's frontier needs step i's frame, not its
+    // count, so it is built while that count runs. Every frontier is
+    // released once the counts are back.
+    val releases = Seq.newBuilder[() => Unit]
+    def pinned(frontier: DataFrame): DataFrame =
+      persistedDuring(spark.sparkContext)(frontier.pinLazily) match { case (p, release) => releases += release; p }
+    val first = pinned(df.filter(col(typeCol) === steps.head)
+      .groupBy(col(keyCol)).agg(min(col(tsCol)).as("__t")))
+    val frontiers = steps.tail.iterator.scanLeft(first) { (prev, step) =>
+      pinned(df.filter(col(typeCol) === step)
+        .select(col(keyCol), col(tsCol).as("__ts"))
+        .join(prev, Seq(keyCol))
+        .filter(col("__ts") > col("__t"))
+        .groupBy(col(keyCol)).agg(min(col("__ts")).as("__t")))
     }
-    withConv.toDF("step_idx", "step", "n_entities", "conv_ppm")
+    val counts = try Jobs.overlap(math.min(steps.size, 4))(frontiers.zip(steps).zipWithIndex.map {
+      case ((frontier, step), i) => () => {
+        spark.sparkContext.setJobDescription(s"funnel: count step ${i + 1} ($step)")
+        frontier.count()
+      }
+    }) finally releases.result().foreach(_())
+    steps.indices.map { i =>
+      val conv = if (i == 0) 1000000L else if (counts(i - 1) == 0) 0L
+        else 1000000L * counts(i) / counts(i - 1)
+      (i + 1, steps(i), counts(i), conv)
+    }.toDF("step_idx", "step", "n_entities", "conv_ppm")
   }
 
   def cohortRetention(df: DataFrame, keyCol: String, tsCol: String,

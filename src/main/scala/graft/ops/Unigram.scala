@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.core.Checkpoints.Pins
 
 /** Distributed unigram-LM tokenizer training (Kudo 2018 — the
   * SentencePiece unigram model), the second tokenizer family next to
@@ -85,29 +86,21 @@ object Unigram {
             seedSize: Int = 2048, maxPieceLen: Int = 6): Seq[Piece] = {
     require(vocabSize >= 1 && iters >= 1 && seedSize >= vocabSize && maxPieceLen >= 1,
       "Unigram.learn: vocabSize >= 1, iters >= 1, seedSize >= vocabSize, maxPieceLen >= 1")
-    // both pins are released through the persisted-RDD diff:
-    // Dataset.unpersist does not reach the RDD a local checkpoint persisted
-    val sc = words.sparkSession.sparkContext
-    val (dict, releaseDict) = graft.core.Checkpoints.persistedDuring(sc)(
-      words.select(col("word"), col("wcount").cast("long").as("wcount")).localCheckpoint(true))
-    try {
+    words.select(col("word"), col("wcount").cast("long").as("wcount")).withPin { dict =>
       // --- seeding: substring frequencies ---
-      // Pinned: `sub` feeds TWO collects (seed top-K and the alphabet) —
-      // unpinned, the second re-ran the dict-scale substring explode +
-      // aggregation. Post-agg it is distinct-substring-scale (bytes per
-      // row).
-      val (sub, releaseSub) = graft.core.Checkpoints.persistedDuring(sc)(
-        graft.core.Checkpoints.pin(dict.select(col("wcount"),
+      // Pinned: `sub` feeds TWO collects (seed top-K and the alphabet);
+      // post-agg it is distinct-substring-scale (bytes per row).
+      val (top, alphabet) = dict.select(col("wcount"),
             explode(concat((1 to maxPieceLen).map(k =>
               graft.functions.TextHashFunctions.charShingles(
                 col("word"), k, distinct = false)): _*)).as("p"))
-          .groupBy(col("p")).agg(sum(col("wcount")).as("freq"))))
-      val (top, alphabet) =
-        try (sub.orderBy(desc("freq"), asc("p")).limit(seedSize)
-            .collect().map(r => (r.getString(0), r.getLong(1))),
-          sub.filter(length(col("p")) === 1)
-            .collect().map(r => (r.getString(0), r.getLong(1))))
-        finally releaseSub()
+          .groupBy(col("p")).agg(sum(col("wcount")).as("freq"))
+          .withPin { sub =>
+            (sub.orderBy(desc("freq"), asc("p")).limit(seedSize)
+              .collect().map(r => (r.getString(0), r.getLong(1))),
+              sub.filter(length(col("p")) === 1)
+                .collect().map(r => (r.getString(0), r.getLong(1))))
+          }
       var vocab: Seq[(String, Long)] =
         (top ++ alphabet).distinctBy(_._1).toSeq
       var logp: Map[String, Long] = toLogpFp(vocab)
@@ -137,7 +130,7 @@ object Unigram {
       }
       vocab.map { case (p, c) => Piece(p, c, logp(p), logpToDouble(logp(p))) }
         .sortBy(_.piece).toSeq
-    } finally releaseDict()
+    }
   }
 
   private def toLogpFp(vocab: Seq[(String, Long)]): Map[String, Long] = {
@@ -160,11 +153,11 @@ object Unigram {
              maxPieceLen: Int = 6, idCol: String = "doc_id"): DataFrame = {
     val pieces = vocab.map(_.piece).toArray
     val lps = vocab.map(_.logp_fp).toArray
-    val dict = graft.core.Checkpoints.pin(
-      Bpe.wordFreq(df, textCol).select(col("word"))
-        .withColumn("syms", graft.functions.UnigramFunctions.segment(
-          col("word"), pieces, lps, maxPieceLen))
-        .select(col("word"), col("syms"), size(col("syms")).cast("long").as("n")))
+    val dict = Bpe.wordFreq(df, textCol).select(col("word"))
+      .withColumn("syms", graft.functions.UnigramFunctions.segment(
+        col("word"), pieces, lps, maxPieceLen))
+      .select(col("word"), col("syms"), size(col("syms")).cast("long").as("n"))
+      .pin
     Bpe.dictEncode(df, textCol, idCol, dict, "uni_tokens", "n_uni_tokens")
   }
 

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.Tables
 import graft.ops.{Sketches, TemporalJoins}
+import graft.core.Checkpoints.Pins
 
 /** Gate queries for the analytics extensions beyond the reference's
   * operator surface: temporal joins (as-of, range), OLAP rollup,
@@ -198,7 +199,7 @@ object AnalyticsQueries {
       s.read.parquet(path)
         .select(col("event_id"), col("user_id"), col("value"))
         .orderBy(col("event_id"))
-        .localCheckpoint(true) // pin before the finally reclaims the files
+        .pin // pin before the finally reclaims the files
     }
   }
 

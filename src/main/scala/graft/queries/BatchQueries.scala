@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.core.Tables
+import graft.core.Checkpoints.Pins
 
 /** Retention-bounded entity for the @Threshold gate: the newest 500
   * rows by id survive each persist (reference annotation documented in
@@ -430,7 +431,7 @@ object BatchQueries {
       if (tSkew > 2 * tUniform + 2000)
         org.slf4j.LoggerFactory.getLogger("graft.queries.BatchQueries").warn(
           s"q_join_skew_aqe: skewed ${tSkew}ms vs uniform ${tUniform}ms under load — timing noise, split verified structurally")
-      skewed.localCheckpoint(true)
+      skewed.pin
     } finally saved.foreach {
       case (k, Some(v)) => s.conf.set(k, v)
       case (k, None) => s.conf.unset(k)
@@ -468,7 +469,7 @@ object BatchQueries {
       .groupBy(col("violated"))
       .agg(count(lit(1)).as("n"), round(sum(col("o_totalprice")), 2).as("price_sum"))
       .orderBy(col("violated"))
-      .localCheckpoint(true)
+      .pin
   }
 
   /** Runtime Bloom-filter pushdown (Catalyst InjectRuntimeFilter —
@@ -505,7 +506,7 @@ object BatchQueries {
       val plan = j.queryExecution.executedPlan.toString
       require(plan.contains("might_contain"),
         s"q_join_runtime_filter: no runtime bloom filter on the fact scan:\n$plan")
-      j.localCheckpoint(true)
+      j.pin
     } finally saved.foreach {
       case (k, Some(v)) => s.conf.set(k, v)
       case (k, None) => s.conf.unset(k)
@@ -548,7 +549,7 @@ object BatchQueries {
       df.agg(count(lit(1)).as("n"), round(sum(col("o_totalprice")), 2).as("price_sum"))
         .select(lit(tag).as("side"), col("n"), col("price_sum"))
     val out = side("clone", cl.read).unionAll(side("source", src.read))
-      .orderBy(col("side")).localCheckpoint(true)
+      .orderBy(col("side")).pin
     require(cloneAfterSrcWrite == cl.read.count(),
       "q_clone: source upsert leaked into the clone")
     out

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables
 import graft.ops.{Classifier, Conversations, Dedup, IncrementalDedup, Mixing, Multimodal, Scrub, Similarity, TextAnalysis}
+import graft.core.Checkpoints.Pins
 
 /** Training-data pipeline operators driven through the correctness
   * gate on the `documents` and `embeddings` tables. Oracle-backed where
@@ -18,7 +19,7 @@ object PipelineQueries {
   private def embs(s: SparkSession, dir: String) = Tables.load(s, dir, "embeddings")
 
   /** Self-checking gates build corpus-sized temp indexes; their results
-    * must be pinned (localCheckpoint) before the body returns so the dir
+    * must be pinned before the body returns so the dir
     * can be reclaimed IMMEDIATELY — including when the gate's `require`
     * throws. Gates run on every driver/bench pass; leaking an index per
     * failed run would fill /tmp exactly when the gate starts failing
@@ -90,7 +91,7 @@ object PipelineQueries {
           s"q_dedup_minhash: $probe planted exact duplicates survived the dedup")
       }
       // pin the gate result before unpersisting the signature frame it reads
-      out.orderBy(col("doc_id")).localCheckpoint(true)
+      out.orderBy(col("doc_id")).pin
     } finally sig.unpersist()
   }
 
@@ -205,7 +206,7 @@ object PipelineQueries {
       val slice = d.filter(col("doc_id") % 4 === 0).select(col("doc_id"), col("text"))
       val planted = slice.orderBy(col("doc_id")).limit(200)
         .select((col("doc_id") + maxId + 1L).as("doc_id"), col("text"))
-        .localCheckpoint(true)
+        .pin
       val probePairs = Dedup.simhashPairs(slice.unionByName(planted),
         "doc_id", "text", maxHamming = 3)
       val missed = planted
@@ -295,7 +296,7 @@ object PipelineQueries {
     val corpus = base.unionByName(jpegCopies).unionByName(brightCopies)
       .unionByName(flippedCopies).unionByName(corrupt)
     val pairs = Dedup.imageDHashPairs(corpus, "doc_id", "payload", maxHamming = 6)
-      .localCheckpoint(true)
+      .pin
     val expected = sample
       .select(col("doc_id").as("id1"), (col("doc_id") + off).as("id2"),
         lit("jpeg_reencode").as("transform"))
@@ -303,12 +304,11 @@ object PipelineQueries {
         (col("doc_id") + 2L * off).as("id2"), lit("brightness_shift").as("transform")))
       .unionByName(sample.select(col("doc_id").as("id1"),
         (col("doc_id") + 3L * off).as("id2"), lit("low_margin").as("transform")))
-    // ONE assertion job instead of five (r14, the media-incremental
-    // r13 fusion pattern): `pairs` is checkpointed, so every invariant
-    // is a conditional count over a union of tiny tagged frames —
-    // recall (anti-join), low-margin distance identity + coverage,
-    // corrupt passthrough, and cross-seed precision land in a single
-    // aggregation row.
+    // ONE assertion job instead of five: `pairs` is pinned, so every
+    // invariant is a conditional count over a union of tiny tagged
+    // frames — recall (anti-join), low-margin distance identity +
+    // coverage, corrupt passthrough, and cross-seed precision land in a
+    // single aggregation row.
     val flipMeasured = pairs.join(
       sample.select(col("doc_id").as("id1"), (col("doc_id") + 3L * off).as("id2"),
         (lit(1) + pmod(col("doc_id"), lit(6L)).cast("int")).as("want_h")),
@@ -413,7 +413,7 @@ object PipelineQueries {
     val corpus = base.unionByName(gain).unionByName(dithered)
       .unionByName(resampled).unionByName(flipped).unionByName(corrupt)
     val pairs = Dedup.audioFpPairs(corpus, "doc_id", "payload", maxHamming = 6)
-      .localCheckpoint(true)
+      .pin
     val expected = Seq(("gain_half", 1L), ("dither", 2L), ("resample_2x", 3L),
         ("low_margin", 4L))
       .map { case (name, k) =>
@@ -424,7 +424,7 @@ object PipelineQueries {
     // recall, low-margin distance identity + coverage (nonzero
     // spread: this is NOT the Hamming-0 path), corrupt passthrough,
     // and cross-seed precision in a single aggregation row over the
-    // checkpointed pair set.
+    // pinned pair set.
     val flipMeasured = pairs.join(
       sample.select(col("doc_id").as("id1"), (col("doc_id") + 4L * off).as("id2"),
         (lit(1) + pmod(col("doc_id"), lit(6L)).cast("int")).as("want_h")),
@@ -543,7 +543,7 @@ object PipelineQueries {
     val corpus = base.unionByName(reencoded).unionByName(brightened)
       .unionByName(flipped).unionByName(corrupt)
     val pairs = Dedup.videoDHashPairs(corpus, "doc_id", "payload", maxHamming = 6)
-      .localCheckpoint(true)
+      .pin
     val expected = sample
       .select(col("doc_id").as("id1"), (col("doc_id") + off).as("id2"),
         lit("frame_reencode").as("transform"))
@@ -626,7 +626,7 @@ object PipelineQueries {
         rows.map { r => Row(newId(r.getLong(0)), pay(r.getLong(0))) }
       }
     val ids = docs(s, dir).select(col("doc_id")).orderBy(col("doc_id")).limit(240)
-      .repartition(s.sparkContext.defaultParallelism).localCheckpoint(true)
+      .repartition(s.sparkContext.defaultParallelism).pin
     // one action for both scalars (r15 job-fusion profile): this gate
     // is fixture-bounded, so its wall is the sequential action chain
     val om = ids.agg(max(col("doc_id")),
@@ -635,13 +635,13 @@ object PipelineQueries {
     val mid = om.getLong(1)
     val ids1 = ids.filter(col("doc_id") < mid)
     val ids2 = ids.filter(col("doc_id") >= mid)
-    val sample1 = ids1.orderBy(col("doc_id")).limit(60).localCheckpoint(true)
-    val sample2 = ids2.orderBy(col("doc_id")).limit(30).localCheckpoint(true)
+    val sample1 = ids1.orderBy(col("doc_id")).limit(60).pin
+    val sample2 = ids2.orderBy(col("doc_id")).limit(30).pin
 
     // pinned: the gate's many assertion actions (survivor counts, the
     // one-shot superset pass, probes) must not re-run the codec chain
     // per action — payloads render exactly once
-    val batch1 = rendered(ids1, identity, tile(_)).localCheckpoint(true)
+    val batch1 = rendered(ids1, identity, tile(_)).pin
     val batch2 = rendered(ids2, identity, tile(_))
       // cross-batch: JPEG re-encodes of images KEPT in batch 1 → drop
       .unionByName(rendered(sample1, _ + off,
@@ -657,7 +657,7 @@ object PipelineQueries {
           Row(5L * off, Array[Byte](1, 2, 3, 4)),
           Row(5L * off + 1L, "not an image".getBytes("UTF-8"))),
         paySchema))
-      .localCheckpoint(true)
+      .pin
 
     withTempIndexDir("graft_pidx_gate_") { idxDir =>
       // unbounded cap for the same reason as q_dedup_incremental: the
@@ -668,7 +668,7 @@ object PipelineQueries {
       val s2 = idx.dedupBatch(batch2, "doc_id", "payload")
       val survivors = s1.select(col("doc_id"), lit(1).as("batch"))
         .unionByName(s2.select(col("doc_id"), lit(2).as("batch")))
-        .localCheckpoint(true)
+        .pin
 
       // ONE assertion job instead of five (r13): this gate is
       // fixture-bounded (240 base images at every SF), so its wall
@@ -779,17 +779,17 @@ object PipelineQueries {
                 (x, i) -> x * (1.0D + 0.22D * sin(CAST(vec_id AS DOUBLE) * 37.0D + CAST(i AS DOUBLE))))
               AS ARRAY<FLOAT>)""").as("embedding"))
     val probeCorpus = slice.unionByName(plantedExact).unionByName(plantedNear)
-      .localCheckpoint(true)
+      .pin
     // occupancy 32 × 12 tables (r15): the same operating point as the
     // full pass below, so THIS probe's recall floor validates that
     // sizing at every SF the gate runs
     val probePairs = Dedup.embeddingNearDupPairs(probeCorpus, "vec_id", "embedding",
-      threshold = 0.9, planes = 0, tables = 12, occupancy = 32).localCheckpoint(true)
+      threshold = 0.9, planes = 0, tables = 12, occupancy = 32).pin
     // ONE assertion job instead of four (r14 fusion pattern): the
     // exact-dup anti-join and the perturbed-recall ratio (total +
     // found via a LEFT join hit flag — one reference to nearTruth, so
-    // it needs no checkpoint) land in a single aggregation row over
-    // the checkpointed probe pairs.
+    // it needs no pin) land in a single aggregation row over the
+    // pinned probe pairs.
     val nearTruth = base.select(col("vec_id").as("id1"), col("embedding").as("v1"))
       .join(plantedNear.select(col("vec_id").as("id2"), col("embedding").as("v2")),
         col("id2") === col("id1") + 2L * (maxId + 1L))
@@ -1154,7 +1154,7 @@ object PipelineQueries {
       val copies = survivors.orderBy(col("doc_id")).limit(100)
         .select((col("doc_id") + maxId + 1L).as("doc_id"), col("text"),
           col("doc_id").as("src_id"))
-        .localCheckpoint(true)
+        .pin
       val res = idx.probe(copies.select(col("doc_id"), col("text")),
         "doc_id", "text")
       // ONE fused action for three scalar checks (recall probe, copy
@@ -1507,7 +1507,7 @@ object PipelineQueries {
       val indexed = Similarity.ivfTopKIndexed(s, idx, "vec_id", "embedding",
           queries, "vec_id", "embedding", k = 3, cents, nprobe = 4)
         .select(col("query_id"), col("item_id"), col("rank"))
-        .localCheckpoint(true)
+        .pin
       val inMemory = Similarity.ivfTopK(e, "vec_id", "embedding", queries,
           "vec_id", "embedding", k = 3, cents, nprobe = 4)
         .select(col("query_id"), col("item_id"), col("rank"))
@@ -1872,7 +1872,7 @@ object PipelineQueries {
   def qSplitLeakfree(s: SparkSession, dir: String): DataFrame = {
     val d = docs(s, dir)
     val pairs = Dedup.ngramJaccardPairs(d, "doc_id", "text", k = 5, threshold = 0.5)
-      .localCheckpoint(true) // consumed by the split AND the leak check
+      .pin // consumed by the split AND the leak check
     val assigned = Dedup.leakFreeSplit(d, "doc_id", pairs, "id1", "id2")
     val cross = pairs
       .join(assigned.select(col("doc_id").as("id1"), col("split").as("s1")), Seq("id1"))
@@ -2004,7 +2004,7 @@ object PipelineQueries {
       val indexed = Similarity.ivfTopKIndexed(s, idx, "vec_id", "embedding",
           queries, "vec_id", "embedding", k = 3, cents, nprobe = 4)
         .select(col("query_id"), col("item_id"), col("rank"))
-        .localCheckpoint(true)
+        .pin
       val inMemory = Similarity.ivfTopK(e, "vec_id", "embedding", queries,
           "vec_id", "embedding", k = 3, cents, nprobe = 4)
         .select(col("query_id"), col("item_id"), col("rank"))
@@ -2137,8 +2137,6 @@ object PipelineQueries {
     }
 
   def qDedupKmeans(s: SparkSession, dir: String): DataFrame = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
     val e = embs(s, dir).select(col("vec_id"), col("embedding"))
     val maxId = e.agg(max(col("vec_id"))).head.getLong(0)
     val planted = e.orderBy(col("vec_id")).limit(100)
@@ -2148,73 +2146,54 @@ object PipelineQueries {
       expr("""CAST(transform(embedding,
                 (x, i) -> x * (1.0D + 0.22D * sin(CAST(vec_id AS DOUBLE) * 41.0D + CAST(i AS DOUBLE))))
               AS ARRAY<FLOAT>)""").as("embedding"))
-    val corpus = graft.core.Checkpoints.pin(
-      e.unionByName(planted).unionByName(plantedNear))
+    val corpus = e.unionByName(planted).unionByName(plantedNear).pin
     val n = corpus.count()
-    // The gate's independent requires run as CONCURRENT driver jobs
-    // (r18, guide §2.6): this query's wall was an 8-action sequential
-    // chain whose per-job floors dominate at bench scale. Dependencies
-    // honored: nearTruth needs only the source frames (launches before
-    // the k-means training), cellSizes needs cents, the two pair
-    // probes need `pairs`. Every frame counted is deterministic, so
-    // overlap changes scheduling only, never a result.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try {
-      // axis 3 truth set: independent of the codebook — overlaps the
-      // k-means training jobs
-      val nearTruthF = Future {
-        s.sparkContext.setJobDescription("q_dedup_kmeans: axis-3 truth set")
-        val nt = e.orderBy(col("vec_id")).limit(100)
-          .select(col("vec_id").as("id1"), col("embedding").as("v1"))
-          .join(plantedNear.select(col("vec_id").as("id2"), col("embedding").as("v2")),
-            col("id2") === col("id1") + 2L * (maxId + 1L))
-          .filter(Similarity.cosine(col("v1"), col("v2")) >= 0.92)
-          .select(col("id1"), col("id2")).localCheckpoint(false)
-        (nt, nt.count())
-      }
-      // axis 1: the codebook must split the space (trained ONCE, shared
-      // with the pairing pass via the -With seam)
-      val cents = Similarity.kmeansCentroids(corpus, "vec_id", "embedding",
-        k = graft.ops.Dedup.sizeCells(n))
-      persistOracleCodebook(s, "kmeans_codebook", cents)
-      val cellSizesF = Future {
-        s.sparkContext.setJobDescription("q_dedup_kmeans: axis-1 cell volume")
-        Similarity.ivfAssign(corpus, "vec_id", "embedding", cents)
-          .groupBy(col("cell")).agg(count(lit(1)).as("c"))
-          .agg(sum(col("c") * col("c"))).head.getLong(0)
-      }
-      val pairs = graft.core.Checkpoints.pin(
-        Dedup.clusteredSemanticPairsWith(corpus, "vec_id", "embedding",
-          cents, threshold = 0.4, maxCell = 5000, probes = 2))
-      // axis 2: planted exact copies cannot be missed
-      val plantedMissedF = Future {
-        s.sparkContext.setJobDescription("q_dedup_kmeans: axis-2 planted exacts")
-        e.orderBy(col("vec_id")).limit(100)
-          .select(col("vec_id").as("id1"), (col("vec_id") + maxId + 1L).as("id2"))
-          .join(pairs, Seq("id1", "id2"), "left_anti").count()
-      }
-      val foundF = nearTruthF.map { case (nt, _) =>
-        s.sparkContext.setJobDescription("q_dedup_kmeans: axis-3 recall")
-        nt.join(pairs, Seq("id1", "id2"), "left_semi").count()
-      }
-      val cellSizes = Await.result(cellSizesF, Duration.Inf)
-      require(cellSizes < n * n / 4,
-        s"q_dedup_kmeans: candidate volume $cellSizes !< ${n * n / 4} — clustering is degenerate")
-      val plantedMissed = Await.result(plantedMissedF, Duration.Inf)
-      require(plantedMissed == 0L,
-        s"q_dedup_kmeans: $plantedMissed planted exact duplicates were not paired")
-      // axis 3: recall floor on planted perturbed near-dups above 0.92
-      val nTruth = Await.result(nearTruthF, Duration.Inf)._2
-      require(nTruth > 20L,
-        s"q_dedup_kmeans probe degenerate: only $nTruth perturbed pairs above cos 0.92")
-      val found = Await.result(foundF, Duration.Inf)
-      require(found >= (nTruth * 0.8).toLong,
-        s"q_dedup_kmeans: recall collapse — $found/$nTruth planted near-dups recovered")
-      pairs.filter(col("id1") <= maxId && col("id2") <= maxId)
-        .select(col("id1"), col("id2"), round(col("cosine"), 4).as("cosine"))
-        .orderBy(col("id1"), col("id2"))
-    } finally pool.shutdown()
+    // The gate's independent probes run as overlapping driver jobs.
+    // `overlap` draws its thunks as earlier ones run, so the truth set
+    // (it needs only the source frames) counts while this thread trains
+    // the codebook and pins `pairs`; the cell volume needs the codebook
+    // (trained once, shared with the pairing pass via the -With seam),
+    // the last two probes need `pairs`. Every frame counted is
+    // deterministic, so overlap changes scheduling only, never a result.
+    val truth = e.orderBy(col("vec_id")).limit(100)
+      .select(col("vec_id").as("id1"), col("embedding").as("v1"))
+      .join(plantedNear.select(col("vec_id").as("id2"), col("embedding").as("v2")),
+        col("id2") === col("id1") + 2L * (maxId + 1L))
+      .filter(Similarity.cosine(col("v1"), col("v2")) >= 0.92)
+      .select(col("id1"), col("id2")).pinLazily
+    def probe(what: String)(count: => Long): () => Long =
+      () => { s.sparkContext.setJobDescription(s"q_dedup_kmeans: $what"); count }
+    var pairs: DataFrame = null
+    val Seq(nTruth, cellSizes, plantedMissed, found) = graft.core.Jobs.overlap(3)(
+      Iterator(probe("axis-3 truth set")(truth.count())) ++ {
+        val cents = Similarity.kmeansCentroids(corpus, "vec_id", "embedding",
+          k = graft.ops.Dedup.sizeCells(n))
+        persistOracleCodebook(s, "kmeans_codebook", cents)
+        pairs = Dedup.clusteredSemanticPairsWith(corpus, "vec_id", "embedding",
+          cents, threshold = 0.4, maxCell = 5000, probes = 2).pin
+        Iterator(
+          // axis 1: the codebook must split the space
+          probe("axis-1 cell volume")(Similarity.ivfAssign(corpus, "vec_id", "embedding", cents)
+            .groupBy(col("cell")).agg(count(lit(1)).as("c"))
+            .agg(sum(col("c") * col("c"))).head.getLong(0)),
+          // axis 2: planted exact copies cannot be missed
+          probe("axis-2 planted exacts")(e.orderBy(col("vec_id")).limit(100)
+            .select(col("vec_id").as("id1"), (col("vec_id") + maxId + 1L).as("id2"))
+            .join(pairs, Seq("id1", "id2"), "left_anti").count()),
+          probe("axis-3 recall")(truth.join(pairs, Seq("id1", "id2"), "left_semi").count()))
+      })
+    require(cellSizes < n * n / 4,
+      s"q_dedup_kmeans: candidate volume $cellSizes !< ${n * n / 4} — clustering is degenerate")
+    require(plantedMissed == 0L,
+      s"q_dedup_kmeans: $plantedMissed planted exact duplicates were not paired")
+    // axis 3: recall floor on planted perturbed near-dups above 0.92
+    require(nTruth > 20L,
+      s"q_dedup_kmeans probe degenerate: only $nTruth perturbed pairs above cos 0.92")
+    require(found >= (nTruth * 0.8).toLong,
+      s"q_dedup_kmeans: recall collapse — $found/$nTruth planted near-dups recovered")
+    pairs.filter(col("id1") <= maxId && col("id2") <= maxId)
+      .select(col("id1"), col("id2"), round(col("cosine"), 4).as("cosine"))
+      .orderBy(col("id1"), col("id2"))
   }
 
   /** Bigram language-model scoring (ops/LanguageModel): the corpus
@@ -2338,7 +2317,7 @@ object PipelineQueries {
       graft.ops.TextSearch.searchIndex(s, idx, d, "doc_id", "text", "scan the")
         .select(col("doc_id"), col("n_chars"))
         .orderBy(col("doc_id"))
-        .localCheckpoint(true) // pin before the finally reclaims the index
+        .pin // pin before the finally reclaims the index
     }
 
   /** Stratified sampling (ops/Scrub): four pinned per-source rates +
@@ -2428,14 +2407,14 @@ object PipelineQueries {
   def qPipelineAssemble(s: SparkSession, dir: String): DataFrame = {
     val d = docs(s, dir)
     val g = TextAnalysis.gopherRules(col("text"))
-    // pinned (r17, guide §2.4): the budget aggregate, selectToBudget's
-    // four walks (min/max probe, local window, bucket totals, final
-    // join) and concatChunks' prefix-sum passes all consume this frame
-    // — unpinned, each re-ran the corpus scan + the Gopher rule kernel.
-    val kept = graft.core.Checkpoints.pin(
-      d.filter(g.getField("r_word_count") &&
+    // pinned: the budget aggregate, selectToBudget's four walks
+    // (min/max probe, local window, bucket totals, final join) and
+    // concatChunks' prefix-sum passes all consume this frame —
+    // unpinned, each re-ran the corpus scan + the Gopher rule kernel.
+    val kept = d.filter(g.getField("r_word_count") &&
         g.getField("r_mean_word_len") && g.getField("r_alpha_words"))
-        .select(col("doc_id"), col("n_chars"), col("text")))
+      .select(col("doc_id"), col("n_chars"), col("text"))
+      .pin
     val budget = kept.agg(coalesce(sum(col("n_chars")), lit(0L)).cast("long"))
       .head().getLong(0) / 2
     val sel = Mixing.selectToBudget(kept, "doc_id", "n_chars", "n_chars", budget)
@@ -2443,7 +2422,7 @@ object PipelineQueries {
       // sum); pin the selection so those walks do not re-run
       // selectToBudget's window + join chain
       .select(col("doc_id"), col("text"))
-    val selP = graft.core.Checkpoints.pin(sel)
+    val selP = sel.pin
     TextAnalysis.concatChunks(selP, "doc_id", "text", chunkLen = 128)
       .orderBy(col("chunk_id"), col("doc_id"))
   }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.core.Tables
+import graft.core.Checkpoints.Pins
 
 /** Source-surface gates beyond plain parquet scans: schema evolution
   * across a table's file history and JSONL ingest with quarantined
@@ -31,7 +32,7 @@ object SourceQueries {
         .select(col("c_custkey"), col("c_acctbal"),
           col("c_mktsegment").as("seg"))
         .orderBy(col("c_custkey"))
-        .localCheckpoint(true) // pin before the finally reclaims files
+        .pin // pin before the finally reclaims files
     }
   }
 
@@ -61,7 +62,7 @@ object SourceQueries {
         count(when(col("_corrupt_record").isNull, 1)).as("n_parsed"),
         count(col("_corrupt_record")).as("n_corrupt"),
         sum(when(col("_corrupt_record").isNull, col("n_chars"))).as("chars_total"))
-        .localCheckpoint(true)
+        .pin
       parsed.unpersist()
       out
     }
@@ -110,7 +111,7 @@ object SourceQueries {
         .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("val_sum"),
           countDistinct(col("user_id")).as("n_users"))
         .orderBy(col("event_type"))
-        .localCheckpoint(true)
+        .pin
     }
   }
 
@@ -146,7 +147,7 @@ object SourceQueries {
       val plan = j.queryExecution.executedPlan.toString
       require(plan.contains("dynamicpruning"),
         s"q_dpp_join: no dynamicpruning expression in the fact's PartitionFilters:\n$plan")
-      j.localCheckpoint(true)
+      j.pin
     }
   }
 
@@ -171,7 +172,7 @@ object SourceQueries {
           sum(col("n_chars")).as("chars_total"),
           countDistinct(col("lang")).as("n_langs"))
         .orderBy(col("source"))
-        .localCheckpoint(true)
+        .pin
     }
   }
 
@@ -190,7 +191,7 @@ object SourceQueries {
         .agg(count(lit(1)).as("n_rows"),
           round(sum(col("l_quantity")), 2).as("sum_qty"))
         .orderBy(col("l_returnflag"), col("l_linestatus"))
-        .localCheckpoint(true)
+        .pin
     }
   }
 }

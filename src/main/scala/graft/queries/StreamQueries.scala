@@ -7,6 +7,7 @@ import java.util.concurrent.atomic.AtomicLong
 import graft.core.{GraftSession, Tables}
 import graft.streaming.StreamOps
 import graft.cep.EventProcessor
+import graft.core.Checkpoints.Pins
 
 /** Structured-Streaming and CEP operators driven end-to-end through the
   * correctness gate: each query runs a real streaming query (file
@@ -96,7 +97,7 @@ object StreamQueries {
       .agg(count(lit(1)).as("n"), round(sum(col("v")), 2).as("val_sum"),
         min(col("id")).as("id_min"), max(col("id")).as("id_max"))
       .orderBy(col("t"))
-      .localCheckpoint(true)
+      .pin
   }
 
   /** S7 stream-resume contract as a GATE (was unit-only since r4):
@@ -141,7 +142,7 @@ object StreamQueries {
       s"q_stream_resume: first drain must be a strict prefix, got $nFirst/$total")
     store.append(ev.filter(col("event_id") > mid)) // while NOTHING runs
     drain()
-    val union = s.read.parquet(out).localCheckpoint(true)
+    val union = s.read.parquet(out).pin
     val n = union.count()
     require(n == total,
       s"q_stream_resume: drained $n != table $total — " +
@@ -153,7 +154,7 @@ object StreamQueries {
       .agg(count(lit(1)).as("n"), round(sum(col("v")), 2).as("val_sum"),
         min(col("id")).as("id_min"), max(col("id")).as("id_max"))
       .orderBy(col("t"))
-      .localCheckpoint(true)
+      .pin
   }
 
   /** Exactly-once streaming ingestion (StreamOps.sinkToStore →
@@ -529,7 +530,7 @@ object StreamQueries {
           "the DuckDB oracle's exclusion replay no longer matches the " +
           "engine's split/exemplar resolution at this fixture size")
       // pin before the finally reclaims the on-disk index/output
-      fromStream.orderBy(col("doc_id")).localCheckpoint(true)
+      fromStream.orderBy(col("doc_id")).pin
     }
   }
 
@@ -574,7 +575,7 @@ object StreamQueries {
       val drained = StreamOps.runToMemory(s, flagged,
         uniq("stream_anomaly"), OutputMode.Append())
         .orderBy(col("key"), col("seq1"), col("seq2"))
-        .localCheckpoint(true)
+        .pin
       if (ev.count() <= 2000000L) {
         val all = ev.collect().map(x =>
           (x.getLong(0).toString, x.getLong(1), x.getLong(2), x.getDouble(3))).toSeq
@@ -634,7 +635,7 @@ object StreamQueries {
         "event_id", windowSize = hourMicros, maxPerWindow = 5L)
       val drained = StreamOps.runToMemory(s, accepted,
         uniq("stream_throttle"), OutputMode.Append())
-        .localCheckpoint(true)
+        .pin
       // Sequential-replay self-check, SCALE-GUARDED (r14; r15 moved
       // the guard off row-count thresholds onto ScaleGuard — which
       // also drops the count() action the old guard spent): collecting

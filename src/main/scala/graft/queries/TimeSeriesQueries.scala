@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables
 import graft.ops.{Bpe, TimeSeries}
+import graft.core.Checkpoints.Pins
 
 /** Gate queries for the time-series / engagement-analytics operators
   * (ops/TimeSeries) and the BPE tokenizer trainer (ops/Bpe). The
@@ -104,19 +105,10 @@ object TimeSeriesQueries {
     * dict fits comfortably on the driver.) */
   def qBpe(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    // pin the dict ONCE (r17): the dict is vocabulary-scale but its
-    // lineage is the full corpus scan + shuffle, and three consumers
-    // read it (learnMerges, dictSize, the replay collect). Adjudicated
-    // honestly: an isolated 10×-corpus A/B measured ~no wall change
-    // (6.2→6.3 s — learnMerges already checkpointed its own copy and
-    // the remaining consumers ride warm shuffle files), so the gate's
-    // 10× step is the one legitimate wordFreq shuffle over 10× text,
-    // and the in-suite 8–10 s readings are the documented
-    // sequential-chain load sensitivity. The pin stays as lineage
-    // hygiene: consumer count no longer multiplies corpus scans on a
-    // cold cache.
-    val words = graft.core.Checkpoints.pin(Bpe.wordFreq(t(s, dir, "documents"), "text"))
-    try {
+    // the dict is pinned once: vocabulary-scale, but its lineage is
+    // the full corpus scan + shuffle, and three consumers read it
+    // (learnMerges, dictSize, the replay collect)
+    Bpe.wordFreq(t(s, dir, "documents"), "text").withPin { words =>
       val merges = Bpe.learnMerges(words, numMerges = 30)
       mergesCache.put(corpusKey(dir), merges)
       require(merges.nonEmpty, "q_bpe: no merges learned")
@@ -133,7 +125,7 @@ object TimeSeriesQueries {
         .select(col("rank").cast("long").as("rank"), col("left"), col("right"),
           concat(col("left"), col("right")).as("merged"), col("freq"))
         .orderBy(col("rank"))
-    } finally { words.unpersist(); () }
+    }
   }
 
   /** First-touch funnel over the event stream
@@ -159,9 +151,8 @@ object TimeSeriesQueries {
     * piece anywhere in the dict fails the gate. */
   def qUnigram(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val words = Bpe.wordFreq(t(s, dir, "documents"), "text")
-      .select(col("word"), col("wcount")).localCheckpoint(true)
-    try {
+    Bpe.wordFreq(t(s, dir, "documents"), "text")
+      .select(col("word"), col("wcount")).withPin { words =>
       val vocab = graft.ops.Unigram.learn(words,
         vocabSize = 512, iters = 3, seedSize = 2048, maxPieceLen = 6)
       require(vocab.nonEmpty, "q_unigram: empty vocabulary")
@@ -185,7 +176,7 @@ object TimeSeriesQueries {
       }
       unigramCache.put(corpusKey(dir), vocab)
       vocab.toDF().orderBy(col("piece"))
-    } finally words.unpersist()
+    }
   }
 
   /** Corpus-scale unigram application (ops/Unigram.encode), the
@@ -211,7 +202,7 @@ object TimeSeriesQueries {
         sum(col("n_uni_tokens")).as("tokens_total"),
         sum(length(squeezed)).as("chars_squeezed"),
         sum(when(rejoined =!= squeezed, 1L).otherwise(0L)).as("broken"))
-      .localCheckpoint(true)
+      .pin
     val broken = per.agg(coalesce(sum(col("broken")), lit(0L))).head.getLong(0)
     require(broken == 0L,
       s"q_unigram_encode: $broken documents do not rejoin to their squeezed text")
@@ -246,7 +237,7 @@ object TimeSeriesQueries {
         sum(col("n_bpe_tokens")).as("tokens_total"),
         sum(length(normalized)).as("chars_norm"),
         sum(when(rejoined =!= normalized, 1L).otherwise(0L)).as("broken"))
-      .localCheckpoint(true) // #sources rows
+      .pin // #sources rows
     val broken = per.agg(coalesce(sum(col("broken")), lit(0L))).head.getLong(0)
     require(broken == 0L,
       s"q_bpe_encode: $broken documents do not rejoin to their normalized text")

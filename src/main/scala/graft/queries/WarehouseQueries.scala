@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables
 import graft.ops.{Graphs, Ivm, Profile, Scd}
+import graft.core.Checkpoints.Pins
 
 /** Gate queries for the warehouse-maintenance / curation-signal ops:
   * single-pass column profiling, SCD2 merge, and fixed-point PageRank.
@@ -425,10 +426,10 @@ object WarehouseQueries {
     val store = new graft.core.TableStore(s, tmp, "event_id")
     store.append(ev.filter(col("event_type") === "click"))
     var view = Ivm.init(store.read, Seq("event_type"), Seq("value"))
-      // view state is the loop-carried frame; LAZY checkpoint (r18):
-      // the lineage barrier is what the loop needs — materialization
+      // view state is the loop-carried frame, pinned lazily: a plan
+      // barrier is what the loop needs — materialization
       // rides the divergence count instead of one eager job per leg
-      .localCheckpoint(false)
+      .pinLazily
     store.append(ev.filter(col("event_type") === "purchase"))
     store.delete(col("value") < 10.0)
     val Seq(v1, v2, v3) = store.versions.sorted.takeRight(3)
@@ -438,7 +439,7 @@ object WarehouseQueries {
           ad.select(col("event_type"), col("value")),
           rm.select(col("event_type"), col("value")),
           Seq("event_type"), Seq("value"))
-        .localCheckpoint(false) // cut lineage: next leg reads state, not history
+        .pinLazily // cut the plan: next leg reads state, not history
     }
     def rounded(v: DataFrame) = v.select(col("event_type"), col("view_n"),
       round(col("view_sum_value"), 2).as("sv"))

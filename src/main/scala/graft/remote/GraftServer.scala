@@ -55,8 +55,6 @@ object GraftServer {
   final class Handle private[GraftServer] (val port: Int,
                                            server: org.apache.hive.service.server.HiveServer2,
                                            prior: String) {
-    /** host:port JDBC URL clients connect to. */
-    def jdbcUrl: String = s"jdbc:hive2://localhost:$port/default"
     def stop(): Unit = {
       server.stop()
       GraftDialect.detach()

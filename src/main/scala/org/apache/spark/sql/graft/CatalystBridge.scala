@@ -1,6 +1,6 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 
@@ -24,6 +24,24 @@ object CatalystBridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       s.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
       df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].queryExecution.logical)
+
+  /** `df` as a frame over its executed rows, the way
+    * `Dataset.localCheckpoint` builds one, with `mark` choosing how the
+    * row RDD is stored. `eager` materializes every partition in one
+    * job. The leaf keeps `df`'s output partitioning and ordering. */
+  def pinned(df: DataFrame, eager: Boolean)(
+      mark: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow] => Unit): DataFrame = {
+    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+    val qe = ds.queryExecution
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe, Some("pin")) {
+      qe.executedPlan.resetMetrics()
+      val rdd = qe.executedPlan.execute().map(_.copy())
+      mark(rdd)
+      if (eager && rdd.partitions.nonEmpty) rdd.count()
+      org.apache.spark.sql.classic.Dataset.ofRows(ds.sparkSession,
+        org.apache.spark.sql.execution.LogicalRDD.fromDataset(rdd, ds, ds.isStreaming))
+    }
+  }
 
   /** An isolated copy of the session carrying ALL its runtime conf
     * (unlike `newSession()`, which resets to initial options — dropping

@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.ops.Bpe
+import graft.core.Checkpoints.Pins
 
 /** ops/Bpe: hand-checkable merges on the classic toy corpus, exact
   * distributed-vs-reference identity on real text, and encode()
@@ -77,7 +78,7 @@ class BpeSpec extends AnyFunSuite {
     val docs = (1 to 3000).map { _ =>
       (1 to 10).map(_ => vocab(rnd.nextInt(1 + rnd.nextInt(vocab.size)))).mkString(" ")
     }.toDF("text")
-    val words = graft.core.Checkpoints.pin(Bpe.wordFreq(docs, "text"))
+    val words = Bpe.wordFreq(docs, "text").pin
     val dict = words.select(col("word"), col("wcount"))
       .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
     val pairs = dict.flatMap { case (w, _) =>
@@ -97,8 +98,7 @@ class BpeSpec extends AnyFunSuite {
     // one 12-letter word: every top pair overlaps the next, so each
     // scan accepts exactly one merge — 10 merges are 10 scans, and the
     // dict is materialized twice (the pin, and once after 8 merges)
-    val words = graft.core.Checkpoints.pin(
-      Bpe.wordFreq(Seq.fill(5)("abcdefghijkl").toDF("text"), "text"))
+    val words = Bpe.wordFreq(Seq.fill(5)("abcdefghijkl").toDF("text"), "text").pin
     val (merges, jobs) = SparkJobs.count(spark.sparkContext)(
       Bpe.learnMerges(words, numMerges = 10))
     assert(merges == Bpe.referenceLearn(Seq("abcdefghijkl" -> 5L), numMerges = 10))

@@ -6,7 +6,8 @@ import graft.ops.TimeSeries
 
 /** ops/TimeSeries: resample grid shape + forward-fill semantics,
   * sweep concurrency vs a brute-force point count, retention matrix
-  * edges, and the one-pass entropy kernel vs a relational rebuild. */
+  * edges, funnel step counts, and the one-pass entropy kernel vs a
+  * relational rebuild. */
 class TimeSeriesSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
@@ -112,6 +113,22 @@ class TimeSeriesSpec extends AnyFunSuite {
     assert(r == List(
       ("2024-01-01 00:00:00", 0L, 1L), ("2024-01-01 00:00:00", 2L, 1L),
       ("2024-01-02 00:00:00", 0L, 1L)), s"got $r")
+  }
+
+  test("funnel counts entities step by step and releases every frontier it pins") {
+    val events = Seq(
+      (1L, 1L, "signup"), (1L, 2L, "view"), (1L, 3L, "buy"),
+      (2L, 1L, "signup"), (2L, 5L, "view"),
+      (3L, 2L, "signup"), (3L, 2L, "view"), (3L, 4L, "view"), (3L, 6L, "buy"),
+      (4L, 9L, "view")).toDF("user", "ts", "type")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val r = TimeSeries.funnel(events, "user", "ts", "type", Seq("signup", "view", "buy"))
+      .as[(Int, String, Long, Long)].collect().toList
+    // user 3's view at ts 2 does not follow its signup at ts 2; user 4 never signed up
+    assert(r == List((1, "signup", 3L, 1000000L), (2, "view", 3L, 1000000L),
+      (3, "buy", 2L, 666666L)), s"got $r")
+    assert(sc.getPersistentRDDs.keySet.diff(before).isEmpty, "funnel left a frontier pinned")
   }
 
   test("entropy kernel agrees with a relational rebuild of the distribution") {
